@@ -275,7 +275,12 @@ object Backfill {
 
     require(skewDetection == "lazy" || skewDetection == "upfront",
       s"skewDetection must be lazy|upfront, got '$skewDetection'")
-    val committed = Checkpoint.committedSlices(spark, outDir)
+    // the committed watermark rows, read once on the driver: the resume
+    // set, the slice-width guard, the empty-slice seeds and the strategy
+    // guard all come from this one list
+    val wms = phase("run", "watermark read")(
+      Checkpoint.watermarks(spark, outDir).filter(_.committed))
+    val committed = wms.map(_.sliceId).toSet
     val silverPath = s"$outDir/silver"
     val goldPath = s"$outDir/gold"
     val silverCols = TranscriptSchema.silver.fieldNames.toSeq
@@ -302,22 +307,14 @@ object Backfill {
     // Resuming/extending with a different slice width would silently
     // mis-prune the lookback reads (slice dirs are time ranges of the
     // width they were WRITTEN with) — fail loudly instead.
-    val wmRows = Checkpoint.readWatermarks(spark, outDir)
-      .filter(col("status") === "committed")
-      .select(col("slice_id"), unix_timestamp(col("slice_start")).as("s"),
-        unix_timestamp(col("slice_end")).as("e"), col("row_count"))
-      .collect()
-    wmRows
-      .find(r => r.getLong(2) - r.getLong(1) != sliceSecs)
-      .foreach { r =>
-        throw new IllegalArgumentException(
-          s"committed slice width ${r.getLong(2) - r.getLong(1)}s does not match " +
-            s"sliceSecs=${sliceSecs}s; slice-granular pruning assumes uniform widths — " +
-            "resume this table with its original slice width")
-      }
+    phase("run", "width guard")(wms.find(w => w.endSec - w.startSec != sliceSecs).foreach { w =>
+      throw new IllegalArgumentException(
+        s"committed slice width ${w.endSec - w.startSec}s does not match " +
+          s"sliceSecs=${sliceSecs}s; slice-granular pruning assumes uniform widths — " +
+          "resume this table with its original slice width")
+    })
     // committed row counts feed the empty-slice probe heuristic below
-    val committedRowCounts: Map[String, Long] =
-      wmRows.map(r => r.getString(0) -> r.getLong(3)).toMap
+    val committedRowCounts: Map[String, Long] = wms.map(w => w.sliceId -> w.rowCount).toMap
 
     // Strategy guard (same loud-failure class as the slice-width
     // guard): resuming a table whose committed slices wrote state-only
@@ -336,9 +333,8 @@ object Backfill {
     // guard only bites when committed DATA exists (ADVICE r5: a false
     // property left by a failed/no-op rescan invocation must not
     // reject a tails resume of an empty table)
-    val committedNonEmptySecs: Set[Long] =
-      wmRows.filter(_.getLong(3) > 0L).map(_.getLong(1)).toSet
-    if (committedNonEmptySecs.nonEmpty && useTails) {
+    val committedNonEmptySecs: Set[Long] = wms.filter(_.rowCount > 0L).map(_.startSec).toSet
+    if (committedNonEmptySecs.nonEmpty && useTails) phase("run", "strategy guard") {
       val tailsAvailable = persistedTails.getOrElse(
         Checkpoint.frameTailsEverWritten(spark, outDir, committedNonEmptySecs))
       if (!tailsAvailable)
@@ -353,8 +349,9 @@ object Backfill {
     // stages read the persisted text_len of committed gold; a table
     // written before that column existed would silently zero the
     // char-length features of lookback context. Fail loudly instead.
-    if (committed.nonEmpty && Checkpoint.pathExists(spark, goldPath) &&
-        !spark.read.parquet(goldPath).columns.contains("text_len"))
+    // One driver-side footer read of the first gold file.
+    if (committed.nonEmpty && phase("run", "text_len guard")(
+        Checkpoint.firstFileColumns(spark, goldPath).exists(!_.contains("text_len"))))
       throw new IllegalArgumentException(
         "committed gold table lacks the text_len column (written by an older engine " +
           "version); re-run the backfill from scratch, or backfill text_len = " +
@@ -423,11 +420,13 @@ object Backfill {
           bronze("ts") >= tsLit(bronze, start) && bronze("ts") < tsLit(bronze, end)).isEmpty)) {
         // commit the zero-row watermark directly; remove any stale data
         // a prior invalidated run of this slice may have left behind
-        deleteDir(spark, s"$goldPath/slice_id=$id")
-        if (materializeSilver) deleteDir(spark, s"$silverPath/slice_id=$id")
-        Checkpoint.clearConvStateDelta(spark, outDir, start)
-        Checkpoint.commitSlice(spark, outDir, id,
-          new Timestamp(start * 1000L), new Timestamp(end * 1000L), None, 0L)
+        phase(id, "commit") {
+          deleteDir(spark, s"$goldPath/slice_id=$id")
+          if (materializeSilver) deleteDir(spark, s"$silverPath/slice_id=$id")
+          Checkpoint.clearConvStateDelta(spark, outDir, start)
+          Checkpoint.commitSlice(spark, outDir, id,
+            new Timestamp(start * 1000L), new Timestamp(end * 1000L), None, 0L)
+        }
         SliceReport(id, 0L, (System.nanoTime() - t0) / 1000000L, skipped = false)
       } else {
         // --- the current slice, half-open [start, end), validated ---
@@ -622,14 +621,8 @@ object Backfill {
           if (!observeLineage) { writeSlice(df, goldPath); None }
           else {
             attempt += 1
-            val name = s"lineage_${id}_a$attempt"
-            val exprs = Checkpoint.lineageObserveExprs(df, lineageDays)
-            val waiter = new MetricsWaiter(name)
-            spark.listenerManager.register(waiter)
-            try {
-              writeSlice(df.observe(name, exprs.head, exprs.tail: _*), goldPath)
-              waiter.await()
-            } finally spark.listenerManager.unregister(waiter)
+            writeObserved(spark, s"lineage_${id}_a$attempt", df,
+              Checkpoint.lineageObserveExprs(df, lineageDays))(writeSlice(_, goldPath))
           }
 
         // The fused sweep asserts two preconditions and the slice
@@ -717,12 +710,12 @@ object Backfill {
         // --- lineage: from the observed write metrics (no extra job),
         // or the legacy aggregate over the written files ---
         val wallMs = (System.nanoTime() - t0) / 1000000L
-        val (rows, hw) = metrics match {
+        val (rows, hw) = phase(id, "lineage")(metrics match {
           case Some(m) =>
             Checkpoint.writeLineageFromMetrics(spark, outDir, id, lineageDays, m, wallMs)
           case None =>
-            phase(id, "lineage")(Checkpoint.appendLineage(outDir, goldWritten, id, wallMs))
-        }
+            Checkpoint.appendLineage(outDir, goldWritten, id, wallMs)
+        })
         if (rows > 0L) {
           lastGoldSliceBytes = dirBytes(spark, s"$goldPath/slice_id=$id")
           lastGoldSliceRows = Some(rows)
@@ -742,11 +735,11 @@ object Backfill {
         }
 
         // --- the committing watermark row (atomic last) ---
-        Checkpoint.commitSlice(spark, outDir, id,
-          new Timestamp(start * 1000L), new Timestamp(end * 1000L), hw, rows)
+        phase(id, "commit")(Checkpoint.commitSlice(spark, outDir, id,
+          new Timestamp(start * 1000L), new Timestamp(end * 1000L), hw, rows))
         val periodic = compactStateEvery > 0 && (i + 1) % compactStateEvery == 0
-        if (periodic ||
-            Checkpoint.uncompactedDeltaDirs(spark, outDir, start + 1) > MaxStateChain)
+        if (periodic || phase(id, "compaction check")(
+            Checkpoint.uncompactedDeltaDirs(spark, outDir, start + 1) > MaxStateChain))
           phase(id, "state compaction")(Checkpoint.compactConvState(spark, outDir, start))
         prevSliceEmpty = rows == 0L
         SliceReport(id, rows, wallMs, skipped = false)
@@ -759,8 +752,8 @@ object Backfill {
     // a fresh table's first committing run establishes it.
     val wroteNewData = reports.exists(r => !r.skipped && r.rows > 0L)
     if (wroteNewData || (committed.isEmpty && reports.exists(!_.skipped)))
-      Checkpoint.writeContextTailsProp(spark, outDir,
-        useTails && (committedNonEmptySecs.isEmpty || persistedTails.getOrElse(true)))
+      phase("run", "table props")(Checkpoint.writeContextTailsProp(spark, outDir,
+        useTails && (committedNonEmptySecs.isEmpty || persistedTails.getOrElse(true))))
     reports
   }
 
@@ -779,9 +772,25 @@ object Backfill {
     spark.read.parquet(s"$outDir/gold")
       .select(TranscriptSchema.silver.fieldNames.map(col).toSeq :+ col("slice_id"): _*)
 
-  /** Waits for the observed lineage metrics of a write to land on the
-    * listener bus. A fresh instance per write attempt (the ts-inversion
-    * retry re-observes under the same name).
+  /** Runs `write` over `df` with `exprs` observed under `name` —
+    * aggregates computed by the write job itself, no extra job or scan.
+    * Returns the observed row, or None if it did not arrive (see
+    * [[MetricsWaiter.await]]).
+    */
+  private def writeObserved(
+      spark: SparkSession, name: String, df: DataFrame, exprs: Seq[Column])(
+      write: DataFrame => Unit): Option[org.apache.spark.sql.Row] = {
+    val waiter = new MetricsWaiter(name)
+    spark.listenerManager.register(waiter)
+    try {
+      write(df.observe(name, exprs.head, exprs.tail: _*))
+      waiter.await()
+    } finally spark.listenerManager.unregister(waiter)
+  }
+
+  /** Waits for the observed metrics of a write to land on the listener
+    * bus. A fresh instance per write (the gold write's ts-inversion
+    * retry re-observes under a fresh name).
     */
   private final class MetricsWaiter(name: String)
       extends org.apache.spark.sql.util.QueryExecutionListener {
@@ -798,14 +807,14 @@ object Backfill {
     /** Blocks until the metrics arrive (bounded; the write action has
       * already succeeded when this is called, so the only wait is the
       * async listener bus). Returns None on timeout — the caller falls
-      * back to the legacy lineage aggregate over the written files
-      * rather than failing a successfully-written slice.
+      * back to an aggregate over the written files rather than failing
+      * a successful write.
       */
     def await(): Option[org.apache.spark.sql.Row] = {
       if (!latch.await(120, java.util.concurrent.TimeUnit.SECONDS)) {
         System.err.println(
           s"[backfill] observed metrics '$name' did not arrive within 120s; " +
-            "falling back to the lineage aggregate over the written files")
+            "falling back to an aggregate over the written files")
         None
       } else row
     }
@@ -870,12 +879,13 @@ object Backfill {
     val late = inCommitted.join(silverKeys, Seq("conv_id", "turn_idx"), "left_anti")
       .select(TranscriptSchema.silver.fieldNames.filterNot(_ == "dt").map(col) :+
         col("late_slice_start"): _*)
-    val n = late.count()
-    val p = new org.apache.hadoop.fs.Path(latePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (n > 0)
-      late.write.mode(SaveMode.Overwrite).partitionBy("late_slice_start").parquet(latePath)
-    else if (fs.exists(p)) { fs.delete(p, true); () } // stale queue fully drained
+    // one pass: the queue write observes its own row count
+    val n = writeObserved(spark, s"late_queue_${System.nanoTime()}", late,
+        Seq(count(lit(1)).as("n")))(
+        _.write.mode(SaveMode.Overwrite).partitionBy("late_slice_start").parquet(latePath))
+      .map(_.getLong(0))
+      .getOrElse(spark.read.schema(late.schema).parquet(latePath).count())
+    if (n == 0L) deleteDir(spark, latePath) // stale queue fully drained
     n
   }
 
@@ -906,20 +916,22 @@ object Backfill {
       rangeLayoutWrites = rangeLayoutWrites, compactStateEvery = compactStateEvery,
       segmentSecs = segmentSecs, contextStrategy = contextStrategy,
       materializeSilver = materializeSilver)
-    if (!Checkpoint.pathExists(spark, latePath)) return runAll()
-    // the partition-dir value reads back as the narrowest fitting
-    // integral type — normalize to long
-    val minRow = spark.read.parquet(latePath)
-      .agg(min(col("late_slice_start").cast("long"))).head()
-    if (minRow.isNullAt(0)) return runAll()
-    val fromSec = minRow.getLong(0)
+    // the earliest queued slice, from the queue's partition dir names
+    // (driver-side listing, no Spark job)
+    val p = new org.apache.hadoop.fs.Path(latePath)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val lateSecs =
+      if (!fs.exists(p)) Nil
+      else fs.listStatus(p).toSeq.map(_.getPath.getName)
+        .filter(_.startsWith("late_slice_start="))
+        .flatMap(_.stripPrefix("late_slice_start=").toLongOption)
+    if (lateSecs.isEmpty) return runAll()
+    val fromSec = lateSecs.min
     println(s"[backfill] reprocessing late data: invalidating slices from s$fromSec")
     Checkpoint.invalidateFrom(spark, outDir, fromSec)
     val reports = runAll()
     // queue is consumed only after the re-run committed
-    val p = new org.apache.hadoop.fs.Path(latePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) { fs.delete(p, true); () }
+    deleteDir(spark, latePath)
     reports
   }
 

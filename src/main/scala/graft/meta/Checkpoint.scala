@@ -1,23 +1,33 @@
 package graft.meta
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** Self-managed checkpoint/lineage metadata tables (parquet under
-  * `<table>/_meta/`), emulating Iceberg snapshot/metadata tables (no
-  * Iceberg jar ships in /opt/spark/jars; the mapping is
-  * `snapshots`≈watermarks, `files`≈lineage so a real deployment can
-  * swap Iceberg in).
+/** Self-managed checkpoint/lineage metadata under `<table>/_meta/`,
+  * emulating Iceberg snapshot/metadata tables (no Iceberg jar ships in
+  * /opt/spark/jars; the mapping is `snapshots`≈watermarks,
+  * `files`≈lineage so a real deployment can swap Iceberg in).
+  *
+  * Watermarks, lineage and table props are small JSON files written on
+  * the driver, one watermark and one lineage file per slice; the
+  * carried conversation state (per-slice deltas and compaction
+  * snapshots) is parquet. Every control-plane read a resume makes —
+  * watermarks, snapshot and delta dir listings, the gold table-version
+  * footer check — happens on the driver with no Spark job, so the fixed
+  * cost of a narrow one-slice resume stays small.
   *
   * Replaces the reference's parsed-but-unused watermark parameter
   * (silver_and_gold.py:31, defect D3) with real semantics: a slice is
   * the unit of progress; its watermark row is flipped to `committed`
   * only AFTER data + lineage land, so any interrupted backfill resumes
-  * by re-running exactly the uncommitted slices (idempotent via
-  * dynamic partition overwrite). Also replaces the driver-side metrics
-  * JSON sink (build_datasets.py:126-139) and CloudWatch PutMetricData
-  * (stream_pipeline.asl.json:94-108) with queryable tables.
+  * by re-running exactly the uncommitted slices (idempotent: each slice
+  * overwrites its own static `slice_id=` dirs). Also replaces the
+  * driver-side metrics JSON sink (build_datasets.py:126-139) and
+  * CloudWatch PutMetricData (stream_pipeline.asl.json:94-108) with
+  * queryable tables.
   */
 object Checkpoint {
 
@@ -51,10 +61,6 @@ object Checkpoint {
     p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
-  private def readOrEmpty(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    if (exists(spark, path)) spark.read.schema(schema).parquet(path)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-
   /** Control-plane rows (watermarks, lineage) are DRIVER-WRITTEN JSONL
     * — one small file per slice. They are a handful of rows each; a
     * Spark write job per slice is ~0.5 s of pure scheduling (a
@@ -71,6 +77,12 @@ object Checkpoint {
     val out = fs.create(p, true)
     try out.write(content.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+  }
+
+  private def readDriverFile(fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path)
+      : String = {
+    val in = fs.open(p)
+    try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8) finally in.close()
   }
 
   private def jsonStr(v: Any): String = v match {
@@ -91,7 +103,6 @@ object Checkpoint {
   private val TsFmt = java.time.format.DateTimeFormatter
     .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSSX")
     .withZone(java.time.ZoneOffset.UTC)
-  private val TsReadFmt = "yyyy-MM-dd'T'HH:mm:ss.SSSSSSX"
 
   private def propsPath(outDir: String) = s"$outDir/_meta/table_props.json"
 
@@ -110,8 +121,7 @@ object Checkpoint {
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val s = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
+      val s = readDriverFile(fs, p)
       if (s.contains("\"context_tails\": true")) Some(true)
       else if (s.contains("\"context_tails\": false")) Some(false)
       else None
@@ -154,12 +164,55 @@ object Checkpoint {
     badSlices.isEmpty
   }
 
+  /** One watermark row as [[watermarks]] reads it back. */
+  final case class Watermark(
+      sliceId: String,
+      sliceStart: java.sql.Timestamp,
+      sliceEnd: java.sql.Timestamp,
+      highWatermark: Option[java.sql.Timestamp],
+      rowCount: Long,
+      status: String) {
+    def committed: Boolean = status == "committed"
+    def startSec: Long = Math.floorDiv(sliceStart.getTime, 1000L)
+    def endSec: Long = Math.floorDiv(sliceEnd.getTime, 1000L)
+  }
+
+  /** Every watermark row, read on the driver with no Spark job: one
+    * listing of `_meta/watermarks/` plus one small read per `*.json`
+    * file. A line that does not parse against [[watermarkSchema]] — a
+    * file truncated by a crash mid-write, a malformed timestamp, a
+    * missing required field — is dropped, so its slice reads as
+    * uncommitted and re-runs on resume.
+    */
+  def watermarks(spark: SparkSession, outDir: String): Seq[Watermark] = {
+    val dir = new org.apache.hadoop.fs.Path(wmPath(outDir))
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir)) return Nil
+    fs.listStatus(dir).toSeq
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".json") &&
+        !st.getPath.getName.startsWith("."))
+      .sortBy(_.getPath.getName)
+      .flatMap(st => readDriverFile(fs, st.getPath).split('\n').toSeq)
+      .filter(_.trim.nonEmpty)
+      .flatMap(parseWatermark)
+  }
+
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  private def parseWatermark(line: String): Option[Watermark] = scala.util.Try {
+    val n = Json.readTree(line)
+    def field(name: String) = Option(n.get(name)).filterNot(_.isNull)
+    def str(name: String) = field(name).filter(_.isTextual).map(_.textValue).get
+    def ts(name: String) = field(name).map(v =>
+      java.sql.Timestamp.from(java.time.Instant.from(TsFmt.parse(v.textValue))))
+    val rowCount = field("row_count").filter(v => v.isIntegralNumber && v.canConvertToLong).get
+    Watermark(str("slice_id"), ts("slice_start").get, ts("slice_end").get,
+      ts("high_watermark_ts"), rowCount.longValue, str("status"))
+  }.toOption
+
   /** Slice ids whose watermark row reached `committed`. */
   def committedSlices(spark: SparkSession, outDir: String): Set[String] =
-    readWatermarks(spark, outDir)
-      .filter(col("status") === "committed")
-      .select("slice_id").distinct()
-      .collect().map(_.getString(0)).toSet
+    watermarks(spark, outDir).filter(_.committed).map(_.sliceId).toSet
 
   /** Write the committed watermark row — the LAST act of a slice. */
   def commitSlice(
@@ -286,14 +339,38 @@ object Checkpoint {
     spark.read.schema(lineageSchema)
       .option("mode", "DROPMALFORMED").json(linPath(outDir))
 
+  /** [[watermarks]] as a local DataFrame (a `LocalRelation`: filters
+    * and projections over it run on the driver, no Spark job).
+    */
   def readWatermarks(spark: SparkSession, outDir: String): DataFrame =
-    if (exists(spark, wmPath(outDir)))
-      spark.read.schema(watermarkSchema)
-        .option("mode", "DROPMALFORMED")
-        .option("timestampFormat", TsReadFmt)
-        .json(wmPath(outDir))
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], watermarkSchema)
+    spark.createDataFrame(
+      watermarks(spark, outDir).map(w => Row(w.sliceId, w.sliceStart, w.sliceEnd,
+        w.highWatermark.orNull, w.rowCount, w.status)).asJava,
+      watermarkSchema)
+
+  /** Column names in the parquet footer of the first data file under
+    * `dir` (depth-first, names in sorted order; `_`/`.`-prefixed entries
+    * skipped, as Spark's file index skips them), read on the driver —
+    * the one footer Spark's non-merging schema inference would read,
+    * without its job. None when `dir` holds no data file.
+    */
+  def firstFileColumns(spark: SparkSession, dir: String): Option[Seq[String]] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new org.apache.hadoop.fs.Path(dir)
+    val fs = root.getFileSystem(conf)
+    def first(p: org.apache.hadoop.fs.Path): Option[org.apache.hadoop.fs.Path] =
+      fs.listStatus(p).sortBy(_.getPath.getName).iterator
+        .filterNot(st => st.getPath.getName.startsWith("_") || st.getPath.getName.startsWith("."))
+        .flatMap(st => if (st.isDirectory) first(st.getPath) else Some(st.getPath))
+        .nextOption()
+    if (!fs.exists(root)) None
+    else first(root).map { f =>
+      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(f, conf))
+      try r.getFileMetaData.getSchema.getFields.asScala.map(_.getName).toSeq
+      finally r.close()
+    }
+  }
 
   /** INCREMENTAL conversation state (round-1 verdict #5b: the full
     * per-slice state rewrite was O(#conversations) per slice —
@@ -368,7 +445,7 @@ object Checkpoint {
       else emptyDeltas(spark)
     snap match {
       case Some(s) =>
-        spark.read.parquet(snapPath(outDir, s))
+        spark.read.schema(convStateSchema).parquet(snapPath(outDir, s))
           .select(convStateSchema.fieldNames.map(col).toSeq :+ lit(0).as("chunk") :+
             lit(s).as("slice_start"): _*)
           .unionByName(deltas)

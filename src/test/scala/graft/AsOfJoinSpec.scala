@@ -127,9 +127,13 @@ class AsOfJoinSpec extends AnyFunSuite {
 
   test("latestForKeys respects the key set") {
     import spark.implicits._
-    val keys = gold.select("conv_id").distinct().limit(5).cache()
+    val present = gold.select("conv_id").distinct().orderBy("conv_id").limit(5)
+      .as[String].collect().toSeq
+    // a repeated key and a key with no history
+    val keys = (present :+ present.head :+ "conv_without_history").toDF("conv_id")
     val got = AsOfJoin.latestForKeys(gold, keys)
-    assert(got.count() == keys.count())
-    assert(got.join(keys, Seq("conv_id"), "left_anti").count() == 0)
+    val want = AsOfJoin.latestPerKey(gold).filter(col("conv_id").isin(present: _*))
+    assert(got.count() == present.size)
+    assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
   }
 }

@@ -42,6 +42,48 @@ class BackfillSpec extends AnyFunSuite {
     assert(ga.exceptAll(gb).count() == 0 && gb.exceptAll(ga).count() == 0)
   }
 
+  private def fs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+
+  /** One fully committed table; specs that mutate it work on a copy. */
+  private lazy val committedTable: String = {
+    val dir = Files.createTempDirectory("bf_committed").toString
+    Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices)
+    dir
+  }
+
+  private def copyOfCommitted(prefix: String): String = {
+    val dst = Files.createTempDirectory(prefix).toString
+    org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(committedTable),
+      fs, new org.apache.hadoop.fs.Path(dst, "t"), false, spark.sparkContext.hadoopConfiguration)
+    s"$dst/t"
+  }
+
+  /** Spark jobs started while `f` runs. */
+  private def jobsDuring[A](f: => A): (A, Int) = {
+    val n = new java.util.concurrent.atomic.AtomicInteger()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        n.incrementAndGet(); ()
+      }
+    }
+    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(l)
+    try {
+      val a = f
+      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
+      (a, n.get)
+    } finally spark.sparkContext.removeSparkListener(l)
+  }
+
+  /** The Spark JSON read of the watermark files that the driver reader
+    * replaced: the reference its rows are pinned to.
+    */
+  private def sparkJsonWatermarks(dir: String): Set[org.apache.spark.sql.Row] =
+    spark.read.schema(Checkpoint.watermarkSchema)
+      .option("mode", "DROPMALFORMED")
+      .option("timestampFormat", "yyyy-MM-dd'T'HH:mm:ss.SSSSSSX")
+      .json(s"$dir/_meta/watermarks").collect().toSet
+
   test("sliced backfill output == single-shot run (D5 fix, cross-slice state)") {
     val dir = Files.createTempDirectory("bf_sliced").toString
     val reports = Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices)
@@ -179,5 +221,69 @@ class BackfillSpec extends AnyFunSuite {
     // re-run is a no-op (all skipped)
     val again = Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices)
     assert(again.forall(_.skipped))
+  }
+
+  test("resume over a fully committed table launches zero Spark jobs; so does committedSlices") {
+    val dir = copyOfCommitted("bf_nojobs")
+    // control: the listener sees the jobs of a collect
+    assert(jobsDuring(bronze.select("conv_id").distinct().collect())._2 > 0)
+    val (reports, resumeJobs) = jobsDuring(Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices))
+    assert(reports.size == nSlices && reports.forall(_.skipped))
+    assert(resumeJobs == 0, s"$resumeJobs Spark job(s) on a no-op resume")
+    val (ids, idJobs) = jobsDuring(Checkpoint.committedSlices(spark, dir))
+    assert(ids.size == nSlices && idJobs == 0)
+  }
+
+  test("guard: a resume with a different sliceSecs is rejected") {
+    val dir = copyOfCommitted("bf_width_guard")
+    val ex = intercept[IllegalArgumentException](
+      Backfill.run(spark, bronze, dir, start, 2 * sliceSecs, nSlices))
+    assert(ex.getMessage.contains("does not match sliceSecs"))
+  }
+
+  test("guard: a committed table whose gold files lack text_len is rejected") {
+    val dir = copyOfCommitted("bf_text_len_guard")
+    fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/gold"))
+      .filter(_.getPath.getName.startsWith("slice_id=")).foreach { st =>
+        val tmp = new org.apache.hadoop.fs.Path(s"$dir/rewrite_${st.getPath.getName}")
+        spark.read.parquet(st.getPath.toString).drop("text_len").write.parquet(tmp.toString)
+        fs.delete(st.getPath, true)
+        fs.rename(tmp, st.getPath)
+      }
+    assert(!spark.read.parquet(s"$dir/gold").columns.contains("text_len"))
+    val ex = intercept[IllegalArgumentException](
+      Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices))
+    assert(ex.getMessage.contains("lacks the text_len column"))
+  }
+
+  test("crash during the watermark write: the slice reads as uncommitted and re-runs alone") {
+    val last = Backfill.sliceId(start + (nSlices - 1) * sliceSecs)
+    assert(Checkpoint.readWatermarks(spark, committedTable).collect().toSet ==
+      sparkJsonWatermarks(committedTable))
+    val damage: Seq[(String, String => String)] = Seq(
+      "truncated file" -> (line => line.take(line.length / 2)),
+      "malformed timestamp" -> (_.replaceFirst(
+        "\"slice_end\": \"[^\"]*\"", "\"slice_end\": \"2024-02-10T00:00:00\"")),
+      "status not committed" -> (_.replace("\"committed\"", "\"pending\"")))
+    damage.foreach { case (what, corrupt) =>
+      val dir = copyOfCommitted("bf_wm_crash")
+      val wm = java.nio.file.Paths.get(s"$dir/_meta/watermarks/$last.json")
+      val line = new String(Files.readAllBytes(wm), "UTF-8")
+      val bad = corrupt(line)
+      assert(bad != line, what)
+      Files.write(wm, bad.getBytes("UTF-8"))
+      // the local FS checksum no longer matches the rewritten bytes
+      Files.deleteIfExists(wm.resolveSibling(s".$last.json.crc"))
+      // the driver reader returns the rows the Spark JSON read returned
+      val rows = Checkpoint.readWatermarks(spark, dir).collect().toSet
+      assert(rows == sparkJsonWatermarks(dir), what)
+      assert(rows.size == (if (what == "status not committed") nSlices else nSlices - 1), what)
+      assert(Checkpoint.committedSlices(spark, dir) ==
+        (0 until nSlices - 1).map(i => Backfill.sliceId(start + i * sliceSecs)).toSet, what)
+      val reports = Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices)
+      assert(reports.filterNot(_.skipped).map(_.sliceId) == Seq(last), what)
+      assert(Checkpoint.committedSlices(spark, dir).size == nSlices, what)
+      assertSame(spark.read.parquet(s"$dir/gold"), singleShot)
+    }
   }
 }
