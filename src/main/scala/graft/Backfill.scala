@@ -17,8 +17,8 @@ import graft.silver.SilverBuilder
   * Replaces the reference's EventBridge/Step Functions micro-batch loop
   * (state_machines/stream_pipeline.asl.json) with a pure-Spark driver,
   * and fixes its batch semantics (SURVEY.md §2.1):
-  *  - D5: window features see FULL history — each slice reads a
-  *    maxLookback tail of already-written silver as context, and
+  *  - D5: window features see FULL history — each slice reads the
+  *    maxLookback window of already-written gold as narrow context, and
   *    lag/gap/session carry exact per-conversation state across slices
   *    (prev ts/role + session count), so a sliced backfill is
   *    bit-identical to a single-shot run (BackfillSpec property).
@@ -47,8 +47,7 @@ object Backfill {
     * sweep stage long before the absolute crossover — at 1000 cores an
     * absolute 10^7 threshold leaves a 10M-row task serializing while
     * every other core handles ~1M rows. Relative candidate threshold =
-    * max(floor, alpha x sliceRows / cores), alpha = 2
-    * (SPARK_GRAFT_SKEW_ALPHA is the dev A/B knob).
+    * max(floor, alpha x sliceRows / cores), alpha = 2.
     *
     * Routing is additionally gated on the candidates being a small
     * FRACTION of the slice ([[RouteBudgetFraction]]): the segmented
@@ -64,8 +63,7 @@ object Backfill {
     * the ABSOLUTE crossover always route (the sweep would abort on
     * them anyway — cpu-sum explosion beats any detour argument).
     */
-  private val SkewAlpha: Long =
-    sys.env.get("SPARK_GRAFT_SKEW_ALPHA").map(_.toLong).getOrElse(2L)
+  private val SkewAlpha = 2L
 
   /** Routing below this many rows never pays: the segmented path's
     * fixed cost (summary pass + seed broadcast + its own exchange)
@@ -200,7 +198,7 @@ object Backfill {
         // floor 2, not 1: HashPartitioning(x, 1) degenerates to a
         // single-partition requirement that a 0-partition (empty-dir)
         // side-stream scan already satisfies — Spark then elides that
-        // exchange and the sweep's three zipped streams disagree on
+        // exchange and the sweep's two zipped streams disagree on
         // partition count. n >= 2 is a real hash requirement, never
         // elided.
         Math.max(2, Math.max(byMax, Math.min(byMin, cores8)))
@@ -221,21 +219,12 @@ object Backfill {
     * [firstStartSec, firstStartSec + nSlices * sliceSecs). `bronze` is
     * the raw input (any layout); rows are routed to slices by ts.
     *
-    * `contextStrategy` picks how committed lookback events reach the
-    * sliding frames of later slices:
-    *  - "rescan": each slice re-reads the narrow (conv_id, ts,
-    *    text_len, tool) columns of the committed gold inside the
-    *    lookback window — parquet column pruning skips the dominant
-    *    text column, and the rows ride a tiny side shuffle (not the
-    *    big exchange). Best when slices are at least about as wide as
-    *    the lookback (the re-read is < 1 slice of narrow rows).
-    *  - "tails": each slice pre-aggregates its events into ts-sorted
-    *    per-(conv, chunk) arrays fused with the state delta; later
-    *    slices read those instead of the gold. Best when slices are
-    *    much NARROWER than the lookback (hourly slices + a 7d frame
-    *    would re-read ~168 slices of events every slice under
-    *    rescan; tails make that O(conversations) array rows).
-    *  - "auto" (default): tails iff lookback >= 2x slice width.
+    * Committed lookback events reach the sliding frames of later
+    * slices by a RESCAN: each slice re-reads the narrow (conv_id, ts,
+    * text_len, tool) columns of the committed gold inside the
+    * lookback window ([[contextRead]]) — parquet column pruning skips
+    * the dominant text column, and the rows ride a small side shuffle
+    * into the sweep, not the big exchange.
     *
     * `skewHeavyThreshold` routes conversations whose PER-SLICE cost —
     * rows in this slice, or committed lookback events — exceeds the
@@ -269,28 +258,20 @@ object Backfill {
       rangeLayoutWrites: Boolean = false,
       compactStateEvery: Int = 16,
       segmentSecs: Long = 604800L,
-      contextStrategy: String = "auto",
       materializeSilver: Boolean = false,
       skewDetection: String = "lazy"): Seq[SliceReport] = {
 
     require(skewDetection == "lazy" || skewDetection == "upfront",
       s"skewDetection must be lazy|upfront, got '$skewDetection'")
     // the committed watermark rows, read once on the driver: the resume
-    // set, the slice-width guard, the empty-slice seeds and the strategy
-    // guard all come from this one list
+    // set, the slice-width guard and the empty-slice seeds all come
+    // from this one list
     val wms = phase("run", "watermark read")(
       Checkpoint.watermarks(spark, outDir).filter(_.committed))
     val committed = wms.map(_.sliceId).toSet
     val silverPath = s"$outDir/silver"
     val goldPath = s"$outDir/gold"
     val silverCols = TranscriptSchema.silver.fieldNames.toSeq
-    val useTails = contextStrategy match {
-      case "tails"  => true
-      case "rescan" => false
-      case "auto"   => MaxLookbackSecs >= 2 * sliceSecs
-      case other => throw new IllegalArgumentException(
-        s"contextStrategy must be auto|tails|rescan, got '$other'")
-    }
 
     val tsType = bronze.schema("ts").dataType
     // explicit read schema for all committed-gold reads: survives empty
@@ -315,35 +296,6 @@ object Backfill {
     })
     // committed row counts feed the empty-slice probe heuristic below
     val committedRowCounts: Map[String, Long] = wms.map(w => w.sliceId -> w.rowCount).toMap
-
-    // Strategy guard (same loud-failure class as the slice-width
-    // guard): resuming a table whose committed slices wrote state-only
-    // (rescan) deltas with an effective `tails` strategy would make
-    // readFrameTails silently filter every null-tail row — lookback
-    // frames spanning the switch would see zero committed context and
-    // the 1h/24h/7d features would be silently wrong. The effective
-    // strategy is persisted as a driver-written table property on
-    // every run; pre-props tables are probed for written tail arrays
-    // (one tiny narrow aggregate, resume-only). The reverse switch
-    // (tails table resumed under rescan) is safe — rescan reads the
-    // committed gold files directly — but downgrades the property, so
-    // a later tails resume of the mixed chain is correctly rejected.
-    val persistedTails = Checkpoint.readContextTailsProp(spark, outDir)
-    // an all-empty committed history has no context to lose — the
-    // guard only bites when committed DATA exists (ADVICE r5: a false
-    // property left by a failed/no-op rescan invocation must not
-    // reject a tails resume of an empty table)
-    val committedNonEmptySecs: Set[Long] = wms.filter(_.rowCount > 0L).map(_.startSec).toSet
-    if (committedNonEmptySecs.nonEmpty && useTails) phase("run", "strategy guard") {
-      val tailsAvailable = persistedTails.getOrElse(
-        Checkpoint.frameTailsEverWritten(spark, outDir, committedNonEmptySecs))
-      if (!tailsAvailable)
-        throw new IllegalArgumentException(
-          "effective contextStrategy is 'tails' but the committed slices of this table " +
-            "were written under the state-only (rescan) strategy and carry no frame-tail " +
-            "arrays — lookback frames would silently lose all committed context. Resume " +
-            "with --context rescan, or rebuild the table from scratch under tails.")
-    }
 
     // Table-version guard (resume across engine upgrades): the frame
     // stages read the persisted text_len of committed gold; a table
@@ -448,18 +400,14 @@ object Backfill {
         // sweep resolves latest-per-conversation inline)
         val deltas = phase(id, "delta chain read")(Checkpoint.readConvStateDeltas(spark, outDir, start))
 
-        // --- committed lookback context, per strategy ---
-        val tails =
-          if (useTails) phase(id, "tail read")(
-            Checkpoint.readFrameTails(spark, outDir, start, sliceSecs, MaxLookbackSecs))
-          else FusedSweep.emptyTails(spark)
-        // narrow gold context: conv_id + ts + persisted text_len + tool
-        // only — parquet column pruning never touches the dominant
-        // text column. Used by the rescan frame stream, the heavy
-        // path's frame context, and the context-size arm of the skew
-        // dispatch.
-        def ctxGold: DataFrame = contextRead(spark, goldPath, id, start, sliceSecs,
-          Some(goldFileSchema))
+        // --- committed lookback context: conv_id + ts + persisted
+        // text_len + tool only — parquet column pruning never touches
+        // the dominant text column. Used by the light sweep's frame
+        // side-stream, the heavy path's frame context, and the
+        // context-size arm of the skew dispatch. Built once per slice
+        // (one listing of the overlapping slice dirs).
+        lazy val ctxGold: DataFrame = phase(id, "context listing")(
+          contextRead(spark, goldPath, id, start, sliceSecs, Some(goldFileSchema)))
 
         // --- relative-dispatch inputs: slice-row estimate from the
         // previous written/committed slice (first slice: parquet-
@@ -485,10 +433,7 @@ object Backfill {
         // beats re-planning broadcast joins into all split branches.
         def detectCounts(thr: Long): Seq[(String, Long)] = phase(id, "heavy ids")({
           val sliceCnt = rawSlice.groupBy(col("conv_id")).count()
-          val ctxCnt =
-            if (useTails)
-              tails.groupBy(col("conv_id")).agg(sum(size(col("tail_ts"))).as("count"))
-            else ctxGold.groupBy(col("conv_id")).count()
+          val ctxCnt = ctxGold.groupBy(col("conv_id")).count()
           sliceCnt.filter(col("count") > thr)
             .unionByName(ctxCnt.filter(col("count") > thr))
             .groupBy(col("conv_id")).agg(max(col("count")).as("count"))
@@ -498,15 +443,11 @@ object Backfill {
         })
 
         // per-task state side-files: the sweep tasks emit this slice's
-        // conversation-state delta (and tail arrays in tails mode) as
-        // a side product of the gold WRITE job — the separate
-        // slice-meta aggregate job survives only for the few
-        // skew-routed conversations the sweep never sees
+        // conversation-state delta as a side product of the gold WRITE
+        // job — the separate slice-meta aggregate job survives only for
+        // the few skew-routed conversations the sweep never sees
         val stateSink = graft.meta.StateSideSink(
           dir = Checkpoint.stateDeltaDir(outDir, start),
-          minKeepSec = end - MaxLookbackSecs,
-          collectTails = useTails,
-          chunkTurns = 65536,
           conf = new graft.meta.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
 
         // heavy-path intermediates persisted for the duration of one
@@ -523,13 +464,10 @@ object Backfill {
           val routedIds = (heavy ++ inverted).distinct
           val isRouted =
             if (routedIds.isEmpty) lit(false) else col("conv_id").isin(routedIds: _*)
-          val lightCtxStream =
-            if (useTails) None
-            else Some(FusedSweep.ctxStreamRows(ctxGold.filter(!isRouted)))
           val light = FusedSweep.gold(
             deltas.filter(!isRouted), emptySilver(spark),
             sliceBronze.filter(!isRouted), sessionGapSecs,
-            Some(tails.filter(!isRouted)), lightCtxStream,
+            Some(FusedSweep.ctxStreamRows(ctxGold.filter(!isRouted))),
             capacityLimit = skewHeavyThreshold,
             numPartitions = Some(sweepParts),
             stateSink = Some(stateSink))
@@ -544,7 +482,7 @@ object Backfill {
                 col("dt"), col("text_len"))
               .filter(isRouted)
             // ts-inverted conversations take the plain single-window
-            // session stage: SegmentedSessions chains per-segment
+            // session stage: the segmented path chains per-segment
             // summaries in turn order within TS-based segments, which
             // an inversion crossing a segment boundary would corrupt.
             // (Anomalies are few; heavy AND inverted prefers correct.)
@@ -555,7 +493,7 @@ object Backfill {
                 val in = col("conv_id").isin(ids: _*)
                 heavyGold(deltas.filter(in), context.filter(in),
                   sliceBronze.filter(in), start, sessionGapSecs, segmentSecs,
-                  segmentedSessions = segmented, outPartitions = Some(sweepParts),
+                  segmented = segmented, outPartitions = Some(sweepParts),
                   persistRegistry = Some(slicePersists))
             }
             parts.foldLeft(light)((acc, h) =>
@@ -722,17 +660,14 @@ object Backfill {
         }
 
         // --- slice meta for later slices: the LIGHT path's state
-        // delta (+ frame tails under the tails strategy) already
-        // landed as per-task side-files of the gold write — zero extra
-        // jobs. Only skew-routed conversations (absent from the sweep)
-        // still need the aggregate, over their narrow columns only.
+        // delta already landed as per-task side-files of the gold
+        // write — zero extra jobs. Only skew-routed conversations
+        // (absent from the sweep) still need the aggregate, over their
+        // narrow columns only.
         val routedIds = (heavyIds ++ invertedIds).distinct
-        if (rows > 0L && routedIds.nonEmpty) {
-          val routedGold = goldWritten.filter(col("conv_id").isin(routedIds: _*))
+        if (rows > 0L && routedIds.nonEmpty)
           phase(id, "routed slice meta")(Checkpoint.appendSliceMeta(outDir, start,
-            if (useTails) Checkpoint.sliceMetaFromGold(routedGold, end, MaxLookbackSecs)
-            else Checkpoint.stateDeltaFromGold(routedGold)))
-        }
+            Checkpoint.stateDeltaFromGold(goldWritten.filter(col("conv_id").isin(routedIds: _*)))))
 
         // --- the committing watermark row (atomic last) ---
         phase(id, "commit")(Checkpoint.commitSlice(spark, outDir, id,
@@ -745,15 +680,6 @@ object Backfill {
         SliceReport(id, rows, wallMs, skipped = false)
       }
     }
-    // context-strategy property, written AFTER the loop (ADVICE r5): a
-    // no-op resume (nothing new committed) or a run that fails before
-    // committing anything must not downgrade a true property — only a
-    // run that actually committed new data pins the effective strategy;
-    // a fresh table's first committing run establishes it.
-    val wroteNewData = reports.exists(r => !r.skipped && r.rows > 0L)
-    if (wroteNewData || (committed.isEmpty && reports.exists(!_.skipped)))
-      phase("run", "table props")(Checkpoint.writeContextTailsProp(spark, outDir,
-        useTails && (committedNonEmptySecs.isEmpty || persistedTails.getOrElse(true))))
     reports
   }
 
@@ -908,23 +834,15 @@ object Backfill {
       rangeLayoutWrites: Boolean = false,
       compactStateEvery: Int = 16,
       segmentSecs: Long = 604800L,
-      contextStrategy: String = "auto",
       materializeSilver: Boolean = false): Seq[SliceReport] = {
     val latePath = s"$outDir/_late"
     val runAll = () => run(spark, bronze, outDir, firstStartSec, sliceSecs, nSlices,
       sessionGapSecs = sessionGapSecs, skewHeavyThreshold = skewHeavyThreshold,
       rangeLayoutWrites = rangeLayoutWrites, compactStateEvery = compactStateEvery,
-      segmentSecs = segmentSecs, contextStrategy = contextStrategy,
-      materializeSilver = materializeSilver)
+      segmentSecs = segmentSecs, materializeSilver = materializeSilver)
     // the earliest queued slice, from the queue's partition dir names
     // (driver-side listing, no Spark job)
-    val p = new org.apache.hadoop.fs.Path(latePath)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val lateSecs =
-      if (!fs.exists(p)) Nil
-      else fs.listStatus(p).toSeq.map(_.getPath.getName)
-        .filter(_.startsWith("late_slice_start="))
-        .flatMap(_.stripPrefix("late_slice_start=").toLongOption)
+    val lateSecs = Checkpoint.numberedDirs(spark, latePath, "late_slice_start=").map(_._2)
     if (lateSecs.isEmpty) return runAll()
     val fromSec = lateSecs.min
     println(s"[backfill] reprocessing late data: invalidating slices from s$fromSec")
@@ -936,7 +854,7 @@ object Backfill {
   }
 
   /** Empty DF with the silver schema (the light path's context input —
-    * frame tails replace raw context rows there).
+    * the narrow context side-stream replaces raw context rows there).
     */
   private[graft] def emptySilver(spark: SparkSession): DataFrame =
     spark.createDataFrame(
@@ -974,12 +892,17 @@ object Backfill {
       .collect().map(_.getString(0)).toSeq
   }
 
-  /** Heavy-conversation slice path: dedup by (conv, turn) key (a plain
-    * map-side-combinable aggregate — massively parallel, no
-    * per-conversation window), EXACT chunked range features
-    * ([[graft.skew.ChunkedWindows]]), and the two-pass segmented
-    * lag/gap/session ([[graft.skew.SegmentedSessions]]). No stage in
-    * this path serializes a whole conversation on one task.
+  /** Heavy-conversation slice path: dedup by (conv, turn) key (a
+    * keyed row_number over an explicit hash exchange — massively
+    * parallel, no per-conversation window), then frames + lag +
+    * sessions in ONE (conv, time-segment) exchange
+    * ([[graft.gold.SegmentedSweep]]). No stage in this path
+    * serializes a whole conversation on one task.
+    *
+    * `segmented = false` is the ts-INVERTED reroute: segment-chunked
+    * range features ([[graft.gold.FastWindows.rangeFeaturesChunked]])
+    * and the turn-ordered single-window [[withState]], whose session
+    * chain stays correct when ts disagrees with turn order.
     */
   private[graft] def heavyGold(
       deltas: DataFrame,
@@ -988,11 +911,8 @@ object Backfill {
       start: Long,
       gapSecs: Long,
       segmentSecs: Long,
-      segmentedSessions: Boolean = true,
+      segmented: Boolean = true,
       outPartitions: Option[Int] = None,
-      // fused one-exchange segmented path (SegmentedSweep) vs the
-      // legacy three-stage stack; env opt-out for A/B probes
-      fusedSegmented: Boolean = !sys.env.get("SPARK_GRAFT_FUSED_HEAVY").contains("0"),
       // slice-scoped persist registry: intermediates cached here are
       // unpersisted by the caller right after the slice's write lands.
       // None (specs / single-shot) skips the persists entirely.
@@ -1064,10 +984,10 @@ object Backfill {
 
     // FUSED segmented path (round-5, NEXT.md lead 1): frames + lag +
     // sessions in one full-width (conv, seg) exchange + one narrow
-    // summary pass, replacing the three-stage chunked/two-pass stack
-    // below. Only for contract-clean conversations — the ts-inverted
-    // reroute keeps the turn-ordered single-window session stage.
-    if (segmentedSessions && fusedSegmented) {
+    // summary pass. Only for contract-clean conversations — the
+    // ts-inverted reroute below keeps the turn-ordered single-window
+    // session stage.
+    if (segmented) {
       val state = Checkpoint.latestConvState(deltas)
         .select(col("conv_id"), col("st_last_ts"), col("st_last_role"), col("st_sessions"))
       // the summary's winners derive from the CACHED dedup output, not
@@ -1108,11 +1028,7 @@ object Backfill {
 
     val state = Checkpoint.latestConvState(deltas)
       .select(col("conv_id"), col("st_last_ts"), col("st_last_role"), col("st_sessions"))
-    val sessioned =
-      if (segmentedSessions)
-        graft.skew.SegmentedSessions.withStateSegmented(ranged, state, gapSecs, segmentSecs)
-      else
-        withState(ranged, state, gapSecs)
+    val sessioned = withState(ranged, state, gapSecs)
     // round-robin the heavy output across the session's full
     // parallelism before it unions into the slice write: the segment
     // stages leave O(span/segment) partitions, and a downstream write
@@ -1127,31 +1043,38 @@ object Backfill {
       .repartition(numParts)
   }
 
-  /** Lookback context: the `[start - MaxLookback, start)` tail of the
-    * already-written silver table. Slices are time ranges by
-    * construction (`slice_id = s<startSec>`), so the read PRUNES at
-    * the slice_id partition level to the <= ceil(lookback/sliceSecs)+1
-    * directories that can overlap the window (PruningSpec asserts the
-    * plan), plus pushable ts literals and a dt row predicate — instead
-    * of round 1's unix_timestamp(ts)-wrapped full table scan. Over an
-    * S-slice backfill this keeps total context IO O(S * lookback), not
+  /** Lookback context: the `[start - MaxLookback, start)` tail of an
+    * already-written slice table (gold, or a silver copy). Slices are
+    * time ranges by construction (`slice_id = s<startSec>`), so the
+    * `slice_id=` dir names are listed once on the driver and only the
+    * <= ceil(lookback/sliceSecs)+1 dirs that can overlap the window
+    * are handed to the reader (with `basePath`, so `slice_id` stays a
+    * partition column): the file listing per slice stays bounded by
+    * the lookback, not by the table's age. The slice_id range filter
+    * is kept so the scan still shows it as PartitionFilters, plus
+    * pushable ts literals and a dt row predicate (PruningSpec asserts
+    * the plan and the relation's root paths). Over an S-slice
+    * backfill this keeps total context IO O(S * lookback), not
     * O(S^2).
     */
   private[graft] def contextRead(
-      spark: SparkSession, silverPath: String, id: String, start: Long,
-      sliceSecs: Long, schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame =
-    if (Checkpoint.pathExists(spark, silverPath)) {
+      spark: SparkSession, tablePath: String, id: String, start: Long,
+      sliceSecs: Long, schema: Option[org.apache.spark.sql.types.StructType] = None): DataFrame = {
+    val lo = start - MaxLookbackSecs - sliceSecs
+    val dirs = Checkpoint.numberedDirs(spark, tablePath, "slice_id=s")
+      .collect { case (p, sec) if sec > lo && sec < start => p.toString }
+      .sorted
+    if (dirs.nonEmpty) {
       // an explicit schema also covers dirs whose only slice write
       // FAILED mid-flight (zero readable files): inference would throw
       val reader = schema.map(spark.read.schema(_)).getOrElse(spark.read)
-      val silverAll = reader.parquet(silverPath)
+      val ctxAll = reader.option("basePath", tablePath).parquet(dirs: _*)
       val sliceStart = substring(col("slice_id"), 2, 18).cast("long")
-      silverAll
-        .filter(col("slice_id") =!= id &&
-          sliceStart > start - MaxLookbackSecs - sliceSecs && sliceStart < start &&
+      ctxAll
+        .filter(col("slice_id") =!= id && sliceStart > lo && sliceStart < start &&
           col("dt") >= dtLit(start - MaxLookbackSecs) && col("dt") <= dtLit(start) &&
-          silverAll("ts") >= tsLit(silverAll, start - MaxLookbackSecs) &&
-          silverAll("ts") < tsLit(silverAll, start))
+          ctxAll("ts") >= tsLit(ctxAll, start - MaxLookbackSecs) &&
+          ctxAll("ts") < tsLit(ctxAll, start))
         .drop("slice_id")
     } else spark.createDataFrame(
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -1161,6 +1084,7 @@ object Backfill {
       org.apache.spark.sql.types.StructType(
         schema.map(_.fields.filterNot(_.name == "slice_id"))
           .getOrElse(TranscriptSchema.silver.fields)))
+  }
 
   /** lag/gap/session over a slice via ONE window per conversation,
     * seeded by the previous slice's per-conversation state — exact
@@ -1169,8 +1093,8 @@ object Backfill {
     * correct under any turn/ts disagreement, where the segmented
     * two-pass would chain summaries across ts-based segments in the
     * wrong order); a mega-conversation serializes here, so the skew
-    * path proper is [[graft.skew.SegmentedSessions]]. Also the
-    * equality baseline in specs.
+    * path proper is [[graft.gold.SegmentedSweep]]. Also the equality
+    * baseline in specs.
     */
   private[graft] def withState(ranged: DataFrame, state: DataFrame, gapSecs: Long): DataFrame = {
     val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))

@@ -24,8 +24,6 @@ import graft.sources.TranscriptSource
   *                                             conversation -> segmented heavy path)
   *   [--segment-secs 604800]
   *   [--compact-every 16]
-  *   [--context auto|tails|rescan]            (lookback frame context strategy;
-  *                                             auto = tails iff lookback >= 2x slice)
   *   [--materialize-silver]                   (also write a physical silver/ copy;
   *                                             by default silver is served as a
   *                                             projection of the gold files)
@@ -52,7 +50,6 @@ object BackfillCli {
       compactEvery: Int = 16,
       rangeLayout: Boolean = false,
       latePolicy: String = "ignore",
-      context: String = "auto",
       materializeSilver: Boolean = false)
 
   private[graft] def parseEpoch(s: String): Long =
@@ -86,7 +83,6 @@ object BackfillCli {
       case "--compact-every" :: v :: t    => loop(t, a.copy(compactEvery = v.toInt))
       case "--range-layout" :: t          => loop(t, a.copy(rangeLayout = true))
       case "--late-policy" :: v :: t      => loop(t, a.copy(latePolicy = v))
-      case "--context" :: v :: t          => loop(t, a.copy(context = v))
       case "--materialize-silver" :: t    => loop(t, a.copy(materializeSilver = true))
       case Nil                            => a
       case other :: _ =>
@@ -100,8 +96,6 @@ object BackfillCli {
     require(a.sliceSecs > 0, "--slice-secs must be positive")
     require(Set("ignore", "collect", "reprocess")(a.latePolicy),
       "--late-policy must be ignore|collect|reprocess")
-    require(Set("auto", "tails", "rescan")(a.context),
-      "--context must be auto|tails|rescan")
     a
   }
 
@@ -130,14 +124,12 @@ object BackfillCli {
         Backfill.reprocessLate(spark, bronze, a.out, a.startSec, a.sliceSecs, a.nSlices,
           sessionGapSecs = a.sessionGapSecs, skewHeavyThreshold = a.skewThreshold,
           rangeLayoutWrites = a.rangeLayout, compactStateEvery = a.compactEvery,
-          segmentSecs = a.segmentSecs, contextStrategy = a.context,
-          materializeSilver = a.materializeSilver)
+          segmentSecs = a.segmentSecs, materializeSilver = a.materializeSilver)
       else
         Backfill.run(spark, bronze, a.out, a.startSec, a.sliceSecs, a.nSlices,
           sessionGapSecs = a.sessionGapSecs, skewHeavyThreshold = a.skewThreshold,
           rangeLayoutWrites = a.rangeLayout, compactStateEvery = a.compactEvery,
-          segmentSecs = a.segmentSecs, contextStrategy = a.context,
-          materializeSilver = a.materializeSilver)
+          segmentSecs = a.segmentSecs, materializeSilver = a.materializeSilver)
     reports.foreach { r =>
       println(s"[backfill] ${r.sliceId} rows=${r.rows} wallMs=${r.wallMs}" +
         (if (r.skipped) " (skipped: already committed)" else ""))

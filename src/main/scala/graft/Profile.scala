@@ -32,7 +32,7 @@ object Profile {
     val silverCols = graft.schema.TranscriptSchema.silver.fieldNames.toSeq
     t("silver write (read-back)")(goldWritten.select(silverCols.map(col): _*)
       .write.mode("overwrite").parquet(s"$work/silver/slice_id=s0"))
-    t("slice meta")(graft.meta.Checkpoint.writeConvStateDelta(work, start, graft.meta.Checkpoint.sliceMetaFromGold(goldWritten)))
+    t("slice meta")(graft.meta.Checkpoint.writeConvStateDelta(work, start, graft.meta.Checkpoint.stateDeltaFromGold(goldWritten)))
     t("lineage")(graft.meta.Checkpoint.appendLineage(work, goldWritten, "s0", 1000L))
     // variants to localize window cost
     val s2 = SilverBuilder.build(sliceBronze).cache(); s2.count()

@@ -89,15 +89,6 @@ private[gold] final class FrameQ(val spanSecs: Long, trackDistinct: Boolean = tr
     while (i < size) { tool((head + i) % cap) = null; i += 1 }
     head = 0; size = 0; sumLen = 0L; toolCalls = 0L; distinct.clear()
   }
-  /** Visit the buffered entries oldest-to-newest. Used by the fused
-    * sweep's side-feed fallback: on the first out-of-order context
-    * entry the already-fed prefix (fully resident here — no eviction
-    * happens during the drain) is moved back into the sort buffer.
-    */
-  def foreachEntry(f: (Long, Long, String) => Unit): Unit = {
-    var i = 0
-    while (i < size) { val j = (head + i) % cap; f(ts(j), len(j), tool(j)); i += 1 }
-  }
 }
 
 object FastWindows {

@@ -63,14 +63,6 @@ object FusedSweep {
   private val SEQ = 7
   private val SESSIONS = 8
 
-  // the tail side-stream's own (narrow) schema
-  private val T_CONV = 0
-  private val T_SEQ = 1
-  private val T_CHUNK = 2
-  private val T_TS = 3
-  private val T_LEN = 4
-  private val T_TOOL = 5
-
   // the scalar-context side-stream's schema (one row per committed
   // lookback event, pre-narrowed: no text, ts already in epoch seconds)
   private val C_CONV = 0
@@ -103,52 +95,19 @@ object FusedSweep {
       col("conv_id"), col("turn_idx"), col("role"), col("text"), col("tool"), col("ts"),
       lit(2).as("_k"), lit(0L).as("_seq"), lit(null).cast("int").as("_sessions"))
 
-  /** The frame-tail SIDE-STREAM ([[graft.meta.Checkpoint.readFrameTails]]):
-    * per (conv, chunk), the committed lookback events pre-aggregated
-    * into ts-sorted (epoch_sec, text_len, tool) arrays. They seed the
-    * sliding frames ONLY — the lag chain and session counter come from
-    * the state rows, which always accompany them (every committed
-    * slice that touched a conversation wrote its delta).
-    *
-    * Tails deliberately do NOT ride the big exchange: unioning them in
-    * would widen every data row by three (null) array fields — measured
-    * ~10-20% extra shuffle+sort bytes on the engine's hottest path.
-    * Instead they shuffle separately (tiny: O(convs) narrow rows) with
-    * the SAME HashPartitioning(conv_id, n), and the sweep merges the
-    * two sorted streams per partition via zipPartitions — the two
-    * shuffles route every conv_id to the same partition index because
-    * both are explicit numbered repartitions on the same expression
-    * (AQE does not touch REPARTITION_BY_NUM).
-    */
-  private[graft] def tailStream(tails: DataFrame): DataFrame =
-    tails.select(
-      col("conv_id"),
-      col("slice_start").cast("long").as("_seq"),
-      col("chunk"),
-      col("tail_ts"), col("tail_len"), col("tail_tool"))
-
-  private[graft] def emptyTails(spark: org.apache.spark.sql.SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(Seq(
-        StructField("conv_id", StringType, nullable = false),
-        StructField("slice_start", LongType, nullable = false),
-        StructField("chunk", IntegerType, nullable = false),
-        StructField("tail_ts", ArrayType(LongType, containsNull = false)),
-        StructField("tail_len", ArrayType(LongType, containsNull = false)),
-        StructField("tail_tool", ArrayType(StringType, containsNull = true)))))
-
-  /** The scalar-context SIDE-STREAM (rescan strategy,
-    * [[graft.Backfill]] `contextStrategy = "rescan"`): one narrow row
-    * per committed lookback event, read straight from the written gold
-    * table (conv_id + ts + the persisted text_len + tool — parquet
-    * column pruning keeps the dominant text column untouched). Like
-    * the frame tails, these rows seed the sliding frames ONLY — the
-    * lag chain / session counter / dedup horizon ride the state rows —
-    * so they are kept OFF the big exchange: they shuffle separately
-    * (4 narrow columns instead of widening every data row) with the
-    * same explicit HashPartitioning(conv_id, n) and merge into the
-    * sweep via zipPartitions, sorted by (conv_id, t).
+  /** The committed-context SIDE-STREAM ([[graft.Backfill]]'s rescan of
+    * committed gold): one narrow row per committed lookback event,
+    * read straight from the written gold table (conv_id + ts + the
+    * persisted text_len + tool — parquet column pruning keeps the
+    * dominant text column untouched). These rows seed the sliding
+    * frames ONLY — the lag chain / session counter / dedup horizon
+    * ride the state rows — so they are kept OFF the big exchange:
+    * unioning them in would widen every data row. They shuffle
+    * separately with the same explicit HashPartitioning(conv_id, n)
+    * and merge into the sweep via zipPartitions, sorted by
+    * (conv_id, t) — both shuffles route every conv_id to the same
+    * partition index because both are numbered repartitions on the
+    * same expression (AQE does not touch REPARTITION_BY_NUM).
     */
   private[graft] def ctxStreamRows(context: DataFrame): DataFrame = {
     import org.apache.spark.sql.functions.unix_timestamp
@@ -207,7 +166,7 @@ object FusedSweep {
     TranscriptSchema.goldFeatures.map(_.copy(nullable = true)) :+
     // the row's own text length, already computed by the sweep's frame
     // bookkeeping: persisting it lets every downstream derivation
-    // (frame tails, lineage) read narrow columns only — decoding the
+    // (committed context, lineage) read narrow columns only — decoding the
     // dominant text column again just to take length() measured ~1.5 s
     // per bench slice
     StructField("text_len", LongType, nullable = true))
@@ -232,8 +191,7 @@ object FusedSweep {
   val OverPartitionFactor: Int = 8
 
   /** `stateSink`: when set, each sweep task also emits the slice's
-    * per-conversation state delta (and, in tails mode, the trimmed
-    * frame-tail arrays) as a parquet side-file — see
+    * per-conversation state delta as a parquet side-file — see
     * [[graft.meta.StateSideSink]]. This replaces the separate
     * post-write slice-meta aggregate job for every conversation that
     * rides the sweep.
@@ -243,7 +201,6 @@ object FusedSweep {
       context: DataFrame,
       bronze: DataFrame,
       gapSecs: Long = TranscriptSchema.DefaultSessionGapSecs,
-      tails: Option[DataFrame] = None,
       ctxStream: Option[DataFrame] = None,
       capacityLimit: Option[Long] = None,
       numPartitions: Option[Int] = None,
@@ -266,10 +223,6 @@ object FusedSweep {
       spark.conf.get("spark.sql.shuffle.partitions").toInt * OverPartitionFactor)
     val sorted = sortedInput(state, context, bronze, numParts)
 
-    val tailSorted = tailStream(tails.getOrElse(emptyTails(spark)))
-      .repartition(numParts, col("conv_id"))
-      .sortWithinPartitions(col("conv_id"), col("_seq"), col("chunk"))
-
     val ctxSorted = ctxStream.getOrElse(emptyCtxStream(spark))
       .repartition(numParts, col("conv_id"))
       .sortWithinPartitions(col("conv_id"), col("t"))
@@ -280,10 +233,8 @@ object FusedSweep {
 
     val sink = stateSink
     val rdd = GraftInternalAccess.toInternalRdd(sorted.toDF())
-      .zipPartitions(
-        GraftInternalAccess.toInternalRdd(tailSorted.toDF()),
-        GraftInternalAccess.toInternalRdd(ctxSorted.toDF())) {
-        (data, tl, cx) =>
+      .zipPartitions(GraftInternalAccess.toInternalRdd(ctxSorted.toDF())) {
+        (data, cx) =>
           val writer = sink.map { s =>
             val w = new graft.meta.StateSideWriter(s)
             // close on task completion: commits the parquet footer on
@@ -292,14 +243,7 @@ object FusedSweep {
               .foreach(_.addTaskCompletionListener[Unit](_ => w.close()))
             w
           }.orNull
-          val chunkTurns = sink match {
-            // rescan (state-only) needs no chunking: nothing buffers
-            // per chunk, and one row per conversation matches the
-            // legacy stateDeltaFromGold shape
-            case Some(s) if s.collectTails => s.chunkTurns
-            case _ => Int.MaxValue
-          }
-          new SweepIterator(data, tl, cx, gap, limit, writer, chunkTurns)
+          new SweepIterator(data, cx, gap, limit, writer)
       }
     GraftInternalAccess.internalCreateDataFrame(spark, rdd, outSchema)
   }
@@ -324,185 +268,89 @@ object FusedSweep {
     * until its last member has been seen.
     */
   private final class SweepIterator(
-      in: Iterator[InternalRow], tails: Iterator[InternalRow],
+      in: Iterator[InternalRow],
       ctx: Iterator[InternalRow], gapSecs: Long,
       capacityLimit: Long = Long.MaxValue,
-      writer: graft.meta.StateSideWriter = null,
-      chunkTurns: Int = Int.MaxValue)
+      writer: graft.meta.StateSideWriter = null)
       extends Iterator[InternalRow] {
 
     // per-conversation accepted-row running state for the side-files:
     // the last accepted row's identity fields plus its session counter,
-    // flushed per turn-chunk and at conversation end — exactly what the
-    // legacy sliceMetaFromGold aggregate recomputed from the files
+    // flushed at conversation end — exactly what the stateDeltaFromGold
+    // aggregate recomputes from the files
     private var accAny = false
     private var accTsUs = 0L
     private var accTurn = 0
     private var accRole: UTF8String = _
     private var accSession = 0
-    private var accChunk = 0
 
     private def flushAcc(): Unit =
       if (accAny) {
-        writer.flushChunk(curConv, accChunk, accTsUs, accTurn, accRole, accSession)
+        writer.writeState(curConv, accTsUs, accTurn, accRole, accSession)
         accAny = false
       }
 
     // optimistic skew detection (see [[gold]])
     private var convDataRows = 0L
+    private var convCtxRows = 0L
     private def checkCapacity(n: Long, what: String): Unit =
       if (n > capacityLimit)
         throw new IllegalStateException(
           s"fused sweep capacity exceeded: conversation $curConv has > $capacityLimit " +
             s"$what this slice — route it to the segmented heavy path")
 
-    // single-row lookahead into the (conv-sorted) side-streams;
+    // single-row lookahead into the (conv, t)-sorted side-stream;
     // always a private copy (UnsafeRow buffers are reused by the
-    // underlying iterators)
-    private var tailLookahead: InternalRow = _
+    // underlying iterator)
     private var ctxLookahead: InternalRow = _
-    private var tailsDrained = false
-
-    private def nextTail(): InternalRow =
-      if (tailLookahead != null) { val t = tailLookahead; tailLookahead = null; t }
-      else if (tails.hasNext) tails.next()
-      else null
+    private var ctxDrained = false
 
     private def nextCtx(): InternalRow =
       if (ctxLookahead != null) { val t = ctxLookahead; ctxLookahead = null; t }
       else if (ctx.hasNext) ctx.next()
       else null
 
-    // Side-stream entries (frame tails + scalar context) feed the
-    // frames STREAMING in the contract-clean common case: chunk arrays
-    // are ts-sorted by construction and chunks arrive in (slice_start,
-    // chunk) order, so entries are globally non-decreasing and go
-    // straight into the ring buffers — O(1) extra memory no matter how
-    // large the conversation's committed context is (ADVICE r4: the
-    // unconditional buffer accumulated a mega's entire lookback in one
-    // task's heap). Only a ts-INVERTED conversation's multi-chunk
-    // tails concatenate out of order (chunk order follows turn_idx,
-    // not ts); on the FIRST out-of-order entry the feed falls back to
-    // buffer-and-sort, moving the already-fed prefix from the frames
-    // (fully resident — no eviction happens during the drain) into the
-    // buffer. Primitive growable arrays, NOT ArrayBuffer[Long]:
-    // boxing doubles the sweep's allocation rate.
-    private var sideCap = 1024
-    private var sideTs = new Array[Long](sideCap)
-    private var sideLen = new Array[Long](sideCap)
-    private var sideTool = new Array[String](sideCap)
-    private var sideN = 0
-    private var sideSorted = true
-    private var sideBuffering = false
-    private var sideFed = 0L
-
-    private def bufferEntry(t: Long, l: Long, tool: String): Unit = {
-      if (sideN == sideCap) {
-        val ncap = sideCap * 2
-        sideTs = java.util.Arrays.copyOf(sideTs, ncap)
-        sideLen = java.util.Arrays.copyOf(sideLen, ncap)
-        sideTool = java.util.Arrays.copyOf(sideTool, ncap)
-        sideCap = ncap
-      }
-      if (sideN > 0 && t < sideTs(sideN - 1)) sideSorted = false
-      sideTs(sideN) = t; sideLen(sideN) = l; sideTool(sideN) = tool
-      sideN += 1
-    }
-
-    private def clearSide(): Unit = {
-      java.util.Arrays.fill(sideTool.asInstanceOf[Array[AnyRef]], 0, sideN, null)
-      sideN = 0
-      sideSorted = true
-      sideBuffering = false
-      sideFed = 0L
-    }
-
-    /** Route one side entry: streaming into the frames while ts stays
-      * non-decreasing; buffered (for the drain-end sort) after the
-      * first inversion.
+    /** Apply every committed-context row of `conv` to the frames;
+      * called once per conversation, after its state rows and before
+      * its first data row. The side-stream is sorted by (conv_id, t),
+      * so the entries go straight into the ring buffers in ts order —
+      * O(1) extra memory no matter how large the conversation's
+      * committed context is, also for a ts-inverted conversation.
+      * Rows of earlier conversations (inactive this slice) are
+      * skipped; the first row of a later conversation is pushed back.
+      * Both streams sort conv_id with the same binary UTF8String
+      * ordering, so a single forward merge suffices.
       */
-    private def feedEntry(t: Long, l: Long, tool: String): Unit = {
-      if (sideBuffering) bufferEntry(t, l, tool)
-      else if (hasPrevData && t < prevDataTsSec) {
-        sideBuffering = true
-        f1h.foreachEntry(bufferEntry) // every fed entry, in fed order
-        f1h.clear(); f24h.clear(); f7d.clear()
-        hasPrevData = false // feedSide re-seeds after the sort
-        bufferEntry(t, l, tool)
-      } else {
-        sideFed += 1L
-        checkCapacity(sideFed + sideN, "committed context events")
-        f1h.add(t, l, tool); f24h.add(t, l, tool); f7d.add(t, l, tool)
-        prevDataTsSec = t
-        hasPrevData = true
-      }
-    }
-
-    /** Apply every tail/context row of `conv` to the frames; called
-      * once per conversation, after its state rows and before its
-      * first data row. Rows of earlier conversations (state-only,
-      * inactive this slice) are skipped; the first row of a later
-      * conversation is pushed back. All streams sort conv_id with the
-      * same binary UTF8String ordering, so a single forward merge
-      * suffices.
-      */
-    private def drainTails(conv: UTF8String): Unit = {
-      clearSide()
-      var t = nextTail()
-      while (t != null) {
-        val cmp = t.getUTF8String(T_CONV).compareTo(conv)
-        if (cmp > 0) { tailLookahead = t.copy(); t = null }
-        else { if (cmp == 0) feedTail(t); t = nextTail() }
-      }
+    private def drainCtx(conv: UTF8String): Unit = {
       var c = nextCtx()
       while (c != null) {
         val cmp = c.getUTF8String(C_CONV).compareTo(conv)
         if (cmp > 0) { ctxLookahead = c.copy(); c = null }
         else {
-          if (cmp == 0) {
-            if (!sawState)
-              throw new IllegalStateException(
-                "fused sweep: scalar context without carried state for conversation " +
-                  s"$curConv — context seeds frames only; pass the state delta chain")
-            feedEntry(c.getLong(C_T), c.getLong(C_LEN),
-              if (c.isNullAt(C_TOOL)) null else c.getUTF8String(C_TOOL).toString)
-          }
+          if (cmp == 0) feedCtx(c)
           c = nextCtx()
         }
       }
-      if (sideBuffering) feedSide()
     }
 
-    /** Feed the buffered side entries to the frames in ts order
-      * (inverted-conversation fallback only; the clean path streamed
-      * them already).
+    /** Feed one committed event's (ts, len, tool) to the frames. The
+      * lag chain and the session counter are NOT touched — the state
+      * rows carry them (st_last_ts/role/sessions equal the last
+      * committed event's).
       */
-    private def feedSide(): Unit = {
-      if (sideN == 0) return
-      val n = sideN
-      checkCapacity(n.toLong, "committed context events")
-      var order: Array[Int] = null
-      if (!sideSorted) {
-        // ts-inverted conversations only: restore value order so the
-        // frames see a valid timeline (stable for equal ts)
-        order = Array.range(0, n).sortBy(sideTs(_))
-      }
-      var i = 0
-      while (i < n) {
-        val j = if (order == null) i else order(i)
-        val t = sideTs(j)
-        if (hasPrevData && t < prevDataTsSec)
-          throw new IllegalStateException(
-            "fused sweep precondition violated: ts decreases within conversation " +
-              s"$curConv in side-stream context ($t < $prevDataTsSec)")
-        f1h.add(t, sideLen(j), sideTool(j))
-        f24h.add(t, sideLen(j), sideTool(j))
-        f7d.add(t, sideLen(j), sideTool(j))
-        prevDataTsSec = t
-        hasPrevData = true
-        i += 1
-      }
-      clearSide()
+    private def feedCtx(c: InternalRow): Unit = {
+      if (!sawState)
+        throw new IllegalStateException(
+          "fused sweep: scalar context without carried state for conversation " +
+            s"$curConv — context seeds frames only; pass the state delta chain")
+      convCtxRows += 1L
+      checkCapacity(convCtxRows, "committed context events")
+      val t = c.getLong(C_T)
+      val l = c.getLong(C_LEN)
+      val tool = if (c.isNullAt(C_TOOL)) null else c.getUTF8String(C_TOOL).toString
+      f1h.add(t, l, tool); f24h.add(t, l, tool); f7d.add(t, l, tool)
+      prevDataTsSec = t
+      hasPrevData = true
     }
 
     private val f1h = new FrameQ(3600L, trackDistinct = false)
@@ -524,7 +372,7 @@ object FusedSweep {
     // non-decreasing in turn and slices partition by ts), so a bronze
     // row with turn_idx <= stateTurn is a re-send of committed data —
     // dropped without needing the committed rows themselves in the
-    // lookback (this is what lets frame tails replace raw context).
+    // lookback (this is what lets narrow context replace raw rows).
     private var stateTurn = Int.MinValue
 
     // current emit group (same conv, same epoch second, _k == 2 rows)
@@ -540,6 +388,7 @@ object FusedSweep {
     private def resetConv(conv: UTF8String): Unit = {
       curConv = conv
       convDataRows = 0L
+      convCtxRows = 0L
       accAny = false
       accRole = null
       sawState = false
@@ -549,7 +398,7 @@ object FusedSweep {
       hasPrevData = false
       hasLastTurn = false
       stateTurn = Int.MinValue
-      tailsDrained = false
+      ctxDrained = false
       groupTsSec = Long.MinValue
       groupOpen = false
       f1h.clear(); f24h.clear(); f7d.clear()
@@ -600,39 +449,11 @@ object FusedSweep {
       prevDataTsSec = t
       hasPrevData = true
       if (k == 2 && writer != null) {
-        val turn = r.getInt(TURN)
-        val chunk = Math.floorDiv(turn, chunkTurns)
-        if (accAny && chunk != accChunk) flushAcc()
-        accChunk = chunk
         accAny = true
         accTsUs = r.getLong(TS)
-        accTurn = turn
+        accTurn = r.getInt(TURN)
         accRole = prevRole
         accSession = sessions
-        writer.addEntry(t, textLen, if (r.isNullAt(TOOL)) null else r.getUTF8String(TOOL))
-      }
-    }
-
-    /** Feed one frame-tail row's (ts, len, tool) entries. The lag
-      * chain and the session counter are NOT touched — the state rows
-      * carry them (st_last_ts/role/sessions equal the last committed
-      * event's, so the values the old raw-context path would have
-      * left behind).
-      */
-    private def feedTail(r: InternalRow): Unit = {
-      if (!sawState)
-        throw new IllegalStateException(
-          "fused sweep: frame-tail context without carried state for conversation " +
-            s"$curConv — tails seed frames only; pass the state delta chain")
-      val tsArr = r.getArray(T_TS)
-      val lenArr = r.getArray(T_LEN)
-      val toolArr = r.getArray(T_TOOL)
-      var i = 0
-      val n = tsArr.numElements()
-      while (i < n) {
-        feedEntry(tsArr.getLong(i), lenArr.getLong(i),
-          if (toolArr.isNullAt(i)) null else toolArr.getUTF8String(i).toString)
-        i += 1
       }
     }
 
@@ -649,7 +470,7 @@ object FusedSweep {
         val newConv = curConv == null || !conv.equals(curConv)
         if (newConv && groupOpen) { lookahead = r.copy(); return true }
         if (newConv) {
-          if (writer != null) flushAcc() // previous conversation's final chunk
+          if (writer != null) flushAcc() // previous conversation's state
           resetConv(conv.copy())
         }
         val k = r.getInt(K)
@@ -663,7 +484,7 @@ object FusedSweep {
           sawState = true
           if (r.getInt(TURN) > stateTurn) stateTurn = r.getInt(TURN)
         } else {
-          if (!tailsDrained) { drainTails(curConv); tailsDrained = true }
+          if (!ctxDrained) { drainCtx(curConv); ctxDrained = true }
           val turn = r.getInt(TURN)
           if (k == 2 && turn <= stateTurn) {
             // re-send of a committed turn (possibly beyond the frame
@@ -682,7 +503,7 @@ object FusedSweep {
         }
         r = nextRow()
       }
-      if (writer != null) flushAcc() // EOF: last conversation's final chunk
+      if (writer != null) flushAcc() // EOF: last conversation's state
       groupOpen
     }
 

@@ -12,11 +12,11 @@ import org.apache.spark.unsafe.types.UTF8String
 /** FUSED segmented gold path for skew-routed (mega) conversations:
   * ONE full-width exchange keyed (conv_id, time-segment) computing the
   * five trailing range features AND lag/gap AND sessionization in a
-  * single InternalRow sweep — replacing the legacy heavy stack's three
-  * full-width passes (ChunkedWindows/FastWindows frame pass +
-  * SegmentedSessions' two window passes).
+  * single InternalRow sweep — replacing the former heavy stack's three
+  * full-width passes (a chunked frame pass + two segmented session
+  * window passes).
   *
-  * Scheme (SURVEY.md §4.2.3 + SegmentedSessions' chain, fused):
+  * Scheme (SURVEY.md §4.2.3 + a segment-summary session chain, fused):
   *  - frames: every event row is replicated as a narrow FEEDER (no
   *    text — just (ts, len, tool)) into the following
   *    ceil(lookback/segmentSecs) segments; committed lookback context
@@ -29,12 +29,13 @@ import org.apache.spark.unsafe.types.UTF8String
   *    because rows tying on (ts, role, tool) cannot disagree on
   *    (ts, role)) produces per-(conv, seg) first/last/breaks; a tiny
   *    window chains them with the carried state into per-segment
-  *    (prev_ts, prev_role, session_offset) seeds — SegmentedSessions'
-  *    exact math — which broadcast to the sweep as a driver map
+  *    (prev_ts, prev_role, session_offset) seeds — exact, because a
+  *    session break depends only on the gap to the true predecessor —
+  *    which broadcast to the sweep as a driver map
   *    (O(heavy convs x segments) entries, the skew tail by
   *    construction).
   *
-  * Cost vs legacy: one narrow shuffle + one full-width shuffle
+  * Cost vs the former stack: one narrow shuffle + one full-width shuffle
   * instead of three full-width window exchanges; the dedup aggregate
   * stays (segment-local dedup is wrong when a duplicate turn carries
   * a divergent ts). This lowers the plain-vs-segmented crossover so

@@ -11,7 +11,7 @@ import org.apache.spark.sql.types._
   * /opt/spark/jars; the mapping is `snapshots`≈watermarks,
   * `files`≈lineage so a real deployment can swap Iceberg in).
   *
-  * Watermarks, lineage and table props are small JSON files written on
+  * Watermarks and lineage are small JSON files written on
   * the driver, one watermark and one lineage file per slice; the
   * carried conversation state (per-slice deltas and compaction
   * snapshots) is parquet. Every control-plane read a resume makes —
@@ -103,66 +103,6 @@ object Checkpoint {
   private val TsFmt = java.time.format.DateTimeFormatter
     .ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSSSSX")
     .withZone(java.time.ZoneOffset.UTC)
-
-  private def propsPath(outDir: String) = s"$outDir/_meta/table_props.json"
-
-  /** Effective-context-strategy marker (driver-written, like the
-    * watermarks): `context_tails` records whether EVERY committed slice
-    * of this table wrote frame-tail arrays. A resume whose effective
-    * strategy is `tails` over a table whose committed slices wrote
-    * state-only (rescan) deltas would silently read zero committed
-    * context ([[readFrameTails]] filters every null-tail row) — the
-    * guard in [[graft.Backfill.run]] fails loudly instead, mirroring
-    * the slice-width guard. None = pre-props table (probe the delta
-    * files via [[frameTailsEverWritten]]).
-    */
-  def readContextTailsProp(spark: SparkSession, outDir: String): Option[Boolean] = {
-    val p = new org.apache.hadoop.fs.Path(propsPath(outDir))
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val s = readDriverFile(fs, p)
-      if (s.contains("\"context_tails\": true")) Some(true)
-      else if (s.contains("\"context_tails\": false")) Some(false)
-      else None
-    }
-  }
-
-  def writeContextTailsProp(spark: SparkSession, outDir: String, tails: Boolean): Unit =
-    writeDriverFile(spark, propsPath(outDir), s"""{"context_tails": $tails}\n""")
-
-  /** Pre-props fallback for the strategy guard: does EVERY committed
-    * non-empty slice's delta dir carry frame-tail arrays? (ADVICE r5:
-    * the old any-tails probe passed a mixed rescan→tails history — the
-    * exact silent-context-loss case the guard exists to catch — and
-    * read every `slice_start=` dir, so a footerless partial side-file
-    * from a crashed, uncommitted run aborted the probe.) The read is
-    * restricted to the committed slices' dirs; a committed non-empty
-    * slice with NO delta dir at all fails conservatively. An absent /
-    * empty delta table is vacuously compatible — no committed context
-    * to lose. One tiny per-slice aggregate over the narrow tail_ts
-    * column; runs only on resume of a table without the props file.
-    */
-  def frameTailsEverWritten(
-      spark: SparkSession, outDir: String,
-      committedNonEmptySecs: Set[Long] = Set.empty): Boolean = {
-    if (committedNonEmptySecs.isEmpty) return true
-    val base = stateDir(outDir)
-    val dirP = new org.apache.hadoop.fs.Path(base)
-    val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dirP)) return false
-    val present = fs.listStatus(dirP).toSeq
-      .flatMap(_.getPath.getName.stripPrefix("slice_start=").toLongOption)
-      .filter(committedNonEmptySecs)
-      .toSet
-    if (present != committedNonEmptySecs) return false
-    val badSlices = spark.read.schema(deltaFileSchema).option("basePath", base)
-      .parquet(present.toSeq.map(s => s"$base/slice_start=$s"): _*)
-      .groupBy(col("slice_start"))
-      .agg(count(lit(1)).as("_n"), count(col("tail_ts")).as("_t"))
-      .filter(col("_n") > 0 && col("_t") === 0)
-    badSlices.isEmpty
-  }
 
   /** One watermark row as [[watermarks]] reads it back. */
   final case class Watermark(
@@ -401,16 +341,11 @@ object Checkpoint {
     StructField("st_last_ts", TimestampType, nullable = false),
     StructField("st_last_turn_idx", IntegerType, nullable = false),
     StructField("st_last_role", StringType, nullable = true),
-    StructField("st_sessions", IntegerType, nullable = false),
-    StructField("chunk", IntegerType, nullable = false),
-    StructField("tail_ts", ArrayType(LongType, containsNull = false), nullable = true),
-    StructField("tail_len", ArrayType(LongType, containsNull = false), nullable = true),
-    StructField("tail_tool", ArrayType(StringType, containsNull = true), nullable = true)))
+    StructField("st_sessions", IntegerType, nullable = false)))
 
-  /** Append slice-meta rows (the heavy-path aggregate's output, shaped
-    * like [[sliceMetaFromGold]]/[[stateDeltaFromGold]]) to a slice's
-    * delta dir — same parquet format as the sweep's per-task
-    * side-files, one dir, one read. Append mode: the side-files land
+  /** Append slice-meta rows (the heavy-path aggregate's output,
+    * [[stateDeltaFromGold]]) to a slice's delta dir — same parquet
+    * format as the sweep's per-task side-files, one dir, one read. Append mode: the side-files land
     * during the gold write; this lands after, for the few skew-routed
     * conversations the sweep never saw.
     */
@@ -439,158 +374,73 @@ object Checkpoint {
         readDeltaTable(spark, outDir, minExclusive = snap, maxExclusive = Some(uptoExclusiveSec))
           .filter(col("slice_start") < uptoExclusiveSec &&
             snap.map(s => col("slice_start") > s).getOrElse(lit(true)))
-          .select(convStateSchema.fieldNames.map(col).toSeq :+
-            coalesce(col("chunk"), lit(0)).as("chunk") :+
-            col("slice_start").cast("long"): _*)
       else emptyDeltas(spark)
     snap match {
       case Some(s) =>
         spark.read.schema(convStateSchema).parquet(snapPath(outDir, s))
-          .select(convStateSchema.fieldNames.map(col).toSeq :+ lit(0).as("chunk") :+
-            lit(s).as("slice_start"): _*)
+          .select(convStateSchema.fieldNames.map(col).toSeq :+ lit(s).as("slice_start"): _*)
           .unionByName(deltas)
       case None => deltas
     }
   }
 
   private def emptyDeltas(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(convStateSchema.fields.toSeq ++ Seq(
-        StructField("chunk", IntegerType, nullable = false),
-        StructField("slice_start", LongType, nullable = false))))
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], deltaFileSchema)
 
-  val frameTailSchema: StructType = StructType(Seq(
-    StructField("conv_id", StringType, nullable = false),
-    StructField("chunk", IntegerType, nullable = false),
-    StructField("tail_ts", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("tail_len", ArrayType(LongType, containsNull = false), nullable = false),
-    StructField("tail_tool", ArrayType(StringType, containsNull = true), nullable = false)))
-
-  /** On-disk schema of the fused slice-meta (state delta + frame tail)
-    * rows. Explicit on every read: files written by the plain
-    * state-only writer (tests, older tables) surface null tail
-    * columns instead of failing schema inference.
+  /** Rows of the state-delta table: the conversation state plus the
+    * `slice_start` partition value. Explicit on every read (no schema
+    * inference job).
     */
   private val deltaFileSchema: StructType = StructType(
-    convStateSchema.fields.toSeq ++ Seq(
-      StructField("chunk", IntegerType, nullable = true),
-      StructField("tail_ts", ArrayType(LongType, containsNull = false), nullable = true),
-      StructField("tail_len", ArrayType(LongType, containsNull = false), nullable = true),
-      StructField("tail_tool", ArrayType(StringType, containsNull = true), nullable = true),
-      StructField("slice_start", LongType, nullable = false)))
-
-  private val deltaTableCols: Seq[String] =
-    deltaFileSchema.fieldNames.toSeq.filterNot(_ == "slice_start") :+ "slice_start"
+    convStateSchema.fields :+ StructField("slice_start", LongType, nullable = false))
 
   /** The whole state-delta table: parquet slice dirs — sweep
-    * side-files, the heavy-path aggregate's appends, compaction
-    * snapshots, and pre-r5 tables all share the format. Dir names are
+    * side-files and the heavy-path aggregate's appends share the
+    * format. Dir names are
     * range-pruned DRIVER-side first — `(minExclusive, maxExclusive)`
     * on the slice_start value — so the read lists only the dirs a
     * chain read actually touches (post-compaction: <= MaxStateChain),
-    * not every dir an old backfill ever wrote. Returns unified
-    * deltaFileSchema columns with slice_start:long.
+    * not every dir an old backfill ever wrote. Returns the
+    * deltaFileSchema columns.
     */
   private[graft] def readDeltaTable(
       spark: SparkSession, outDir: String,
       minExclusive: Option[Long] = None, maxExclusive: Option[Long] = None): DataFrame = {
     val base = stateDir(outDir)
-    val dirP = new org.apache.hadoop.fs.Path(base)
-    val fs = dirP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val empty = spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      StructType(deltaFileSchema.fields.filterNot(_.name == "slice_start") :+
-        StructField("slice_start", LongType, nullable = false)))
-    if (!fs.exists(dirP)) return empty
-    val sliceDirs = fs.listStatus(dirP).toSeq
-      .filter(_.getPath.getName.startsWith("slice_start="))
-      .flatMap(s => s.getPath.getName.stripPrefix("slice_start=").toLongOption.map(s.getPath -> _))
+    val sliceDirs = numberedDirs(spark, base, "slice_start=")
       .filter { case (_, sec) =>
         minExclusive.forall(sec > _) && maxExclusive.forall(sec < _)
       }
-    if (sliceDirs.isEmpty) return empty
-    spark.read.schema(deltaFileSchema).option("basePath", base)
+    if (sliceDirs.isEmpty) emptyDeltas(spark)
+    else spark.read.schema(deltaFileSchema).option("basePath", base)
       .parquet(sliceDirs.map(_._1.toString): _*)
-      .select(deltaTableCols.dropRight(1).map(col) :+
-        col("slice_start").cast("long").as("slice_start"): _*)
+      .select(deltaFileSchema.fieldNames.map(col).toSeq: _*)
   }
 
-  /** ONE aggregate deriving both per-slice metadata products from the
-    * written gold: the conversation-state delta AND the frame-tail
-    * arrays, keyed by (conv_id, chunk). Fusing them halves the
-    * per-slice metadata jobs — per-slice FIXED costs (job scheduling,
-    * an extra scan) are pure Amdahl residue that caps N->4N scaling.
-    * Chunking bounds the aggregation buffer per group: a conversation
-    * contributes ceil(turns/chunkTurns) rows, each with at most
-    * chunkTurns-entry arrays. The per-chunk st_* columns are that
-    * chunk's running state; readers resolve the conversation state as
-    * the row with the highest (slice_start, chunk) — exact because
-    * turn_idx and session_id are non-decreasing in turn order (the
+  /** `(path, n)` for each `<prefix><n>` subdirectory of `dir` (a
+    * partition dir named by a long), listed on the driver with no
+    * Spark job; empty when `dir` does not exist.
+    */
+  private[graft] def numberedDirs(
+      spark: SparkSession, dir: String, prefix: String): Seq[(org.apache.hadoop.fs.Path, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.filter(_.isDirectory).flatMap { st =>
+      val name = st.getPath.getName
+      if (name.startsWith(prefix)) name.stripPrefix(prefix).toLongOption.map(st.getPath -> _)
+      else None
+    }
+  }
+
+  /** Slice state delta from written gold: the per-conversation
+    * carried state as a plain map-side-combinable max_by — the same
+    * rows the sweep's side-files hold (StateSideFileSpec). Used for
+    * skew-routed conversations, which the sweep never sees. The
     * max_by key is (turn_idx, ts), NOT (ts, turn_idx): the dedup
     * horizon must be the highest committed ORDINAL even for
     * contract-violating ts-inverted conversations, and the lag chain
-    * seeds in turn order, matching the declarative windows).
-    *
-    * `sliceEndSec` trims dead entries at write time: an event with
-    * `ts < sliceEnd - lookback` can never fall inside any future
-    * slice's widest frame (future rows have ts >= sliceEnd), so for
-    * slices wider than the lookback the arrays shrink accordingly.
-    * Tails are collected for EVERY conversation including
-    * skew-routed ones — a heavy conversation that goes quiet returns
-    * to the light path (the dispatch is per-slice cost, not
-    * cumulative size), and its frames must still see the committed
-    * lookback events.
-    */
-  def sliceMetaFromGold(
-      gold: DataFrame,
-      sliceEndSec: Long = Long.MaxValue,
-      lookbackSecs: Long = 604800L,
-      chunkTurns: Int = 65536): DataFrame = {
-    val entry = struct(
-      unix_timestamp(col("ts")).as("t"),
-      col("turn_idx").as("tn"),
-      col("text_len").as("len"),
-      col("tool").as("tool"))
-    // collect_list drops nulls map-side, so trimmed events never ride
-    // this shuffle
-    val guarded =
-      if (sliceEndSec == Long.MaxValue) entry
-      else when(unix_timestamp(col("ts")) >= sliceEndSec - lookbackSecs, entry)
-    gold
-      .select(col("conv_id"),
-        floor(col("turn_idx") / chunkTurns).cast("int").as("chunk"),
-        col("ts"), col("turn_idx"), col("role"), col("session_id"),
-        guarded.as("_e"))
-      .groupBy(col("conv_id"), col("chunk"))
-      .agg(
-        // ONE max_by buffer for the three last-row fields (three
-        // separate max_bys triple the per-row aggregation work)
-        max_by(struct(col("ts").as("st_last_ts"), col("turn_idx").as("st_last_turn_idx"),
-          col("role").as("st_last_role")), struct(col("turn_idx"), col("ts"))).as("_st"),
-        max(col("session_id")).as("st_sessions"),
-        sort_array(collect_list(col("_e"))).as("_ents"))
-      .select(col("conv_id"), col("chunk"),
-        col("_st.st_last_ts").as("st_last_ts"),
-        col("_st.st_last_turn_idx").as("st_last_turn_idx"),
-        col("_st.st_last_role").as("st_last_role"), col("st_sessions"),
-        // null (not empty) when no entries were collected: consumers
-        // probe element_at(tail_ts, -1), which is an ANSI error on an
-        // empty array but null-propagating on null
-        when(size(col("_ents")) > 0,
-          transform(col("_ents"), e => e.getField("t"))).as("tail_ts"),
-        when(size(col("_ents")) > 0,
-          transform(col("_ents"), e => e.getField("len"))).as("tail_len"),
-        when(size(col("_ents")) > 0,
-          transform(col("_ents"), e => e.getField("tool"))).as("tail_tool"))
-  }
-
-  /** State-ONLY slice delta (rescan context strategy,
-    * [[graft.Backfill]]): the per-conversation carried state without
-    * the frame-tail arrays — a plain map-side-combinable max_by, no
-    * collect_list/sort_array. Used when the lookback is not much wider
-    * than a slice: there, re-reading the narrow committed gold columns
-    * costs less than materializing every slice's events into arrays
-    * (measured: the tail aggregate was ~2 s per 1.4M-row slice at
-    * local[32], vs ~0.5 s for this).
+    * seeds in turn order, matching the declarative windows.
     */
   def stateDeltaFromGold(gold: DataFrame): DataFrame =
     gold.groupBy(col("conv_id"))
@@ -598,63 +448,21 @@ object Checkpoint {
         max_by(struct(col("ts").as("st_last_ts"), col("turn_idx").as("st_last_turn_idx"),
           col("role").as("st_last_role")), struct(col("turn_idx"), col("ts"))).as("_st"),
         max(col("session_id")).as("st_sessions"))
-      .select(col("conv_id"), lit(0).as("chunk"),
+      .select(col("conv_id"),
         col("_st.st_last_ts").as("st_last_ts"),
         col("_st.st_last_turn_idx").as("st_last_turn_idx"),
         col("_st.st_last_role").as("st_last_role"), col("st_sessions"))
 
-  /** Frame tails overlapping the lookback window [startSec - lookback,
-    * startSec), read from the fused slice-meta table (north rule:
-    * "streams sorted data files to avoid full shuffles"). The sliding
-    * frames (1h/24h counts+sums, 24h distinct tools, 7d avg) need only
-    * (epoch_sec, text_length, tool) per committed event — not the
-    * full-width silver row, and crucially not the text column that
-    * dominates silver bytes — so the NEXT slices seed their frames
-    * from these pre-aggregated ts-sorted array rows instead of
-    * re-scanning + re-shuffling + re-sorting the 7-day silver
-    * lookback: per-slice context volume drops from O(turns in
-    * lookback) full-width rows to O(conversations touched) narrow
-    * array rows riding the same single exchange as the state
-    * pseudo-rows. Directory-level pruning via the slice_start
-    * partition column; a row filter drops chunks whose last event
-    * already falls out of the widest frame. Parquet column pruning
-    * keeps this read free for the (state-only) delta-chain read over
-    * the same files.
-    */
-  def readFrameTails(
-      spark: SparkSession, outDir: String, startSec: Long, sliceSecs: Long,
-      lookbackSecs: Long): DataFrame =
-    if (exists(spark, stateDir(outDir)))
-      readDeltaTable(spark, outDir,
-        minExclusive = Some(startSec - lookbackSecs - sliceSecs),
-        maxExclusive = Some(startSec))
-        // redundant with the driver-side dir pruning, but keeps the
-        // range visible as PartitionFilters in the scan plan (and
-        // guards against racy dir listings on object stores)
-        .filter(col("slice_start") > startSec - lookbackSecs - sliceSecs &&
-          col("slice_start") < startSec &&
-          coalesce(element_at(col("tail_ts"), -1), lit(Long.MinValue)) >=
-            startSec - lookbackSecs)
-        .select(frameTailSchema.fieldNames.map(col) :+ col("slice_start").cast("long"): _*)
-    else
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        StructType(frameTailSchema.fields :+ StructField("slice_start", LongType, nullable = false)))
-
   /** Latest state per conversation from a delta-chain read. */
   def latestConvState(deltas: DataFrame): DataFrame = {
     val cols = convStateSchema.fieldNames.filterNot(_ == "conv_id")
-    // per-chunk running state is exact at the last chunk (ts, turn_idx
-    // and session_id are non-decreasing in turn order), so the highest
-    // (slice_start, chunk) row IS the conversation state
-    val ord = if (deltas.columns.contains("chunk"))
-      struct(col("slice_start"), col("chunk")) else struct(col("slice_start"))
     deltas.groupBy(col("conv_id"))
-      .agg(max_by(struct(cols.map(col): _*), ord).as("_s"))
+      .agg(max_by(struct(cols.map(col): _*), col("slice_start")).as("_s"))
       .select(col("conv_id") +: cols.map(c => col(s"_s.$c")): _*)
   }
 
   /** Invalidate all checkpoint state for slices starting at or after
-    * `fromSec`: watermark rows, state/tail delta dirs, and snapshots.
+    * `fromSec`: watermark rows, state delta dirs, and snapshots.
     * The next [[graft.Backfill.run]] recomputes exactly those slices
     * (idempotent slice-dir overwrites); earlier slices stay committed.
     * Used by late-data reprocessing — a late row landing in a
@@ -701,13 +509,9 @@ object Checkpoint {
     * Driver-side FS listing; no Spark job.
     */
   def uncompactedDeltaDirs(spark: SparkSession, outDir: String, uptoExclusiveSec: Long): Int = {
-    val dir = new org.apache.hadoop.fs.Path(stateDir(outDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return 0
     val snap = latestSnapshotSec(spark, outDir, uptoExclusiveSec)
-    fs.listStatus(dir).count { st =>
-      st.getPath.getName.stripPrefix("slice_start=").toLongOption.exists(s =>
-        s < uptoExclusiveSec && snap.forall(s > _))
+    numberedDirs(spark, stateDir(outDir), "slice_start=").count { case (_, s) =>
+      s < uptoExclusiveSec && snap.forall(s > _)
     }
   }
 

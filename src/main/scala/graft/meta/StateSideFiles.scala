@@ -9,23 +9,21 @@ import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-task state side-files: the fused sweep emits each slice's
-  * conversation-state delta (and, under the tails context strategy,
-  * the trimmed frame-tail arrays) as a side product of the gold-write
-  * tasks themselves, instead of a separate post-write aggregate job
-  * over the written files.
+  * conversation-state delta — one row per conversation — as a side
+  * product of the gold-write tasks themselves, instead of a separate
+  * post-write aggregate job over the written files.
   *
   * Why: the state-delta aggregate was a ~2-3.5 s/slice FIXED job at 16
   * cores (scan + shuffle + write scheduling) — pure Amdahl residue
   * that caps N->4N scaling. The sweep already streams every
   * conversation's rows in sorted order and knows, at conversation end,
   * exactly what the aggregate recomputed: the last accepted row's
-  * (ts, turn_idx, role, session) and the accepted events inside the
-  * lookback of slice end. Emitting them inline costs O(1) per row.
+  * (ts, turn_idx, role, session). Emitting it inline costs O(1) per
+  * row.
   *
   * Format: PARQUET, written task-side through Spark's own
   * `ParquetWriteSupport` (InternalRow -> parquet; the class is public
@@ -46,16 +44,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * SPECULATION (two attempts racing one path) — speculation is off by
   * default and incompatible with v2 commits anyway.
   */
-final case class StateSideSink(
-    dir: String,
-    /** events with epoch-second ts below this can never fall in a
-      * future slice's widest frame — not collected (same trim rule as
-      * [[Checkpoint.sliceMetaFromGold]]) */
-    minKeepSec: Long,
-    /** collect tail arrays (tails strategy) or state-only (rescan) */
-    collectTails: Boolean,
-    chunkTurns: Int,
-    conf: SerializableHadoopConf)
+final case class StateSideSink(dir: String, conf: SerializableHadoopConf)
 
 /** Minimal serializable Hadoop Configuration carrier (the stock class
   * is not Serializable; Configuration implements Writable).
@@ -89,50 +78,14 @@ private[meta] object StateSideWriter {
   */
 final class StateSideWriter(sink: StateSideSink) {
   private var out: ParquetWriter[InternalRow] = _
-  // tail-entry buffer of the CURRENT chunk (bounded by chunkTurns)
-  private var cap = 256
-  private var ts = new Array[Long](cap)
-  private var len = new Array[Long](cap)
-  private var tool = new Array[AnyRef](cap) // UTF8String | null
-  private var n = 0
 
-  def addEntry(t: Long, l: Long, tl: UTF8String): Unit =
-    if (sink.collectTails && t >= sink.minKeepSec) {
-      if (n == cap) {
-        val nc = cap * 2
-        ts = java.util.Arrays.copyOf(ts, nc)
-        len = java.util.Arrays.copyOf(len, nc)
-        tool = java.util.Arrays.copyOf(tool, nc)
-        cap = nc
-      }
-      ts(n) = t; len(n) = l; tool(n) = if (tl == null) null else tl.copy()
-      n += 1
-    }
-
-  /** Write one (conv, chunk) row: the chunk's running state plus its
-    * buffered live entries (null arrays when none, matching the
-    * aggregate's `when(size > 0)` null). Entries were accepted in turn
-    * order with non-decreasing ts, i.e. already in the aggregate's
-    * sort_array order.
+  /** Write one conversation's state row: its last accepted row's
+    * (ts, turn_idx, role) and session counter.
     */
-  def flushChunk(convId: UTF8String, chunk: Int, lastTsUs: Long, lastTurn: Int,
+  def writeState(convId: UTF8String, lastTsUs: Long, lastTurn: Int,
       lastRole: UTF8String, sessions: Int): Unit = {
     ensureOpen()
-    val row = new Array[Any](9)
-    row(0) = convId
-    row(1) = lastTsUs
-    row(2) = lastTurn
-    row(3) = lastRole
-    row(4) = sessions
-    row(5) = chunk
-    if (n > 0) {
-      row(6) = new GenericArrayData(java.util.Arrays.copyOf(ts, n))
-      row(7) = new GenericArrayData(java.util.Arrays.copyOf(len, n))
-      row(8) = new GenericArrayData(java.util.Arrays.copyOf(tool, n))
-    }
-    out.write(new GenericInternalRow(row))
-    java.util.Arrays.fill(tool, 0, n, null)
-    n = 0
+    out.write(new GenericInternalRow(Array[Any](convId, lastTsUs, lastTurn, lastRole, sessions)))
   }
 
   private def ensureOpen(): Unit =

@@ -8,13 +8,12 @@ import graft.gen.TranscriptGen
 import graft.gold.{FeatureWindows, FusedSweep}
 import graft.meta.Checkpoint
 import graft.silver.SilverBuilder
-import graft.skew.SegmentedSessions
 
 /** The fused InternalRow sweep must be row-identical to the
   * declarative pipeline (SilverBuilder dedup + FeatureWindows range
   * features + lag/sessionize) — including injected duplicate rows,
   * null conv_ids filtered upstream, epoch-second ties, and session
-  * boundaries. Also covers the segmented heavy-path twin.
+  * boundaries. Also covers the heavy-path twin.
   */
 class FusedSweepSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -80,28 +79,6 @@ class FusedSweepSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("precondition") ||
       Option(ex.getCause).exists(_.getMessage.contains("precondition")))
-  }
-
-  test("segmented heavy path == single-window withState (with carried state)") {
-    import spark.implicits._
-    val mega = TranscriptGen.transcripts(spark, nConvs = 2, avgTurns = 2,
-      megaConvs = 2, megaTurns = 4000)
-    val silver = SilverBuilder.build(mega)
-    val ranged = FeatureWindows.rangeFeatures(silver)
-    val state = Seq(
-      ("conv_000000000", java.sql.Timestamp.valueOf("2023-12-31 23:59:00"), 7, "assistant", 3),
-      ("conv_000000001", java.sql.Timestamp.valueOf("2024-01-01 00:30:00"), 2, "user", 1)
-    ).toDF("conv_id", "st_last_ts", "st_last_turn_idx", "st_last_role", "st_sessions")
-    val plain = Backfill.withState(ranged, state, 1800L)
-    val segmented = SegmentedSessions.withStateSegmented(
-      ranged, state.drop("st_last_turn_idx"), 1800L, segmentSecs = 86400L)
-    val cols = goldCols.filterNot(_ == "dt")
-    val (a, b) = (plain.select(cols.map(col): _*), segmented.select(cols.map(col): _*))
-    assert(a.count() == b.count())
-    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
-    // and the segmented plan runs the big window over (conv, segment)
-    val segPlan = segmented.queryExecution.executedPlan.toString
-    assert(segPlan.contains("_seg"), segPlan)
   }
 
   test("heavyGold == fused light path on the same mega-conversation slice") {

@@ -55,6 +55,14 @@ class PruningSpec extends AnyFunSuite {
     silver.write.parquet(s"$dir/silver/slice_id=s1640995200")
     val start = 1704931200L
     val ctx = Backfill.contextRead(spark, s"$dir/silver", "s1704931200", start, 691200L)
+    // the relation is built over the overlapping slice dirs only: the
+    // file listing never touches the far-away slice
+    val roots = ctx.queryExecution.optimizedPlan.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
+        l.relation.asInstanceOf[org.apache.spark.sql.execution.datasources.HadoopFsRelation]
+          .location.rootPaths.map(_.getName)
+    }.flatten
+    assert(roots == Seq("slice_id=s1704240000"), s"relation roots: $roots")
     val scan = ctx.queryExecution.executedPlan.toString
     assert(scan.contains("PartitionFilters") && scan.contains("slice_id"),
       s"expected slice_id PartitionFilters in the context read:\n$scan")

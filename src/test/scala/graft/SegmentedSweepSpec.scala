@@ -12,8 +12,8 @@ import graft.silver.SilverBuilder
 
 /** The fused segmented heavy path (round-5: frames + lag + sessions in
   * one (conv, seg) exchange, chain seeds from a narrow summary pass)
-  * must be row-identical to both the legacy three-stage heavy stack
-  * and the declarative single-shot — including gaps wider than the
+  * must be row-identical to both the light fused sweep and the
+  * declarative single-shot — including gaps wider than the
   * replication reach (the seed supplies the true predecessor), ts ties
   * straddling segment boundaries, duplicate turns (dedup-lite summary
   * correctness), and carried cross-slice state.
@@ -78,16 +78,14 @@ class SegmentedSweepSpec extends AnyFunSuite {
       .unionByName(extra)
   }
 
-  test("fused segmented == legacy heavy stack == light sweep (no carried state)") {
+  test("fused segmented == light sweep == declarative (no carried state)") {
     val bronze = nastyBronze.cache()
     val sliceBronze = SilverBuilder.validate(bronze)
     val viaLight = FusedSweep.gold(emptyState, emptyContext, sliceBronze)
     val fused = Backfill.heavyGold(emptyState, emptyContext, sliceBronze,
-      start = 0L, gapSecs = 1800L, segmentSecs = 2L * 86400, fusedSegmented = true)
-    val legacy = Backfill.heavyGold(emptyState, emptyContext, sliceBronze,
-      start = 0L, gapSecs = 1800L, segmentSecs = 2L * 86400, fusedSegmented = false)
+      start = 0L, gapSecs = 1800L, segmentSecs = 2L * 86400)
     assertSame(fused, viaLight, "fused vs light")
-    assertSame(fused, legacy, "fused vs legacy")
+    assertSame(fused, FeatureWindows.gold(SilverBuilder.build(bronze)), "fused vs declarative")
     bronze.unpersist()
   }
 
@@ -125,18 +123,14 @@ class SegmentedSweepSpec extends AnyFunSuite {
     assert(shortFeeders == 1L, "short ships only its own ctx feeder")
   }
 
-  test("backfill with mid-size routed conversations == single-shot (fused heavy, both strategies)") {
+  test("backfill with mid-size routed conversations == single-shot (fused heavy)") {
     val bronze = TranscriptGen.transcripts(spark, nConvs = 15, avgTurns = 12,
       megaConvs = 2, megaTurns = 3000, injectAnomalies = true)
       .unionByName(nastyBronze).cache()
-    val oracle = FeatureWindows.gold(SilverBuilder.build(bronze))
-    for (strategy <- Seq("tails", "rescan")) {
-      val dir = Files.createTempDirectory(s"segsweep_$strategy").toString
-      Backfill.run(spark, bronze, dir, start, 8L * 86400, 5,
-        skewHeavyThreshold = Some(400L), segmentSecs = 2L * 86400,
-        contextStrategy = strategy)
-      assertSame(spark.read.parquet(s"$dir/gold"), oracle, strategy)
-    }
+    val dir = Files.createTempDirectory("segsweep").toString
+    Backfill.run(spark, bronze, dir, start, 8L * 86400, 5,
+      skewHeavyThreshold = Some(400L), segmentSecs = 2L * 86400)
+    assertSame(spark.read.parquet(s"$dir/gold"), FeatureWindows.gold(SilverBuilder.build(bronze)))
     bronze.unpersist()
   }
 }

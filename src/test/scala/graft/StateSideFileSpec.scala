@@ -11,10 +11,10 @@ import graft.meta.Checkpoint
 
 /** Per-task state side-files (round-5): the sweep tasks emit the
   * slice-meta rows the legacy post-write aggregate used to compute —
-  * this spec asserts the two are EQUAL row-for-row, per slice, under
-  * both context strategies, including a skew-routed conversation
-  * (whose meta still comes from the aggregate, appended as JSON to the
-  * same dir).
+  * this spec asserts the two are EQUAL row-for-row, per slice, for
+  * slices wider and narrower than the 7-day lookback, including a
+  * skew-routed conversation (whose meta still comes from the
+  * aggregate, appended to the same dir).
   */
 class StateSideFileSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -30,26 +30,18 @@ class StateSideFileSpec extends AnyFunSuite {
         s"\nexpected-only:\n${b.exceptAll(a).limit(5).collect().mkString("\n")}")
   }
 
-  private def checkParity(dir: String, useTails: Boolean): Unit = {
+  private def checkParity(dir: String, width: Long = sliceSecs, n: Int = nSlices): Unit = {
     val gold = spark.read.parquet(s"$dir/gold")
-    val cols = Seq("conv_id", "chunk", "st_last_ts", "st_last_turn_idx",
-      "st_last_role", "st_sessions", "tail_ts", "tail_len", "tail_tool")
-    for (i <- 0 until nSlices) {
-      val s = start + i * sliceSecs
+    val cols = Checkpoint.convStateSchema.fieldNames.toSeq
+    for (i <- 0 until n) {
+      val s = start + i * width
       val goldSlice = gold.filter(col("slice_id") === Backfill.sliceId(s))
       if (goldSlice.limit(1).count() > 0) {
-        val expected = (if (useTails)
-          Checkpoint.sliceMetaFromGold(goldSlice, s + sliceSecs, 604800L)
-        else
-          Checkpoint.stateDeltaFromGold(goldSlice)
-            .withColumn("tail_ts", lit(null).cast("array<long>"))
-            .withColumn("tail_len", lit(null).cast("array<long>"))
-            .withColumn("tail_tool", lit(null).cast("array<string>")))
-          .select(cols.map(col): _*)
+        val expected = Checkpoint.stateDeltaFromGold(goldSlice).select(cols.map(col): _*)
         val actual = Checkpoint.readDeltaTable(spark, dir,
           minExclusive = Some(s - 1), maxExclusive = Some(s + 1))
           .select(cols.map(col): _*)
-        assertSameRows(actual, expected, s"slice s$s (tails=$useTails)")
+        assertSameRows(actual, expected, s"slice s$s")
       }
     }
   }
@@ -58,16 +50,16 @@ class StateSideFileSpec extends AnyFunSuite {
     val bronze = TranscriptGen.transcripts(spark, nConvs = 25, avgTurns = 18,
       injectAnomalies = true).cache()
     val dir = Files.createTempDirectory("ssf_rescan").toString
-    Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices, contextStrategy = "rescan")
-    checkParity(dir, useTails = false)
+    Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices)
+    checkParity(dir)
   }
 
-  test("side-files == legacy aggregate, tails strategy (trimmed arrays)") {
+  test("side-files == legacy aggregate, 2-day slices under the 7-day lookback") {
     val bronze = TranscriptGen.transcripts(spark, nConvs = 25, avgTurns = 18,
       injectAnomalies = true).cache()
-    val dir = Files.createTempDirectory("ssf_tails").toString
-    Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices, contextStrategy = "tails")
-    checkParity(dir, useTails = true)
+    val dir = Files.createTempDirectory("ssf_narrow").toString
+    Backfill.run(spark, bronze, dir, start, 2L * 86400, nSlices)
+    checkParity(dir, width = 2L * 86400)
   }
 
   test("side-files == legacy aggregate with a skew-routed mega (mixed sweep + aggregate rows)") {
@@ -75,16 +67,13 @@ class StateSideFileSpec extends AnyFunSuite {
       megaConvs = 2, megaTurns = 2000, injectAnomalies = true).cache()
     val dir = Files.createTempDirectory("ssf_skew").toString
     Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices,
-      skewHeavyThreshold = Some(300L), segmentSecs = 2L * 86400, contextStrategy = "tails")
-    checkParity(dir, useTails = true)
+      skewHeavyThreshold = Some(300L), segmentSecs = 2L * 86400)
+    checkParity(dir)
   }
 
-  test("multi-chunk side-files: a conversation spanning chunk boundaries carries per-chunk state") {
-    // chunkTurns is 65536 in production; the aggregate's chunking rule
-    // (floor(turn/65536)) must match the sweep's flush boundaries for a
-    // conversation crossing one — use a 70k-turn conversation, light
-    // path (no threshold)
-    import spark.implicits._
+  test("a 70k-turn conversation writes one side-file state row per slice") {
+    // light path (no threshold); the side-file holds the
+    // conversation's last accepted row however many turns it has
     val n = 70000
     val conv = spark.range(n).select(
       lit("big_conv").as("conv_id"),
@@ -93,11 +82,11 @@ class StateSideFileSpec extends AnyFunSuite {
       concat(lit("turn text "), col("id")).as("text"),
       when(pmod(col("id"), lit(13)) === 0, concat(lit("tool_"), pmod(col("id"), lit(5)))).as("tool"),
       timestamp_seconds(lit(start + 1000) + col("id") * 3).as("ts"))
-    val dir = Files.createTempDirectory("ssf_chunks").toString
-    Backfill.run(spark, conv, dir, start, sliceSecs, 2, contextStrategy = "tails")
-    checkParity(dir, useTails = true)
-    val chunks = Checkpoint.readDeltaTable(spark, dir)
-      .filter(col("conv_id") === "big_conv").select("chunk").distinct().count()
-    assert(chunks == 2, s"expected 2 turn-chunks for 70k turns, got $chunks")
+    val dir = Files.createTempDirectory("ssf_big").toString
+    Backfill.run(spark, conv, dir, start, sliceSecs, 2)
+    checkParity(dir, n = 2)
+    val big = Checkpoint.readDeltaTable(spark, dir).filter(col("conv_id") === "big_conv")
+    assert(big.count() == 1L, s"expected one state row, got ${big.count()}")
+    assert(big.select("st_last_turn_idx").head().getInt(0) == n - 1)
   }
 }

@@ -8,12 +8,13 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.TranscriptGen
 import graft.gold.FeatureWindows
-import graft.meta.Checkpoint
 import graft.silver.SilverBuilder
 
-/** Round-3 backfill behaviors: frame-tail context (light path reads no
-  * raw silver), ts-inversion catch-and-reroute, horizon-free
-  * committed-turn dedup, and tail-read partition pruning.
+/** Cross-slice context behaviors of the backfill: committed lookback
+  * events reach later slices as a narrow rescan of committed gold, the
+  * ts-inversion catch-and-reroute, horizon-free committed-turn dedup,
+  * and the per-slice heavy/light dispatch — each bit-equal to the
+  * single-shot declarative pipeline.
   */
 class TailContextSpec extends AnyFunSuite {
   private lazy val spark = SparkTestBase.spark
@@ -60,6 +61,38 @@ class TailContextSpec extends AnyFunSuite {
       FeatureWindows.gold(SilverBuilder.build(bronze)))
   }
 
+  test("ts-inverted conversation continued in the next slice == single-shot") {
+    // slice 0 ends with two inverted conversations inside slice 1's
+    // lookback; their committed rows come back to slice 1 as rescan
+    // context out of turn order (ts-sorted), and slice 1's own rows
+    // are contract-clean, so slice 1 runs them on the light sweep
+    val s1 = start + sliceSecs
+    val inv = rows(Seq(
+      // last committed turn by ordinal (turn 4) is NOT the latest by ts
+      ("inv_c", 0, "user", "opening words", None, s1 - 3 * 86400),
+      ("inv_c", 1, "assistant", "a reply", Some("t1"), s1 - 2 * 86400),
+      ("inv_c", 2, "tool", "clock went back", Some("t2"), s1 - 2 * 86400 - 7200),
+      ("inv_c", 3, "user", "later text", None, s1 - 20000),
+      ("inv_c", 4, "assistant", "back again", Some("t1"), s1 - 30000),
+      ("inv_c", 5, "user", "next slice", None, s1 + 600),
+      ("inv_c", 6, "assistant", "and more", Some("t3"), s1 + 90000),
+      // inversion within the last hour of slice 0: slice 1's 1h and
+      // 24h frames see both inverted rows
+      ("inv_d", 0, "user", "near the boundary", None, s1 - 1200),
+      ("inv_d", 1, "assistant", "earlier clock", Some("t9"), s1 - 2400),
+      ("inv_d", 2, "user", "over the edge", None, s1 + 60),
+      ("inv_d", 3, "tool", "tie", Some("t9"), s1 + 60)))
+    val bronze = TranscriptGen.transcripts(spark, nConvs = 12, avgTurns = 10)
+      .unionByName(inv).cache()
+    val dir = Files.createTempDirectory("bf_inv_next").toString
+    val reports = Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices)
+    assert(reports.count(!_.skipped) == nSlices)
+    val gold = spark.read.parquet(s"$dir/gold")
+    assert(gold.filter(col("conv_id").isin("inv_c", "inv_d") &&
+      col("slice_id") === Backfill.sliceId(s1)).count() == 4)
+    assertSame(gold, FeatureWindows.gold(SilverBuilder.build(bronze)))
+  }
+
   test("re-send of a committed turn beyond the 7d frame lookback is dropped (horizon-free dedup)") {
     val conv = rows(Seq(
       ("re_a", 0, "user", "first", None, start + 100),
@@ -80,122 +113,25 @@ class TailContextSpec extends AnyFunSuite {
     assertSame(gold, FeatureWindows.gold(SilverBuilder.build(bronze)))
   }
 
-  test("frame-tail read prunes slice_start partitions and carries sorted arrays") {
-    val bronze = TranscriptGen.transcripts(spark, nConvs = 10, avgTurns = 15)
-    val dir = Files.createTempDirectory("bf_tails").toString
-    Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices, contextStrategy = "tails")
-    val lastStart = start + (nSlices - 1) * sliceSecs
-    val tails = Checkpoint.readFrameTails(spark, dir, lastStart, sliceSecs, 604800L)
-    val plan = tails.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("slice_start"),
-      s"expected slice_start partition pruning:\n$plan")
-    // only the slices overlapping [lastStart - 7d, lastStart) are read
-    val starts = tails.select("slice_start").distinct().as[Long].collect().toSet
-    assert(starts.forall(s => s < lastStart && s > lastStart - 604800L - sliceSecs), starts.toString)
-    // arrays are ts-sorted
-    val unsorted = tails.filter(exists(
-      zip_with(col("tail_ts"), slice(col("tail_ts"), 2, 100000),
-        (a, b) => b < a), x => x)).count()
-    assert(unsorted == 0)
-  }
-
-  test("light path consumes tails, not raw silver (context scan only for routed ids)") {
-    val bronze = TranscriptGen.transcripts(spark, nConvs = 10, avgTurns = 15)
-    val dir = Files.createTempDirectory("bf_noctx").toString
-    Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices, contextStrategy = "tails")
-    // the fused plan over (state, empty context, bronze, tails) must not
-    // touch the silver table
-    val deltas = Checkpoint.readConvStateDeltas(spark, dir, start + sliceSecs)
-    val tails = Checkpoint.readFrameTails(spark, dir, start + sliceSecs, sliceSecs, 604800L)
-    val slice2 = SilverBuilder.validate(bronze.filter(
-      col("ts") >= timestamp_seconds(lit(start + sliceSecs)) &&
-        col("ts") < timestamp_seconds(lit(start + 2 * sliceSecs))))
-    // the sweep's own output crosses an RDD boundary that hides its
-    // input plans, so assert on the two streams the sweep zips: the
-    // big exchange must not touch silver, and the tail side-stream
-    // must come from the slice-meta table
-    import graft.gold.FusedSweep
-    val unioned = FusedSweep.stateRows(deltas)
-      .unionByName(FusedSweep.contextRows(Backfill.emptySilver(spark)))
-      .unionByName(FusedSweep.bronzeRows(slice2))
-      .repartition(col("conv_id"))
-    val bigPlan = unioned.queryExecution.executedPlan.toString
-    assert(!bigPlan.contains("/silver"), bigPlan.take(4000))
-    val tailPlan = FusedSweep.tailStream(tails).queryExecution.executedPlan.toString
-    assert(tailPlan.contains("conv_state") && !tailPlan.contains("/silver"),
-      tailPlan.take(4000))
-  }
-
-  test("rescan and tails strategies are bit-equal to the single-shot run") {
+  test("8-day and 2-day slices are bit-equal to the single-shot run") {
+    // 2-day slices against the 7-day lookback: each slice reads the
+    // context of up to four committed slices
     val bronze = TranscriptGen.transcripts(spark, nConvs = 25, avgTurns = 18,
       injectAnomalies = true).cache()
     val oracle = FeatureWindows.gold(SilverBuilder.build(bronze))
-    for (strategy <- Seq("rescan", "tails")) {
-      val dir = Files.createTempDirectory(s"bf_$strategy").toString
-      Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices, contextStrategy = strategy)
+    for ((width, n) <- Seq((sliceSecs, nSlices), (2L * 86400, 20))) {
+      val dir = Files.createTempDirectory(s"bf_w$width").toString
+      Backfill.run(spark, bronze, dir, start, width, n)
       assertSame(spark.read.parquet(s"$dir/gold"), oracle)
     }
-  }
-
-  test("auto strategy picks rescan for wide slices: state deltas carry no tail arrays") {
-    // 8-day slices vs 7-day lookback -> rescan; the state delta is the
-    // narrow max_by aggregate with null tail columns
-    val bronze = TranscriptGen.transcripts(spark, nConvs = 10, avgTurns = 15)
-    val dir = Files.createTempDirectory("bf_auto").toString
-    Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices)
-    assert(Checkpoint.readConvStateDeltas(spark, dir, start + nSlices * sliceSecs).count() > 0)
-    assert(Checkpoint.readFrameTails(spark, dir, start + (nSlices - 1) * sliceSecs,
-      sliceSecs, 604800L).count() == 0,
-      "auto at lookback < 2x slice width must not materialize tails")
-    // and narrow slices flip it: 2-day slices -> tails (20 slices
-    // cover the same 40-day span as the 8-day runs)
-    val dir2 = Files.createTempDirectory("bf_auto2").toString
-    Backfill.run(spark, bronze, dir2, start, 2L * 86400, 20)
-    assert(Checkpoint.readFrameTails(spark, dir2, start + 10 * 2L * 86400,
-      2L * 86400, 604800L).count() > 0,
-      "auto at lookback >= 2x slice width must materialize tails")
-    assertSame(spark.read.parquet(s"$dir2/gold"),
-      FeatureWindows.gold(SilverBuilder.build(bronze)))
-  }
-
-  test("strategy guard: tails resume over a rescan-written table fails loudly; safe switches pass") {
-    val bronze = TranscriptGen.transcripts(spark, nConvs = 10, avgTurns = 15).cache()
-    // rescan-written table (wide slices), extended under tails -> loud failure
-    val dir = Files.createTempDirectory("bf_guard").toString
-    Backfill.run(spark, bronze, dir, start, sliceSecs, 3, contextStrategy = "rescan")
-    val ex = intercept[IllegalArgumentException] {
-      Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices, contextStrategy = "tails")
-    }
-    assert(ex.getMessage.contains("rescan"), ex.getMessage)
-    // same extension under rescan is fine
-    Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices, contextStrategy = "rescan")
-    // tails-written table resumed under tails: fine; then downgraded to
-    // rescan (safe direction); a LATER tails resume of the mixed chain
-    // is rejected — the rescan-era slices wrote no tails
-    val dir2 = Files.createTempDirectory("bf_guard2").toString
-    Backfill.run(spark, bronze, dir2, start, sliceSecs, 2, contextStrategy = "tails")
-    Backfill.run(spark, bronze, dir2, start, sliceSecs, 3, contextStrategy = "tails")
-    Backfill.run(spark, bronze, dir2, start, sliceSecs, 4, contextStrategy = "rescan")
-    intercept[IllegalArgumentException] {
-      Backfill.run(spark, bronze, dir2, start, sliceSecs, nSlices, contextStrategy = "tails")
-    }
-    // pre-props table (no _meta/table_props.json): the probe decides.
-    // Simulate by deleting the props file from a tails-written table.
-    val dir3 = Files.createTempDirectory("bf_guard3").toString
-    Backfill.run(spark, bronze, dir3, start, 2L * 86400, 10, contextStrategy = "tails")
-    val props = new org.apache.hadoop.fs.Path(s"$dir3/_meta/table_props.json")
-    props.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(props, false)
-    Backfill.run(spark, bronze, dir3, start, 2L * 86400, 20, contextStrategy = "tails")
-    assertSame(spark.read.parquet(s"$dir3/gold"),
-      FeatureWindows.gold(SilverBuilder.build(bronze)))
   }
 
   test("a conversation heavy in one slice returns to the light path with correct frames") {
     // per-slice dispatch: heavy_x brings > thr rows in slice 1 only
     // (700 > 500); at slice 2 just 400 of them remain inside the 7d
     // lookback (< 500), so it returns to the light path — whose frames
-    // must still see those 400 committed events (tails are collected
-    // for routed conversations too)
+    // must still see those 400 committed events (the context rescan
+    // reads routed conversations' committed gold like any other)
     val dense = (0 until 700).map { i =>
       val sec =
         if (i < 300) start + 3600L + i * 60L // first 6h: out of slice-2 lookback
@@ -207,13 +143,9 @@ class TailContextSpec extends AnyFunSuite {
       ("heavy_x", i, "assistant", s"late turn $i", None, start + sliceSecs + 3600L + (i - 700) * 30L))
     val bronze = TranscriptGen.transcripts(spark, nConvs = 12, avgTurns = 10)
       .unionByName(rows(dense ++ lightTail)).cache()
-    val oracle = FeatureWindows.gold(SilverBuilder.build(bronze))
-    for (strategy <- Seq("tails", "rescan")) {
-      val dir = Files.createTempDirectory(s"bf_exheavy_$strategy").toString
-      Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices,
-        skewHeavyThreshold = Some(500L), segmentSecs = 2L * 86400,
-        contextStrategy = strategy)
-      assertSame(spark.read.parquet(s"$dir/gold"), oracle)
-    }
+    val dir = Files.createTempDirectory("bf_exheavy").toString
+    Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices,
+      skewHeavyThreshold = Some(500L), segmentSecs = 2L * 86400)
+    assertSame(spark.read.parquet(s"$dir/gold"), FeatureWindows.gold(SilverBuilder.build(bronze)))
   }
 }
