@@ -703,7 +703,7 @@ object Backfill {
     * Returns the observed row, or None if it did not arrive (see
     * [[MetricsWaiter.await]]).
     */
-  private def writeObserved(
+  private[graft] def writeObserved(
       spark: SparkSession, name: String, df: DataFrame, exprs: Seq[Column])(
       write: DataFrame => Unit): Option[org.apache.spark.sql.Row] = {
     val waiter = new MetricsWaiter(name)

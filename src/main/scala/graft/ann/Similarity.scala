@@ -21,7 +21,10 @@ import org.apache.spark.sql.functions._
 object Similarity {
 
   /** Cosine similarity of two array<float|double> columns, computed in
-    * double.
+    * double. The non-hot reference form: higher-order functions, which
+    * Spark runs interpreted (CodegenFallback). The pairwise paths below
+    * score through [[vecDot]] with results bit-identical to this form;
+    * it stays as the readable definition SimilaritySpec checks.
     */
   def cosine(a: Column, b: Column): Column = {
     def d(c: Column) = transform(c, x => x.cast("double"))

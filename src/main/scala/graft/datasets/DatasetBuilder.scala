@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Backfill
 import graft.guard.LeakageGuard
 
 /** Train / validation / inference dataset builds over the gold table.
@@ -69,20 +70,25 @@ object DatasetBuilder {
     * metadata sink (replaces build_datasets.py:57-73, 101-113 writes
     * and the RDD `saveAsTextFile` metadata sink :126-139 — a plain
     * DataFrame JSON write, no RDD). `runId` is a caller-supplied
-    * deterministic id (defect D7: no wall clock).
+    * deterministic id (defect D7: no wall clock). Each dataset's row
+    * count is observed on its own write (no re-read); only if the
+    * observed metrics do not arrive is the written dataset counted.
     */
   def writeAll(gold: DataFrame, outDir: String, runId: String, trainPct: Int = 80): Unit = {
     val spark = gold.sparkSession
+    def write(name: String, df: DataFrame): Long = {
+      val path = s"$outDir/$name"
+      Backfill.writeObserved(spark, s"datasets_${name}_${System.nanoTime()}", df,
+          Seq(count(lit(1)).as("n")))(_.write.mode("overwrite").parquet(path))
+        .map(_.getLong(0))
+        .getOrElse(spark.read.parquet(path).count())
+    }
     val (train, valid) = trainValidation(gold, trainPct)
-    train.write.mode("overwrite").parquet(s"$outDir/train")
-    valid.write.mode("overwrite").parquet(s"$outDir/validation")
-    inference(gold).write.mode("overwrite").parquet(s"$outDir/inference")
+    val trainRows = write("train", train)
+    val validRows = write("validation", valid)
+    val inferenceRows = write("inference", inference(gold))
     import spark.implicits._
-    val meta = Seq((runId,
-      spark.read.parquet(s"$outDir/train").count(),
-      spark.read.parquet(s"$outDir/validation").count(),
-      spark.read.parquet(s"$outDir/inference").count(),
-      trainPct))
+    val meta = Seq((runId, trainRows, validRows, inferenceRows, trainPct))
       .toDF("run_id", "train_rows", "validation_rows", "inference_rows", "train_pct")
     meta.coalesce(1).write.mode("overwrite").json(s"$outDir/metadata")
   }

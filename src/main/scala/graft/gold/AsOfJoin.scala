@@ -1,8 +1,14 @@
 package graft.gold
 
-import org.apache.spark.sql.DataFrame
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, GraftInternalAccess}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Point-in-time (as-of) join: for each query (conv_id, ts_q), return
   * the payload of the latest history row with `ts <= ts_q` (ties at
@@ -13,7 +19,8 @@ import org.apache.spark.sql.functions._
   * This single operator replaces the reference's entire SageMaker
   * Feature Store surface: the online `get_record` latest-row lookup
   * (feature_store/ingest_features.py:107-122) is [[latestPerKey]]
-  * (= as-of at ts = +inf), and offline point-in-time training joins
+  * (= as-of at ts = +inf) over the whole table and [[latestForKeys]]
+  * for a small key set, and offline point-in-time training joins
   * against the append log (register_feature_groups.py:44-48) are
   * [[asOf]] at historical timestamps. Zero temporal leakage by
   * construction.
@@ -26,6 +33,12 @@ import org.apache.spark.sql.functions._
   * O((|Q|+|H|) log) per partition and broadcast-free, so it survives
   * 100 TB histories; skewed mega-conversations follow the same
   * chunking lever as the window stage (graft.skew.ChunkedWindows).
+  *
+  * Keyed lookups ([[latestForKeys]]) take the other shape: the key set
+  * is small, so it goes to the driver as a literal `conv_id IN (...)`
+  * that the parquet scan pushes down, each scan task keeps the newest
+  * row per key, and the driver merges the per-task rows into an eager
+  * local result. One Spark job, no shuffle, no window.
   */
 object AsOfJoin {
 
@@ -189,10 +202,51 @@ object AsOfJoin {
       .drop("_rn")
   }
 
-  /** J2 batched (`batch_get_record`, ingest_features.py:124-143):
-    * latest row per key restricted to a key set — broadcast left-semi
-    * join so the big side never shuffles for the filter.
+  /** J2 batched (`batch_get_record`, ingest_features.py:124-143): the
+    * latest row per key, restricted to a small key set, in ONE Spark
+    * job. The key frame's distinct non-null conv_ids are collected on
+    * the driver (a `batch_get_record`-sized set, not a table: they
+    * become one literal `conv_id IN (...)` filter that the parquet scan
+    * prunes row groups with; a local key frame collects without a job),
+    * each scan task keeps the newest row per key by (ts, turn_idx), and
+    * the driver merges those per-task rows.
+    *
+    * The result is eager: a local DataFrame (`LocalRelation`) in
+    * `history`'s column order. Collecting it launches no further job,
+    * and no action on it rescans `history`. Null keys match nothing; an
+    * empty key set returns zero rows without a job. For a whole-table
+    * read use [[latestPerKey]].
     */
-  def latestForKeys(history: DataFrame, keys: DataFrame): DataFrame =
-    latestPerKey(history.join(broadcast(keys), Seq("conv_id"), "left_semi"))
+  def latestForKeys(history: DataFrame, keys: DataFrame): DataFrame = {
+    val ids = keys.select(col("conv_id")).collect().flatMap(r => Option(r.getString(0))).distinct
+    val newest = newestPerKey(history.schema)
+    val perTask =
+      if (ids.isEmpty) Array.empty[InternalRow]
+      else GraftInternalAccess.toInternalRdd(history.filter(col("conv_id").isin(ids.toSeq: _*)))
+        .mapPartitions(rows => newest(rows).iterator).collect()
+    GraftInternalAccess.localCreateDataFrame(
+      history.sparkSession, newest(perTask.iterator).toSeq, history.schema)
+  }
+
+  /** Reduces InternalRows in `schema` to the newest row per conv_id by
+    * (ts, turn_idx) ascending, nulls lowest — [[latestPerKey]]'s order.
+    * Kept rows are copied (scan iterators reuse their row buffer).
+    */
+  private def newestPerKey(schema: StructType): Iterator[InternalRow] => Iterable[InternalRow] = {
+    val key = schema.fieldIndex("conv_id")
+    val order = new InterpretedOrdering(Seq("ts", "turn_idx").map { c =>
+      val i = schema.fieldIndex(c)
+      SortOrder(BoundReference(i, schema(i).dataType, nullable = true), Ascending)
+    })
+    rows => {
+      val latest = mutable.HashMap.empty[UTF8String, InternalRow]
+      rows.foreach { r =>
+        if (latest.get(r.getUTF8String(key)).forall(order.lt(_, r))) {
+          val kept = r.copy()
+          latest(kept.getUTF8String(key)) = kept
+        }
+      }
+      latest.values
+    }
+  }
 }

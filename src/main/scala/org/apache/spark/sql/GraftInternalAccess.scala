@@ -2,6 +2,8 @@ package org.apache.spark.sql
 
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ClassicConversions._
 import org.apache.spark.sql.types.StructType
 
@@ -23,6 +25,15 @@ object GraftInternalAccess {
       rdd: RDD[InternalRow],
       schema: StructType): DataFrame =
     spark.internalCreateDataFrame(rdd, schema)
+
+  /** A local DataFrame (`LocalRelation`) over driver-held rows in
+    * `schema`'s field order: a collect returns them without a job.
+    */
+  def localCreateDataFrame(
+      spark: SparkSession,
+      rows: Seq[InternalRow],
+      schema: StructType): DataFrame =
+    classic.Dataset.ofRows(spark, LocalRelation(DataTypeUtils.toAttributes(schema), rows))
 
   /** The analyzed plan's InternalRow RDD (post-shuffle, post-sort). */
   def toInternalRdd(df: DataFrame): RDD[InternalRow] =

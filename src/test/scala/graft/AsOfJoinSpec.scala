@@ -1,5 +1,8 @@
 package graft
 
+import org.apache.spark.TestListenerBus
+import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -135,5 +138,82 @@ class AsOfJoinSpec extends AnyFunSuite {
     val want = AsOfJoin.latestPerKey(gold).filter(col("conv_id").isin(present: _*))
     assert(got.count() == present.size)
     assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
+  }
+
+  /** `latestForKeys(history, keys)` equals `latestPerKey` restricted to
+    * the non-null keys; returns the lookup's rows.
+    */
+  private def lookupMatchesLatest(history: DataFrame, keys: Seq[String]): Array[Row] = {
+    import spark.implicits._
+    val got = AsOfJoin.latestForKeys(history, keys.toDF("conv_id"))
+    val want = AsOfJoin.latestPerKey(history).filter(col("conv_id").isin(keys.filter(_ != null): _*))
+    assert(got.columns.toSeq == history.columns.toSeq)
+    assert(got.exceptAll(want).count() == 0 && want.exceptAll(got).count() == 0)
+    got.collect()
+  }
+
+  /** Turns as (conv_id, turn_idx, ts seconds, v), in the given order,
+    * all in one partition.
+    */
+  private def turns(rows: (String, Int, Long, Long)*): DataFrame = {
+    import spark.implicits._
+    rows.toDF("conv_id", "turn_idx", "tsec", "v").coalesce(1)
+      .select(col("conv_id"), col("turn_idx"), timestamp_seconds(col("tsec")).as("ts"), col("v"))
+  }
+
+  test("latestForKeys: at equal ts the higher turn_idx wins, in either input order") {
+    val h = turns(("c1", 2, 200L, 30L), ("c1", 1, 200L, 20L), ("c1", 0, 100L, 10L),
+      ("c2", 0, 100L, 10L), ("c2", 1, 200L, 20L), ("c2", 2, 200L, 30L))
+    val got = lookupMatchesLatest(h, Seq("c1", "c2"))
+    assert(got.map(_.getAs[Int]("turn_idx")).toSeq == Seq(2, 2))
+  }
+
+  test("latestForKeys: a ts-inverted conversation returns its newest row by ts") {
+    val h = turns(("c1", 0, 300L, 10L), ("c1", 1, 100L, 20L), ("c1", 2, 200L, 30L))
+    val got = lookupMatchesLatest(h, Seq("c1"))
+    assert(got.map(_.getAs[Int]("turn_idx")).toSeq == Seq(0))
+  }
+
+  test("latestForKeys: a key whose rows span several partitions") {
+    import spark.implicits._
+    val spread = gold.repartition(7)
+    val keys = gold.select("conv_id").distinct().orderBy("conv_id").limit(5).as[String].collect().toSeq
+    val parts = spread.filter(col("conv_id") === keys.head)
+      .select(spark_partition_id()).distinct().count()
+    assert(parts > 1, s"key ${keys.head} sits in $parts partition(s)")
+    assert(lookupMatchesLatest(spread, keys).length == keys.size)
+  }
+
+  test("latestForKeys: an empty key set returns zero rows with the history schema") {
+    import spark.implicits._
+    val got = AsOfJoin.latestForKeys(gold, Seq.empty[String].toDF("conv_id"))
+    assert(got.schema == gold.schema)
+    assert(got.count() == 0)
+  }
+
+  test("latestForKeys: a null key matches nothing") {
+    val h = turns(("c1", 0, 100L, 10L), ("c1", 1, 200L, 20L), (null, 0, 300L, 99L))
+    val got = lookupMatchesLatest(h, Seq(null, "c1"))
+    assert(got.map(_.getAs[String]("conv_id")).toSeq == Seq("c1"))
+    assert(lookupMatchesLatest(h, Seq(null)).isEmpty)
+  }
+
+  test("latestForKeys launches one Spark job; its result is local and collects without one") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("lookup").toString + "/gold"
+    gold.write.parquet(dir)
+    val history = spark.read.parquet(dir)
+    val keys = gold.select("conv_id").distinct().orderBy("conv_id").limit(3).as[String].collect().toSeq
+    val (got, jobs) = TestListenerBus.jobsDuring(spark.sparkContext)(
+      AsOfJoin.latestForKeys(history, (keys :+ keys.head).toDF("conv_id")))
+    assert(jobs == 1)
+    val (rows, after) = TestListenerBus.jobsDuring(spark.sparkContext)(got.collect())
+    assert(after == 0 && rows.length == keys.size)
+    // a count plans an aggregate over the local rows, never a rescan
+    assert(got.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    assert(got.count() == keys.size)
+    val (_, emptyJobs) = TestListenerBus.jobsDuring(spark.sparkContext)(
+      AsOfJoin.latestForKeys(history, Seq.empty[String].toDF("conv_id")).collect())
+    assert(emptyJobs == 0)
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.TestListenerBus
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -56,23 +57,6 @@ class BackfillSpec extends AnyFunSuite {
     org.apache.hadoop.fs.FileUtil.copy(fs, new org.apache.hadoop.fs.Path(committedTable),
       fs, new org.apache.hadoop.fs.Path(dst, "t"), false, spark.sparkContext.hadoopConfiguration)
     s"$dst/t"
-  }
-
-  /** Spark jobs started while `f` runs. */
-  private def jobsDuring[A](f: => A): (A, Int) = {
-    val n = new java.util.concurrent.atomic.AtomicInteger()
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        n.incrementAndGet(); ()
-      }
-    }
-    org.apache.spark.TestListenerBus.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(l)
-    try {
-      val a = f
-      org.apache.spark.TestListenerBus.drain(spark.sparkContext)
-      (a, n.get)
-    } finally spark.sparkContext.removeSparkListener(l)
   }
 
   /** The Spark JSON read of the watermark files that the driver reader
@@ -226,11 +210,13 @@ class BackfillSpec extends AnyFunSuite {
   test("resume over a fully committed table launches zero Spark jobs; so does committedSlices") {
     val dir = copyOfCommitted("bf_nojobs")
     // control: the listener sees the jobs of a collect
-    assert(jobsDuring(bronze.select("conv_id").distinct().collect())._2 > 0)
-    val (reports, resumeJobs) = jobsDuring(Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices))
+    val sc = spark.sparkContext
+    assert(TestListenerBus.jobsDuring(sc)(bronze.select("conv_id").distinct().collect())._2 > 0)
+    val (reports, resumeJobs) =
+      TestListenerBus.jobsDuring(sc)(Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices))
     assert(reports.size == nSlices && reports.forall(_.skipped))
     assert(resumeJobs == 0, s"$resumeJobs Spark job(s) on a no-op resume")
-    val (ids, idJobs) = jobsDuring(Checkpoint.committedSlices(spark, dir))
+    val (ids, idJobs) = TestListenerBus.jobsDuring(sc)(Checkpoint.committedSlices(spark, dir))
     assert(ids.size == nSlices && idJobs == 0)
   }
 

@@ -65,5 +65,7 @@ class DatasetBuilderSpec extends AnyFunSuite {
     val meta = spark.read.json(s"$dir/metadata").head()
     assert(meta.getAs[String]("run_id") == "run-0001")
     assert(meta.getAs[Long]("train_rows") == train.count())
+    assert(meta.getAs[Long]("validation_rows") == valid.count())
+    assert(meta.getAs[Long]("inference_rows") == inf.count())
   }
 }
