@@ -2,9 +2,15 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import scala.annotation.tailrec
+import scala.collection.mutable
+import scala.util.{Failure, Success, Try}
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.gold.{FeatureWindows, FusedSweep}
 import graft.meta.Checkpoint
@@ -83,15 +89,24 @@ object Backfill {
     * estimate, or no conversation could pass both the candidate
     * threshold and the budget: a candidate needs > relThr rows AND
     * <= beta x rows budget, impossible once relThr >= beta x rows).
+    *
+    * At alpha / cores >= beta (<= 8 cores) that holds for EVERY row
+    * count, since relThr >= alpha x rows / cores >= beta x rows — so
+    * the core count is checked first and `rowsEst` (a count job on a
+    * run's first slice) is not evaluated at all.
     */
   private[graft] def relativeThreshold(
       absolute: Option[Long],
-      rowsEst: Option[Long],
-      cores: Int): Option[Long] = (absolute, rowsEst) match {
-    case (Some(a), Some(r)) =>
-      val rel = Math.max(MinRouteRows, SkewAlpha * r / Math.max(cores, 1))
-      if (rel < a && rel < (r * RouteBudgetFraction).toLong) Some(rel) else None
-    case _ => None
+      rowsEst: => Option[Long],
+      cores: Int): Option[Long] = {
+    val c = Math.max(cores, 1)
+    if (SkewAlpha >= RouteBudgetFraction * c) None
+    else (absolute, rowsEst) match {
+      case (Some(a), Some(r)) =>
+        val rel = Math.max(MinRouteRows, SkewAlpha * r / c)
+        if (rel < a && rel < (r * RouteBudgetFraction).toLong) Some(rel) else None
+      case _ => None
+    }
   }
 
   /** Pick the routed set from detected (conv, sliceRows) candidates:
@@ -219,6 +234,11 @@ object Backfill {
     * [firstStartSec, firstStartSec + nSlices * sliceSecs). `bronze` is
     * the raw input (any layout); rows are routed to slices by ts.
     *
+    * The slice loop is a fold over one immutable [[Carried]] value.
+    * A slice that is neither committed nor probed empty runs four
+    * stages, one `[phase]` span each: [[inputs]], [[plan]], [[write]]
+    * and [[commit]]; the last hands the next slice its carried state.
+    *
     * Committed lookback events reach the sliding frames of later
     * slices by a RESCAN: each slice re-reads the narrow (conv_id, ts,
     * text_len, tool) columns of the committed gold inside the
@@ -255,35 +275,14 @@ object Backfill {
       sessionGapSecs: Long = TranscriptSchema.DefaultSessionGapSecs,
       failAfterGoldWriteOfSlice: Option[String] = None,
       skewHeavyThreshold: Option[Long] = None,
-      rangeLayoutWrites: Boolean = false,
-      compactStateEvery: Int = 16,
       segmentSecs: Long = 604800L,
-      materializeSilver: Boolean = false,
-      skewDetection: String = "lazy"): Seq[SliceReport] = {
+      materializeSilver: Boolean = false): Seq[SliceReport] = {
 
-    require(skewDetection == "lazy" || skewDetection == "upfront",
-      s"skewDetection must be lazy|upfront, got '$skewDetection'")
     // the committed watermark rows, read once on the driver: the resume
     // set, the slice-width guard and the empty-slice seeds all come
     // from this one list
     val wms = phase("run", "watermark read")(
       Checkpoint.watermarks(spark, outDir).filter(_.committed))
-    val committed = wms.map(_.sliceId).toSet
-    val silverPath = s"$outDir/silver"
-    val goldPath = s"$outDir/gold"
-    val silverCols = TranscriptSchema.silver.fieldNames.toSeq
-
-    val tsType = bronze.schema("ts").dataType
-    // explicit read schema for all committed-gold reads: survives empty
-    // dirs (zero readable files) and pre-upgrade slices (text_len reads
-    // as null instead of failing inference)
-    val goldFileSchema = org.apache.spark.sql.types.StructType(
-      TranscriptSchema.gold.fields.map(f =>
-        if (f.name == "ts") f.copy(dataType = tsType) else f.copy(nullable = true)) ++ Seq(
-        org.apache.spark.sql.types.StructField("text_len",
-          org.apache.spark.sql.types.LongType, nullable = true),
-        org.apache.spark.sql.types.StructField("slice_id",
-          org.apache.spark.sql.types.StringType, nullable = true)))
 
     // Resuming/extending with a different slice width would silently
     // mis-prune the lookback reads (slice dirs are time ranges of the
@@ -294,394 +293,395 @@ object Backfill {
           s"sliceSecs=${sliceSecs}s; slice-granular pruning assumes uniform widths — " +
           "resume this table with its original slice width")
     })
-    // committed row counts feed the empty-slice probe heuristic below
-    val committedRowCounts: Map[String, Long] = wms.map(w => w.sliceId -> w.rowCount).toMap
 
     // Table-version guard (resume across engine upgrades): the frame
     // stages read the persisted text_len of committed gold; a table
     // written before that column existed would silently zero the
     // char-length features of lookback context. Fail loudly instead.
     // One driver-side footer read of the first gold file.
-    if (committed.nonEmpty && phase("run", "text_len guard")(
-        Checkpoint.firstFileColumns(spark, goldPath).exists(!_.contains("text_len"))))
+    if (wms.nonEmpty && phase("run", "text_len guard")(
+        Checkpoint.firstFileColumns(spark, s"$outDir/gold").exists(!_.contains("text_len"))))
       throw new IllegalArgumentException(
         "committed gold table lacks the text_len column (written by an older engine " +
           "version); re-run the backfill from scratch, or backfill text_len = " +
           "length(text) into the committed slices first")
 
-    // heavy ids detected in one slice carry into the next slice's first
-    // attempt: an ongoing mega keeps > thr lookback events until it
-    // goes quiet, so re-detecting it from scratch every slice would pay
-    // the lazy path's wasted optimistic attempt every time. Carried ids
-    // EXPIRE after the lookback drains (reach slices): at expiry one
-    // upfront re-detection refreshes the set, so a conversation that
-    // went quiet stops paying the heavy-branch plan overhead, while a
-    // sustained mega costs one count job per reach slices instead of a
-    // wasted optimistic attempt per slice.
-    var carriedHeavy: Seq[String] = Nil
-    var heavyExpiry: Int = -1
-    // relative-dispatch detection cooldown (see the decision site): set
-    // after a detection round that routed nothing
-    var relDetectCooldownUntil: Int = -1
-    val heavyReach = (Math.ceil(MaxLookbackSecs.toDouble / sliceSecs) + 1).toInt
+    val env = RunEnv(spark, bronze, outDir, sliceSecs, nSlices, sessionGapSecs,
+      skewHeavyThreshold, segmentSecs, materializeSilver)
+    // committed row counts: the resume set, and the seeds of the
+    // empty-slice flag and the row estimate across resumes
+    val committedRows: Map[String, Long] = wms.map(w => w.sliceId -> w.rowCount).toMap
 
-    // Empty-slice fast path (ADVICE r4): an empty slice run through the
-    // full pipeline pays the whole fixed per-slice job overhead (a
-    // 256-task write of zero rows, the observe waiter, FS commits) —
-    // sparse backfills are mostly THAT overhead. A narrow limit-1 probe
-    // detects emptiness for ~one file-footer read, but as an
-    // unconditional per-slice job it is itself fixed Amdahl residue on
-    // DENSE backfills (the round-4 win was removing exactly such jobs).
-    // Heuristic: probe only when the PREVIOUS slice was empty — dense
-    // runs pay zero probes, sparse runs pay full cost once at the first
-    // empty slice and a cheap probe thereafter. Committed row counts
-    // seed the flag across resumes.
-    var prevSliceEmpty = false
+    (0 until nSlices).foldLeft((Carried(), Vector.empty[SliceReport])) {
+      case ((c, reports), i) =>
+        val s = Slice(i, firstStartSec + i * sliceSecs, sliceSecs)
+        val t0 = System.nanoTime()
+        val (report, next) = committedRows.get(s.id) match {
+          case Some(rows) =>
+            (SliceReport(s.id, 0L, 0L, skipped = true),
+              c.copy(prevEmpty = rows == 0L, lastRows = if (rows > 0L) Some(rows) else c.lastRows))
+          case None if c.prevEmpty && phase(s.id, "empty probe")(env.sliceRows(s).isEmpty) =>
+            commitEmpty(env, s)
+            (SliceReport(s.id, 0L, (System.nanoTime() - t0) / 1000000L, skipped = false), c)
+          case None =>
+            val in = inputs(env, s)
+            val w = write(env, s, in, plan(env, s, in, c))
+            if (failAfterGoldWriteOfSlice.contains(s.id))
+              throw new RuntimeException(s"injected failure after gold write of ${s.id} (test hook)")
+            commit(env, s, w, t0)
+        }
+        (next, reports :+ report)
+    }._2
+  }
 
-    // byte size of the last slice this run wrote (sweep-exchange sizing)
-    var lastGoldSliceBytes: Option[Long] = None
-    // first-slice fallback: bronze plan stats / nSlices (file bytes for
-    // parquet scans; the "unknown" Long.MaxValue default is discarded)
+  /** What one slice hands the next within a [[run]] call. */
+  private final case class Carried(
+      // heavy ids detected in one slice are routed on the next slices'
+      // first attempts (an ongoing mega keeps > thr lookback events
+      // until it goes quiet; re-detecting it every slice would pay a
+      // wasted optimistic attempt each time) until the lookback drains
+      // at `heavyExpiry`, where one re-detection refreshes the set
+      heavyIds: Seq[String] = Nil,
+      heavyExpiry: Int = -1,
+      // no relative detection before this slice index (see [[plan]])
+      relCooldownUntil: Int = -1,
+      // the last slice written (bytes, rows) or found committed (rows):
+      // sweep-exchange and relative-dispatch sizing
+      lastBytes: Option[Long] = None,
+      lastRows: Option[Long] = None,
+      // the previous slice had no rows: probe this one (see [[commitEmpty]])
+      prevEmpty: Boolean = false)
+
+  /** Slice `i` of a run: the half-open range [start, start + width). */
+  private final case class Slice(i: Int, start: Long, width: Long) {
+    val end: Long = start + width
+    val id: String = sliceId(start)
+    /** UTC days the slice touches: the lineage rows of a slice. */
+    val days: Seq[java.time.LocalDate] =
+      (Math.floorDiv(start, 86400L) to Math.floorDiv(end - 1, 86400L))
+        .map(java.time.LocalDate.ofEpochDay)
+  }
+
+  /** What every slice of one [[run]] call shares. */
+  private final case class RunEnv(
+      spark: SparkSession, bronze: DataFrame, outDir: String, sliceSecs: Long, nSlices: Int,
+      sessionGapSecs: Long, skewHeavyThreshold: Option[Long], segmentSecs: Long,
+      materializeSilver: Boolean) {
+    val goldPath = s"$outDir/gold"
+    val silverPath = s"$outDir/silver"
+    val cores: Int = spark.sparkContext.defaultParallelism
+    val routedCap: Int = Math.max(64, 2 * cores)
+    // slices until a carried heavy set expires: the lookback drains
+    val heavyReach: Int = (Math.ceil(MaxLookbackSecs.toDouble / sliceSecs) + 1).toInt
+
+    // explicit read schema for all committed-gold reads: survives empty
+    // dirs (zero readable files) and pre-upgrade slices (text_len reads
+    // as null instead of failing inference)
+    val goldFileSchema: StructType = StructType(
+      TranscriptSchema.gold.fields.map(f =>
+        if (f.name == "ts") f.copy(dataType = bronze.schema("ts").dataType)
+        else f.copy(nullable = true)) ++ Seq(
+        StructField("text_len", LongType, nullable = true),
+        StructField("slice_id", StringType, nullable = true)))
+
+    /** First-slice byte estimate: bronze plan stats / nSlices (file
+      * bytes for parquet scans; the "unknown" Long.MaxValue default is
+      * discarded).
+      */
     lazy val bronzeBytesEst: Option[Long] = {
       val s = bronze.queryExecution.optimizedPlan.stats.sizeInBytes
       if (s > 0 && s < BigInt(Long.MaxValue) / 4) Some((s / BigInt(Math.max(nSlices, 1))).toLong)
       else None
     }
-    // row count of the last written/committed slice (relative-dispatch
-    // sizing); first-slice fallback is bronzeRows/nSlices — a parquet
-    // count(*) is footer-metadata-only, one cheap job per run, and only
-    // taken when the dispatch is enabled and no neighbor estimate exists
-    var lastGoldSliceRows: Option[Long] = None
+
+    /** First-slice row estimate for relative dispatch: bronzeRows /
+      * nSlices. A parquet count(*) is footer-metadata-only, one job per
+      * run, taken only when relative dispatch can fire and no neighbor
+      * estimate exists.
+      */
     lazy val bronzeRowsPerSlice: Option[Long] =
       try {
         val n = bronze.count()
         if (n > 0) Some(Math.max(1L, n / Math.max(nSlices, 1))) else None
-      } catch { case _: Throwable => None }
+      } catch { case NonFatal(_) => None }
 
-    val reports = (0 until nSlices).map { i =>
-      val start = firstStartSec + i * sliceSecs
-      val end = start + sliceSecs
-      val id = sliceId(start)
-      val t0 = System.nanoTime()
+    def sliceRows(s: Slice): DataFrame =
+      bronze.filter(bronze("ts") >= tsLit(bronze, s.start) && bronze("ts") < tsLit(bronze, s.end))
 
-      if (committed.contains(id)) {
-        prevSliceEmpty = committedRowCounts.get(id).contains(0L)
-        committedRowCounts.get(id).filter(_ > 0L).foreach(r => lastGoldSliceRows = Some(r))
-        SliceReport(id, 0L, 0L, skipped = true)
-      } else if (prevSliceEmpty && phase(id, "empty probe")(bronze.filter(
-          bronze("ts") >= tsLit(bronze, start) && bronze("ts") < tsLit(bronze, end)).isEmpty)) {
-        // commit the zero-row watermark directly; remove any stale data
-        // a prior invalidated run of this slice may have left behind
-        phase(id, "commit") {
-          deleteDir(spark, s"$goldPath/slice_id=$id")
-          if (materializeSilver) deleteDir(spark, s"$silverPath/slice_id=$id")
-          Checkpoint.clearConvStateDelta(spark, outDir, start)
-          Checkpoint.commitSlice(spark, outDir, id,
-            new Timestamp(start * 1000L), new Timestamp(end * 1000L), None, 0L)
-        }
-        SliceReport(id, 0L, (System.nanoTime() - t0) / 1000000L, skipped = false)
-      } else {
-        // --- the current slice, half-open [start, end), validated ---
-        val rawSlice = bronze.filter(
-          bronze("ts") >= tsLit(bronze, start) && bronze("ts") < tsLit(bronze, end))
-        val sliceBronze = SilverBuilder.validate(rawSlice)
+    def goldWritten(s: Slice): DataFrame =
+      spark.read.schema(goldFileSchema).parquet(goldPath).filter(col("slice_id") === s.id)
+  }
 
-        // size the sweep exchange (= output file count) from the best
-        // available byte estimate: this run's previous written slice,
-        // a committed neighbor on resume, or bronze-size/nSlices
-        val estBytes = lastGoldSliceBytes
-          .orElse(if (i > 0)
-            dirBytes(spark, s"$goldPath/slice_id=${sliceId(start - sliceSecs)}") else None)
-          .orElse(bronzeBytesEst)
-        val sweepParts = sweepPartitions(spark, estBytes)
+  /** Empty-slice fast path: commit the zero-row watermark directly and
+    * remove any stale data a prior invalidated run of the slice left.
+    * The full pipeline would pay the whole fixed per-slice job overhead
+    * for zero rows. Its limit-1 probe costs ~one footer read but, as an
+    * unconditional job, would be fixed residue on dense backfills — so
+    * [[run]] probes only when the PREVIOUS slice was empty.
+    */
+  private def commitEmpty(env: RunEnv, s: Slice): Unit = phase(s.id, "commit") {
+    deleteDir(env.spark, s"${env.goldPath}/slice_id=${s.id}")
+    if (env.materializeSilver) deleteDir(env.spark, s"${env.silverPath}/slice_id=${s.id}")
+    Checkpoint.clearConvStateDelta(env.spark, env.outDir, s.start)
+    Checkpoint.commitSlice(env.spark, env.outDir, s.id,
+      new Timestamp(s.start * 1000L), new Timestamp(s.end * 1000L), None, 0L)
+  }
 
-        // --- carried per-conversation state: the delta chain of all
-        // committed slices before this one (one parquet read; the
-        // sweep resolves latest-per-conversation inline)
-        val deltas = phase(id, "delta chain read")(Checkpoint.readConvStateDeltas(spark, outDir, start))
+  /** A slice's inputs: the raw and validated slice bronze, the state
+    * delta chain of all committed slices before it (one parquet read;
+    * the sweep resolves latest-per-conversation inline) and the
+    * committed lookback context — conv_id + ts + persisted text_len +
+    * tool only, so parquet column pruning never touches the dominant
+    * text column (one listing of the overlapping slice dirs).
+    */
+  private final case class SliceInputs(
+      raw: DataFrame, bronze: DataFrame, deltas: DataFrame, ctx: DataFrame)
 
-        // --- committed lookback context: conv_id + ts + persisted
-        // text_len + tool only — parquet column pruning never touches
-        // the dominant text column. Used by the light sweep's frame
-        // side-stream, the heavy path's frame context, and the
-        // context-size arm of the skew dispatch. Built once per slice
-        // (one listing of the overlapping slice dirs).
-        lazy val ctxGold: DataFrame = phase(id, "context listing")(
-          contextRead(spark, goldPath, id, start, sliceSecs, Some(goldFileSchema)))
+  private def inputs(env: RunEnv, s: Slice): SliceInputs = phase(s.id, "inputs") {
+    val raw = env.sliceRows(s)
+    SliceInputs(raw, SilverBuilder.validate(raw),
+      Checkpoint.readConvStateDeltas(env.spark, env.outDir, s.start),
+      contextRead(env.spark, env.goldPath, s.id, s.start, env.sliceSecs, Some(env.goldFileSchema)))
+  }
 
-        // --- relative-dispatch inputs: slice-row estimate from the
-        // previous written/committed slice (first slice: parquet-
-        // metadata bronzeRows/nSlices), fair-core-share threshold, and
-        // the routed-fraction budget. A detection round that routes
-        // NOTHING starts a cooldown — sustained shapes where routing
-        // never pays (e.g. a mega that IS most of the slice) stop
-        // paying the per-slice count jobs; the absolute capacity
-        // backstop still guards genuine cpu-sum explosions meanwhile.
-        val rowsEst: Option[Long] =
-          if (skewHeavyThreshold.isEmpty) None
-          else lastGoldSliceRows.orElse(bronzeRowsPerSlice)
-        val relThr: Option[Long] =
-          if (i < relDetectCooldownUntil) None
-          else relativeThreshold(skewHeavyThreshold, rowsEst,
-            spark.sparkContext.defaultParallelism)
-        val routedCap = Math.max(64, 2 * spark.sparkContext.defaultParallelism)
+  /** The write-shape decision for a slice: sweep partitions (= output
+    * files), and the carried state with the heavy set the first write
+    * attempt routes off the light sweep.
+    */
+  private final case class SlicePlan(sweepParts: Int, carried: Carried)
 
-        // --- skew dispatch on PER-SLICE cost: rows this slice, or
-        // committed lookback events (what one sweep task would have to
-        // stream for the conversation). Candidates above `thr` are the
-        // skew TAIL — one narrow map-combined count + driver collect
-        // beats re-planning broadcast joins into all split branches.
-        def detectCounts(thr: Long): Seq[(String, Long)] = phase(id, "heavy ids")({
-          val sliceCnt = rawSlice.groupBy(col("conv_id")).count()
-          val ctxCnt = ctxGold.groupBy(col("conv_id")).count()
-          sliceCnt.filter(col("count") > thr)
-            .unionByName(ctxCnt.filter(col("count") > thr))
-            .groupBy(col("conv_id")).agg(max(col("count")).as("count"))
-            .orderBy(col("count").desc, col("conv_id"))
-            .limit(2 * routedCap).collect()
-            .map(r => (r.getString(0), r.getLong(1))).toSeq
-        })
-
-        // per-task state side-files: the sweep tasks emit this slice's
-        // conversation-state delta as a side product of the gold WRITE
-        // job — the separate slice-meta aggregate job survives only for
-        // the few skew-routed conversations the sweep never sees
-        val stateSink = graft.meta.StateSideSink(
-          dir = Checkpoint.stateDeltaDir(outDir, start),
-          conf = new graft.meta.SerializableHadoopConf(spark.sparkContext.hadoopConfiguration))
-
-        // heavy-path intermediates persisted for the duration of one
-        // slice write (the dedup output feeds both the owner and the
-        // feeder side of the segmented exchange — uncached it computes
-        // twice); released right after the write lands or the attempt
-        // fails
-        val slicePersists = scala.collection.mutable.Buffer[DataFrame]()
-        def releasePersists(): Unit = {
-          slicePersists.foreach(df => { df.unpersist(); () })
-          slicePersists.clear()
-        }
-        def buildGold(heavy: Seq[String], inverted: Seq[String]): DataFrame = {
-          val routedIds = (heavy ++ inverted).distinct
-          val isRouted =
-            if (routedIds.isEmpty) lit(false) else col("conv_id").isin(routedIds: _*)
-          val light = FusedSweep.gold(
-            deltas.filter(!isRouted), emptySilver(spark),
-            sliceBronze.filter(!isRouted), sessionGapSecs,
-            Some(FusedSweep.ctxStreamRows(ctxGold.filter(!isRouted))),
-            capacityLimit = skewHeavyThreshold,
-            numPartitions = Some(sweepParts),
-            stateSink = Some(stateSink))
-          if (routedIds.isEmpty) light
+  private def plan(env: RunEnv, s: Slice, in: SliceInputs, c: Carried): SlicePlan =
+    phase(s.id, "plan") {
+      // size the sweep exchange from the best available byte estimate:
+      // this run's previous written slice, a committed neighbor on
+      // resume, or bronze-size/nSlices
+      val estBytes = c.lastBytes
+        .orElse(if (s.i > 0)
+          dirBytes(env.spark, s"${env.goldPath}/slice_id=${sliceId(s.start - env.sliceSecs)}")
+        else None)
+        .orElse(env.bronzeBytesEst)
+      val sweepParts = sweepPartitions(env.spark, estBytes)
+      env.skewHeavyThreshold match {
+        case None => SlicePlan(sweepParts, c)
+        case Some(abs) =>
+          // relative-dispatch inputs: the slice-row estimate (previous
+          // written/committed slice, else bronzeRows/nSlices — asked for
+          // only when the relative rule can fire at this core count)
+          // and the fair-core-share threshold. A relative round that
+          // routes NOTHING starts a cooldown — sustained shapes where
+          // routing never pays (a mega that IS most of the slice) stop
+          // paying the per-slice count jobs; the absolute capacity
+          // backstop in [[write]] still guards genuine cpu-sum
+          // explosions meanwhile.
+          lazy val rowsEst = c.lastRows.orElse(env.bronzeRowsPerSlice)
+          val relThr =
+            if (s.i < c.relCooldownUntil) None
+            else relativeThreshold(Some(abs), rowsEst, env.cores)
+          if (relThr.isEmpty && (c.heavyIds.isEmpty || s.i < c.heavyExpiry))
+            SlicePlan(sweepParts, c)
           else {
-            // routed context comes from the same narrow gold read; the
-            // heavy path's dedup union additionally needs turn_idx and
-            // role, with text passed as null + text_len
-            val context = ctxGold
-              .select(col("conv_id"), col("turn_idx"), col("role"),
-                lit(null).cast("string").as("text"), col("tool"), col("ts"),
-                col("dt"), col("text_len"))
-              .filter(isRouted)
-            // ts-inverted conversations take the plain single-window
-            // session stage: the segmented path chains per-segment
-            // summaries in turn order within TS-based segments, which
-            // an inversion crossing a segment boundary would corrupt.
-            // (Anomalies are few; heavy AND inverted prefers correct.)
-            val segIds = heavy.filterNot(inverted.contains)
-            val parts = Seq(
-              (segIds, true), (inverted, false)).filter(_._1.nonEmpty).map {
-              case (ids, segmented) =>
-                val in = col("conv_id").isin(ids: _*)
-                heavyGold(deltas.filter(in), context.filter(in),
-                  sliceBronze.filter(in), start, sessionGapSecs, segmentSecs,
-                  segmented = segmented, outPartitions = Some(sweepParts),
-                  persistRegistry = Some(slicePersists))
-            }
-            parts.foldLeft(light)((acc, h) =>
-              acc.unionByName(h.select(light.columns.map(col): _*)))
-          }
-        }
-
-        // optional range layout: contiguous (dt, conv) ranges per task
-        // give ~1 sorted file per task (instead of tasks x days) and
-        // compress better — worth the extra shuffle on real object
-        // storage; skipped by default where write bandwidth dominates
-        def layout(df: DataFrame): DataFrame =
-          if (rangeLayoutWrites)
-            df.repartitionByRange(col("dt"), col("conv_id"))
-              .sortWithinPartitions(col("dt"), col("conv_id"), col("turn_idx"))
-          else df
-
-        // ONE compute pass lands gold; lineage metrics are OBSERVED on
-        // the write itself (zero extra jobs), and the state delta
-        // derives from the WRITTEN gold files — compressed,
-        // column-pruned, partition-pruned narrow reads instead of a
-        // full-width in-memory cache. Round-2 profiling showed the
-        // cache write + spill + full-width cache reads were pure
-        // DRAM-bandwidth burn (the non-scaling resource on one host;
-        // on a real cluster, executor-local IO).
-        //
-        // Each slice writes into its OWN static `slice_id=` directory
-        // with a plain overwrite: same idempotent-replace semantics
-        // as dynamic partition overwrite, but without the staging
-        // protocol whose driver-side file moves grow with task count
-        // (round-2 probe: the write stage scaled at 0.43 under
-        // dynamic mode — commit renames are serial on the driver and
-        // 4N cores produce 4x the files). Default layout is FLAT
-        // inside the slice dir (dt stays a data column): probe showed
-        // partitionBy(dt) costs a hidden full-width per-task sort +
-        // multi-writer overhead that does not scale. Time pruning
-        // happens at slice granularity (slices ARE time ranges);
-        // `rangeLayoutWrites` produces the query-optimized daily
-        // layout (dt dirs + (dt, conv) clustering) when the table is
-        // served to downstream readers.
-        def writeSlice(df: DataFrame, base: String): Unit =
-          if (rangeLayoutWrites)
-            layout(df).write.mode(SaveMode.Overwrite)
-              .partitionBy("dt").parquet(s"$base/slice_id=$id")
-          else
-            df.write.mode(SaveMode.Overwrite).parquet(s"$base/slice_id=$id")
-
-        val lineageDays = {
-          val d0 = Math.floorDiv(start, 86400L)
-          val d1 = Math.floorDiv(end - 1, 86400L)
-          (d0 to d1).map(java.time.LocalDate.ofEpochDay)
-        }
-        // observe() fuses the per-dt lineage aggregates into the write
-        // job; for pathologically wide slices fall back to a separate
-        // narrow aggregate over the written files
-        val observeLineage = lineageDays.size <= 64
-
-        // unique observation name per attempt: the ts-inversion retry
-        // re-writes the slice, and a late listener event from the
-        // failed attempt must never satisfy the retry's waiter
-        var attempt = 0
-        def writeGoldObserved(df: DataFrame): Option[org.apache.spark.sql.Row] =
-          if (!observeLineage) { writeSlice(df, goldPath); None }
-          else {
-            attempt += 1
-            writeObserved(spark, s"lineage_${id}_a$attempt", df,
-              Checkpoint.lineageObserveExprs(df, lineageDays))(writeSlice(_, goldPath))
-          }
-
-        // The fused sweep asserts two preconditions and the slice
-        // RE-RUNS (idempotent overwrite) with the offending
-        // conversations rerouted when either fails:
-        //  - ts non-decreasing in turn_idx (the transcript contract;
-        //    clock-skewed conversations go to the ts-sorted heavy
-        //    frame path + plain turn-ordered sessions), and
-        //  - per-conversation capacity (lazy skew detection: the
-        //    explicit count job runs only after a conversation
-        //    actually crosses the threshold; detected heavies carry
-        //    into later slices' first attempts).
-        // Zero cost on the contract-clean, all-light path.
-        var heavyIds: Seq[String] =
-          if (skewHeavyThreshold.isDefined &&
-              (skewDetection == "upfront" || relThr.isDefined ||
-                (carriedHeavy.nonEmpty && i >= heavyExpiry))) {
-            val abs = skewHeavyThreshold.get
             val thr = relThr.getOrElse(abs)
-            val cand = detectCounts(thr)
-            heavyExpiry = i + heavyReach
-            val routed = selectRouted(cand, abs, thr,
-              rowsEst.map(r => (r * RouteBudgetFraction).toLong).getOrElse(Long.MaxValue),
-              routedCap)
-            if (relThr.isDefined && routed.isEmpty) {
-              // suppressed candidates change slowly (a mega must halve,
-              // or the slice 2x, before the budget admits it) — back
-              // off harder than the carried-heavy expiry so sustained
-              // unroutable shapes pay ~one count job per backfill, not
-              // one per heavyReach slices
-              relDetectCooldownUntil = i + Math.max(heavyReach, 4)
-              if (cand.nonEmpty)
-                println(s"[backfill] $id: ${cand.size} conversation(s) above the relative " +
-                  s"threshold $thr but past the ${RouteBudgetFraction} slice-budget — " +
-                  "keeping them on the plain sweep (detour would ride the critical path)")
-            }
-            routed
-          } else carriedHeavy
-        var invertedIds: Seq[String] = Nil
-        var metrics: Option[org.apache.spark.sql.Row] = None
-        var attempts = 0
-        var done = false
-        phase(id, "gold compute+write")(
-          try while (!done) {
-            attempts += 1
-            // pre-clear the slice's delta dir before EVERY attempt: a
-            // failed attempt's side-files (possibly for partitions the
-            // retry's different routing never rewrites) must not survive
-            Checkpoint.clearConvStateDelta(spark, outDir, start)
-            try { metrics = writeGoldObserved(buildGold(heavyIds, invertedIds)); done = true }
-            catch {
-              case e: Throwable if isCapacity(e) && attempts <= 3 =>
-                releasePersists()
-                // capacity aborts fire at the ABSOLUTE crossover only;
-                // everything detected there must route
-                val detected = detectCounts(skewHeavyThreshold.get).map(_._1)
-                heavyExpiry = i + heavyReach
-                if (!detected.exists(d => !heavyIds.contains(d))) throw e
-                println(s"[backfill] $id: routing ${detected.size} oversize " +
-                  s"conversation(s) to the segmented heavy path: " +
-                  detected.take(5).mkString(", ") +
-                  (if (detected.size > 5) ", ..." else ""))
-                heavyIds = (heavyIds ++ detected).distinct
-              case e: Throwable if isTsInversion(e) && attempts <= 3 =>
-                releasePersists()
-                val inverted = phase(id, "inversion detect")(
-                  detectInvertedConvs(sliceBronze))
-                if (!inverted.exists(d => !invertedIds.contains(d))) throw e
-                println(s"[backfill] $id: rerouting ${inverted.size} ts-inverted " +
-                  s"conversation(s) off the fused sweep: ${inverted.take(5).mkString(", ")}" +
-                  (if (inverted.size > 5) ", ..." else ""))
-                invertedIds = (invertedIds ++ inverted).distinct
-            }
-          } finally releasePersists())
-        carriedHeavy = heavyIds
-
-        if (failAfterGoldWriteOfSlice.contains(id))
-          throw new RuntimeException(s"injected failure after gold write of $id (test hook)")
-
-        def goldWritten = spark.read.schema(goldFileSchema).parquet(goldPath)
-          .filter(col("slice_id") === id)
-        if (materializeSilver)
-          phase(id, "silver write")(writeSlice(goldWritten.select(silverCols.map(col): _*), silverPath))
-
-        // --- lineage: from the observed write metrics (no extra job),
-        // or the legacy aggregate over the written files ---
-        val wallMs = (System.nanoTime() - t0) / 1000000L
-        val (rows, hw) = phase(id, "lineage")(metrics match {
-          case Some(m) =>
-            Checkpoint.writeLineageFromMetrics(spark, outDir, id, lineageDays, m, wallMs)
-          case None =>
-            Checkpoint.appendLineage(outDir, goldWritten, id, wallMs)
-        })
-        if (rows > 0L) {
-          lastGoldSliceBytes = dirBytes(spark, s"$goldPath/slice_id=$id")
-          lastGoldSliceRows = Some(rows)
-        }
-
-        // --- slice meta for later slices: the LIGHT path's state
-        // delta already landed as per-task side-files of the gold
-        // write — zero extra jobs. Only skew-routed conversations
-        // (absent from the sweep) still need the aggregate, over their
-        // narrow columns only.
-        val routedIds = (heavyIds ++ invertedIds).distinct
-        if (rows > 0L && routedIds.nonEmpty)
-          phase(id, "routed slice meta")(Checkpoint.appendSliceMeta(outDir, start,
-            Checkpoint.stateDeltaFromGold(goldWritten.filter(col("conv_id").isin(routedIds: _*)))))
-
-        // --- the committing watermark row (atomic last) ---
-        phase(id, "commit")(Checkpoint.commitSlice(spark, outDir, id,
-          new Timestamp(start * 1000L), new Timestamp(end * 1000L), hw, rows))
-        val periodic = compactStateEvery > 0 && (i + 1) % compactStateEvery == 0
-        if (periodic || phase(id, "compaction check")(
-            Checkpoint.uncompactedDeltaDirs(spark, outDir, start + 1) > MaxStateChain))
-          phase(id, "state compaction")(Checkpoint.compactConvState(spark, outDir, start))
-        prevSliceEmpty = rows == 0L
-        SliceReport(id, rows, wallMs, skipped = false)
+            val cand = detectCounts(env, s, in, thr)
+            val budget = relThr.flatMap(_ => rowsEst)
+              .map(r => (r * RouteBudgetFraction).toLong).getOrElse(Long.MaxValue)
+            val routed = selectRouted(cand, abs, thr, budget, env.routedCap)
+            val cooldown =
+              if (relThr.isEmpty || routed.nonEmpty) c.relCooldownUntil
+              else {
+                if (cand.nonEmpty)
+                  println(s"[backfill] ${s.id}: ${cand.size} conversation(s) above the relative " +
+                    s"threshold $thr but past the ${RouteBudgetFraction} slice-budget — " +
+                    "keeping them on the plain sweep (detour would ride the critical path)")
+                // suppressed candidates change slowly (a mega must halve,
+                // or the slice 2x, before the budget admits it) — back
+                // off harder than the carried-heavy expiry so sustained
+                // unroutable shapes pay ~one count job per backfill, not
+                // one per heavyReach slices
+                s.i + Math.max(env.heavyReach, 4)
+              }
+            SlicePlan(sweepParts, c.copy(heavyIds = routed, heavyExpiry = s.i + env.heavyReach,
+              relCooldownUntil = cooldown))
+          }
       }
     }
-    reports
-  }
+
+  /** Skew detection on PER-SLICE cost: rows this slice, or committed
+    * lookback events (what one sweep task would have to stream for the
+    * conversation). Candidates above `thr` are the skew TAIL — one
+    * narrow map-combined count + driver collect beats re-planning
+    * broadcast joins into all split branches.
+    */
+  private def detectCounts(env: RunEnv, s: Slice, in: SliceInputs, thr: Long): Seq[(String, Long)] =
+    phase(s.id, "heavy ids") {
+      val sliceCnt = in.raw.groupBy(col("conv_id")).count()
+      val ctxCnt = in.ctx.groupBy(col("conv_id")).count()
+      sliceCnt.filter(col("count") > thr)
+        .unionByName(ctxCnt.filter(col("count") > thr))
+        .groupBy(col("conv_id")).agg(max(col("count")).as("count"))
+        .orderBy(col("count").desc, col("conv_id"))
+        .limit(2 * env.routedCap).collect()
+        .map(r => (r.getString(0), r.getLong(1))).toSeq
+    }
+
+  /** A landed gold write: its observed lineage row (None = observe
+    * skipped or timed out), the conversations it routed off the light
+    * sweep, and the carried state with the heavy set it routed.
+    */
+  private final case class SliceWrite(
+      metrics: Option[Row], routedIds: Seq[String], carried: Carried)
+
+  /** ONE compute pass lands gold into the slice's OWN static
+    * `slice_id=` directory (a plain overwrite: the idempotent-replace
+    * semantics of dynamic partition overwrite without its staging
+    * protocol, whose driver-side file moves grow with task count;
+    * FLAT inside the dir — `dt` stays a data column, time pruning
+    * happens at slice granularity). Lineage metrics are OBSERVED on the
+    * write itself (zero extra jobs), and the sweep tasks emit the
+    * slice's conversation-state delta as per-task side-files of the
+    * same job.
+    *
+    * The fused sweep asserts two preconditions, and the slice RE-RUNS
+    * (idempotent overwrite) with the offending conversations rerouted
+    * when either fails, at most three times:
+    *  - per-conversation capacity (lazy skew detection: the explicit
+    *    count job runs only after a conversation actually crosses the
+    *    absolute threshold; detected heavies carry into later slices'
+    *    first attempts), and
+    *  - ts non-decreasing in turn_idx (the transcript contract;
+    *    clock-skewed conversations go to the ts-sorted heavy frame path
+    *    + plain turn-ordered sessions).
+    * Zero cost on the contract-clean, all-light path.
+    */
+  private def write(env: RunEnv, s: Slice, in: SliceInputs, p: SlicePlan): SliceWrite =
+    phase(s.id, "write") {
+      val stateSink = graft.meta.StateSideSink(
+        dir = Checkpoint.stateDeltaDir(env.outDir, s.start),
+        conf = new graft.meta.SerializableHadoopConf(env.spark.sparkContext.hadoopConfiguration))
+
+      // heavy-path intermediates persisted for one attempt (the dedup
+      // output feeds both the owner and the feeder side of the
+      // segmented exchange — uncached it computes twice)
+      def buildGold(heavy: Seq[String], inverted: Seq[String],
+          persists: mutable.Buffer[DataFrame]): DataFrame = {
+        val routedIds = (heavy ++ inverted).distinct
+        val isRouted =
+          if (routedIds.isEmpty) lit(false) else col("conv_id").isin(routedIds: _*)
+        val light = FusedSweep.gold(
+          in.deltas.filter(!isRouted), emptySilver(env.spark),
+          in.bronze.filter(!isRouted), env.sessionGapSecs,
+          Some(FusedSweep.ctxStreamRows(in.ctx.filter(!isRouted))),
+          capacityLimit = env.skewHeavyThreshold,
+          numPartitions = Some(p.sweepParts),
+          stateSink = Some(stateSink))
+        if (routedIds.isEmpty) light
+        else {
+          // routed context comes from the same narrow gold read; the
+          // heavy path's dedup union additionally needs turn_idx and
+          // role, with text passed as null + text_len
+          val context = in.ctx
+            .select(col("conv_id"), col("turn_idx"), col("role"),
+              lit(null).cast("string").as("text"), col("tool"), col("ts"),
+              col("dt"), col("text_len"))
+            .filter(isRouted)
+          // ts-inverted conversations take the plain single-window
+          // session stage: the segmented path chains per-segment
+          // summaries in turn order within TS-based segments, which
+          // an inversion crossing a segment boundary would corrupt.
+          // (Anomalies are few; heavy AND inverted prefers correct.)
+          val segIds = heavy.filterNot(inverted.contains)
+          Seq((segIds, true), (inverted, false)).filter(_._1.nonEmpty).map {
+            case (ids, segmented) =>
+              val sel = col("conv_id").isin(ids: _*)
+              heavyGold(in.deltas.filter(sel), context.filter(sel),
+                in.bronze.filter(sel), s.start, env.sessionGapSecs, env.segmentSecs,
+                segmented = segmented, outPartitions = Some(p.sweepParts),
+                persistRegistry = Some(persists))
+          }.foldLeft(light)((acc, h) => acc.unionByName(h.select(light.columns.map(col): _*)))
+        }
+      }
+
+      // observe() fuses the per-dt lineage aggregates into the write
+      // job; for pathologically wide slices [[commit]] falls back to a
+      // separate narrow aggregate over the written files. Each attempt
+      // observes under its own name: a late listener event from a
+      // failed attempt must never satisfy the retry's waiter.
+      def writeGold(df: DataFrame, attempt: Int): Option[Row] = {
+        def save(d: DataFrame): Unit =
+          d.write.mode(SaveMode.Overwrite).parquet(s"${env.goldPath}/slice_id=${s.id}")
+        if (s.days.size > 64) { save(df); None }
+        else writeObserved(env.spark, s"lineage_${s.id}_a$attempt", df,
+          Checkpoint.lineageObserveExprs(df, s.days))(save)
+      }
+
+      // `c.heavyIds` is the heavy set this attempt routes
+      @tailrec def attempt(n: Int, c: Carried, inverted: Seq[String]): SliceWrite = {
+        // pre-clear the slice's delta dir before EVERY attempt: a failed
+        // attempt's side-files (possibly for partitions the retry's
+        // different routing never rewrites) must not survive
+        Checkpoint.clearConvStateDelta(env.spark, env.outDir, s.start)
+        val persists = mutable.Buffer[DataFrame]()
+        val landed =
+          try Try(writeGold(buildGold(c.heavyIds, inverted, persists), n))
+          finally persists.foreach(_.unpersist())
+        landed match {
+          case Success(metrics) => SliceWrite(metrics, (c.heavyIds ++ inverted).distinct, c)
+          case Failure(e) if n <= 3 && isCapacity(e) =>
+            // capacity aborts fire at the ABSOLUTE crossover only;
+            // everything detected there must route
+            val detected = detectCounts(env, s, in, env.skewHeavyThreshold.get).map(_._1)
+            if (!detected.exists(d => !c.heavyIds.contains(d))) throw e
+            println(s"[backfill] ${s.id}: routing ${detected.size} oversize " +
+              s"conversation(s) to the segmented heavy path: " +
+              detected.take(5).mkString(", ") + (if (detected.size > 5) ", ..." else ""))
+            attempt(n + 1, c.copy(heavyIds = (c.heavyIds ++ detected).distinct,
+              heavyExpiry = s.i + env.heavyReach), inverted)
+          case Failure(e) if n <= 3 && isTsInversion(e) =>
+            val found = phase(s.id, "inversion detect")(detectInvertedConvs(in.bronze))
+            if (!found.exists(d => !inverted.contains(d))) throw e
+            println(s"[backfill] ${s.id}: rerouting ${found.size} ts-inverted " +
+              s"conversation(s) off the fused sweep: ${found.take(5).mkString(", ")}" +
+              (if (found.size > 5) ", ..." else ""))
+            attempt(n + 1, c, (inverted ++ found).distinct)
+          case Failure(e) => throw e
+        }
+      }
+      attempt(1, p.carried, Nil)
+    }
+
+  /** Everything after the gold write, watermark last: the optional
+    * silver copy, lineage (from the observed write metrics, or an
+    * aggregate over the written files), the state delta of the routed
+    * conversations (the light path's already landed as side-files),
+    * the committing watermark row, and adaptive state compaction.
+    */
+  private def commit(env: RunEnv, s: Slice, w: SliceWrite, t0: Long): (SliceReport, Carried) =
+    phase(s.id, "commit") {
+      val spark = env.spark
+      if (env.materializeSilver)
+        phase(s.id, "silver write")(env.goldWritten(s)
+          .select(TranscriptSchema.silver.fieldNames.map(col).toSeq: _*)
+          .write.mode(SaveMode.Overwrite).parquet(s"${env.silverPath}/slice_id=${s.id}"))
+      val wallMs = (System.nanoTime() - t0) / 1000000L
+      val (rows, hw) = phase(s.id, "lineage")(w.metrics match {
+        case Some(m) =>
+          Checkpoint.writeLineageFromMetrics(spark, env.outDir, s.id, s.days, m, wallMs)
+        case None =>
+          Checkpoint.appendLineage(env.outDir, env.goldWritten(s), s.id, wallMs)
+      })
+      val bytes = if (rows > 0L) dirBytes(spark, s"${env.goldPath}/slice_id=${s.id}") else None
+      if (rows > 0L && w.routedIds.nonEmpty)
+        phase(s.id, "routed slice meta")(Checkpoint.appendSliceMeta(env.outDir, s.start,
+          Checkpoint.stateDeltaFromGold(
+            env.goldWritten(s).filter(col("conv_id").isin(w.routedIds: _*)))))
+      phase(s.id, "watermark")(Checkpoint.commitSlice(spark, env.outDir, s.id,
+        new Timestamp(s.start * 1000L), new Timestamp(s.end * 1000L), hw, rows))
+      if (phase(s.id, "compaction check")(
+          Checkpoint.uncompactedDeltaDirs(spark, env.outDir, s.start + 1) > MaxStateChain))
+        phase(s.id, "state compaction")(Checkpoint.compactConvState(spark, env.outDir, s.start))
+      (SliceReport(s.id, rows, wallMs, skipped = false),
+        if (rows == 0L) w.carried.copy(prevEmpty = true)
+        else w.carried.copy(lastBytes = bytes, lastRows = Some(rows), prevEmpty = false))
+    }
 
   private def deleteDir(spark: SparkSession, path: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -831,14 +831,11 @@ object Backfill {
       nSlices: Int,
       sessionGapSecs: Long = TranscriptSchema.DefaultSessionGapSecs,
       skewHeavyThreshold: Option[Long] = None,
-      rangeLayoutWrites: Boolean = false,
-      compactStateEvery: Int = 16,
       segmentSecs: Long = 604800L,
       materializeSilver: Boolean = false): Seq[SliceReport] = {
     val latePath = s"$outDir/_late"
     val runAll = () => run(spark, bronze, outDir, firstStartSec, sliceSecs, nSlices,
       sessionGapSecs = sessionGapSecs, skewHeavyThreshold = skewHeavyThreshold,
-      rangeLayoutWrites = rangeLayoutWrites, compactStateEvery = compactStateEvery,
       segmentSecs = segmentSecs, materializeSilver = materializeSilver)
     // the earliest queued slice, from the queue's partition dir names
     // (driver-side listing, no Spark job)
@@ -1016,10 +1013,11 @@ object Backfill {
     val withContext = ctxF
       .select(silverF.columns.map(col): _*)
       .unionByName(silverF)
-    // O(n) segment-salted sweep (FastWindows), NOT the declarative
-    // ChunkedWindows twin — WindowExec rebuilds collect_set per row of
-    // a sliding range frame, O(rows x frame), unrunnable on a
-    // mega-conversation (the two are property-tested equal)
+    // O(n) segment-salted sweep (FastWindows), not a declarative
+    // window over the salted segments — WindowExec rebuilds collect_set
+    // per row of a sliding range frame, O(rows x frame), unrunnable on
+    // a mega-conversation (FastWindowsSpec pins it to the declarative
+    // reference)
     val ranged = graft.gold.FastWindows
       .rangeFeaturesChunked(withContext, segmentSecs)
       .drop("_fw_len")

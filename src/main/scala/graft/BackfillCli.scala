@@ -23,11 +23,9 @@ import graft.sources.TranscriptSource
   *   [--skew-threshold 10000000]              (per-slice rows or lookback events per
   *                                             conversation -> segmented heavy path)
   *   [--segment-secs 604800]
-  *   [--compact-every 16]
   *   [--materialize-silver]                   (also write a physical silver/ copy;
   *                                             by default silver is served as a
   *                                             projection of the gold files)
-  *   [--range-layout]                         (range-partitioned sorted output files)
   *   [--late-policy ignore|collect|reprocess] (rows landing in committed slices:
   *                                             queue to <out>/_late / recompute)
   * }}}
@@ -47,8 +45,6 @@ object BackfillCli {
       sessionGapSecs: Long = 1800L,
       skewThreshold: Option[Long] = Some(10000000L),
       segmentSecs: Long = 604800L,
-      compactEvery: Int = 16,
-      rangeLayout: Boolean = false,
       latePolicy: String = "ignore",
       materializeSilver: Boolean = false)
 
@@ -80,8 +76,6 @@ object BackfillCli {
       case "--skew-threshold" :: v :: t =>
         loop(t, a.copy(skewThreshold = if (v.toLong <= 0) None else Some(v.toLong)))
       case "--segment-secs" :: v :: t     => loop(t, a.copy(segmentSecs = v.toLong))
-      case "--compact-every" :: v :: t    => loop(t, a.copy(compactEvery = v.toInt))
-      case "--range-layout" :: t          => loop(t, a.copy(rangeLayout = true))
       case "--late-policy" :: v :: t      => loop(t, a.copy(latePolicy = v))
       case "--materialize-silver" :: t    => loop(t, a.copy(materializeSilver = true))
       case Nil                            => a
@@ -123,12 +117,10 @@ object BackfillCli {
       if (a.latePolicy == "reprocess")
         Backfill.reprocessLate(spark, bronze, a.out, a.startSec, a.sliceSecs, a.nSlices,
           sessionGapSecs = a.sessionGapSecs, skewHeavyThreshold = a.skewThreshold,
-          rangeLayoutWrites = a.rangeLayout, compactStateEvery = a.compactEvery,
           segmentSecs = a.segmentSecs, materializeSilver = a.materializeSilver)
       else
         Backfill.run(spark, bronze, a.out, a.startSec, a.sliceSecs, a.nSlices,
           sessionGapSecs = a.sessionGapSecs, skewHeavyThreshold = a.skewThreshold,
-          rangeLayoutWrites = a.rangeLayout, compactStateEvery = a.compactEvery,
           segmentSecs = a.segmentSecs, materializeSilver = a.materializeSilver)
     reports.foreach { r =>
       println(s"[backfill] ${r.sliceId} rows=${r.rows} wallMs=${r.wallMs}" +

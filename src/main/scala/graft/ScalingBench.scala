@@ -212,8 +212,8 @@ object ScalingBench {
          |like a real landed ingest layer). Job: full checkpointed backfill
          |(bronze → silver-as-projection → gold, 4 x 10-day slices, per-slice
          |skew dispatch at the measured 10^7 crossover — the 2M-turn megas
-         |ride the plain fused sweep, which SkewProbe shows beats the
-         |segmented path below that size) + as-of join of 1-in-10 feature
+         |ride the plain fused sweep, which beats the segmented path
+         |below that size) + as-of join of 1-in-10 feature
          |queries vs the gold history through the dispatching asOfAuto.
          |Identical job and input at both parallelism levels of each pair
          |(`spark.sql.shuffle.partitions` = cores). No multi-executor

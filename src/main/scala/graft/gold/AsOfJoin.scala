@@ -32,7 +32,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * silver_and_gold.py:143, is the anti-pattern this deletes). Cost is
   * O((|Q|+|H|) log) per partition and broadcast-free, so it survives
   * 100 TB histories; skewed mega-conversations follow the same
-  * chunking lever as the window stage (graft.skew.ChunkedWindows).
+  * time-segment lever as the window stage ([[asOfSegmented]]).
   *
   * Keyed lookups ([[latestForKeys]]) take the other shape: the key set
   * is small, so it goes to the driver as a literal `conv_id IN (...)`

@@ -28,8 +28,8 @@ import org.apache.spark.sql.types._
   *
   * Memory: the 7d deque holds only that conversation's last-7-days
   * rows as 24-byte entries; the chunked variant
-  * ([[ChunkedWindows]]-style segmenting, `extraPartCols`) bounds it
-  * for pathological single-conversation densities.
+  * ([[rangeFeaturesChunked]]: time-segment salting, `extraPartCols`)
+  * bounds it for pathological single-conversation densities.
   */
 // One ring buffer per frame — primitive arrays, zero per-row
 // allocation on the add/evict path (the sweep is the engine's
@@ -195,9 +195,14 @@ object FastWindows {
   }
 
   /** Skew-split exact variant: time-segment salting with lookback
-    * context (same scheme as [[graft.skew.ChunkedWindows]]) on top of
-    * the O(n) sweep — a mega-conversation becomes span/segmentSecs
-    * parallel tasks.
+    * context on top of the O(n) sweep — a mega-conversation becomes
+    * span/segmentSecs parallel tasks. Each row is salted by its segment
+    * `floor(unix_ts / segmentSecs)` and replicated into the following
+    * `ceil(maxLookback / segmentSecs)` segments as context; the sweep
+    * runs per (conv_id, segment) and keeps each segment's owner rows.
+    * Every trailing frame of an owner row lies within
+    * [segStart - maxLookback, ts], so every frame aggregate is exact,
+    * at a replication factor of 1 + maxLookback/segmentSecs.
     */
   def rangeFeaturesChunked(
       silver: DataFrame,
@@ -211,17 +216,5 @@ object FastWindows {
     rangeFeatures(replicated, extraPartCols = Seq("_seg"))
       .filter(col("_seg") === col("_owner_seg"))
       .drop("_seg", "_owner_seg")
-  }
-
-  /** Heavy-hitter dispatch mirroring [[graft.skew.ChunkedWindows.rangeFeaturesAuto]]. */
-  def rangeFeaturesAuto(
-      silver: DataFrame,
-      heavyThreshold: Long = 2000000L,
-      segmentSecs: Long = 604800L): DataFrame = {
-    val heavyKeys = silver.groupBy(col("conv_id")).count()
-      .filter(col("count") > heavyThreshold).select(col("conv_id"))
-    val light = silver.join(broadcast(heavyKeys), Seq("conv_id"), "left_anti")
-    val heavy = silver.join(broadcast(heavyKeys), Seq("conv_id"), "left_semi")
-    rangeFeatures(light).unionByName(rangeFeaturesChunked(heavy, segmentSecs))
   }
 }

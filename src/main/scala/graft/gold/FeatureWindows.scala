@@ -52,44 +52,6 @@ object FeatureWindows {
       .withColumn("tool_distinct_24h", size(collect_set(col("tool")).over(wRange(86400L))))
       .withColumn("avg_chars_7d", avg(length(col("text"))).over(wRange(604800L)))
 
-  /** W3 escape hatch for extreme tool cardinality (SURVEY §2.6/§7.6):
-    * the exact distinct count — collect_set declaratively, a
-    * value→count map in the FastWindows sweep — holds O(cardinality)
-    * state per frame. A conversation cycling through millions of
-    * DISTINCT tool names in 24 h would blow that state; HyperLogLog++
-    * (`approx_count_distinct`) bounds it at a few KB per evaluation in
-    * exchange for a relative error ~rsd (default 5%). Same trailing
-    * frame, same leakage guarantees; the estimate is deterministic for
-    * a given input set. Dispatch via [[rangeFeaturesAutoApprox]] mirrors
-    * the ChunkedWindows heavy-hitter split. Error bound is
-    * property-tested on a mega-conversation (ApproxDistinctSpec).
-    */
-  def rangeFeaturesApproxDistinct(silver: DataFrame, rsd: Double = 0.05): DataFrame =
-    silver
-      .withColumn("turns_cnt_1h", count(lit(1)).over(wRange(3600L)))
-      .withColumn("tool_calls_1h", count(col("tool")).over(wRange(3600L)))
-      .withColumn("chars_sum_1h", sum(length(col("text")).cast("long")).over(wRange(3600L)))
-      .withColumn("tool_distinct_24h",
-        approx_count_distinct(col("tool"), rsd).over(wRange(86400L)).cast("int"))
-      .withColumn("avg_chars_7d", avg(length(col("text"))).over(wRange(604800L)))
-
-  /** Heavy-hitter dispatch twin of ChunkedWindows.rangeFeaturesAuto:
-    * conversations whose 24 h tool cardinality can exceed
-    * `cardinalityThreshold` take the HLL path, the rest stay exact.
-    */
-  def rangeFeaturesAutoApprox(
-      silver: DataFrame,
-      cardinalityThreshold: Long = 1000000L,
-      rsd: Double = 0.05): DataFrame = {
-    val heavyKeys = silver
-      .groupBy(col("conv_id")).agg(countDistinct(col("tool")).as("card"))
-      .filter(col("card") > cardinalityThreshold)
-      .select(col("conv_id"))
-    val light = silver.join(broadcast(heavyKeys), Seq("conv_id"), "left_anti")
-    val heavy = silver.join(broadcast(heavyKeys), Seq("conv_id"), "left_semi")
-    rangeFeatures(light).unionByName(rangeFeaturesApproxDistinct(heavy, rsd))
-  }
-
   /** lag/gap features in stable turn order. `lead`-based values are
     * deliberately NOT produced here — they read the future and are
     * quarantined to label derivation ([[graft.datasets.DatasetBuilder]]).

@@ -21,9 +21,9 @@ import org.apache.spark.unsafe.types.UTF8String
   *    text — just (ts, len, tool)) into the following
   *    ceil(lookback/segmentSecs) segments; committed lookback context
   *    also feeds its own segment. Each owner row's trailing frames
-  *    then lie entirely within its segment's feed — exact, same math
-  *    as ChunkedWindows (property-tested there), executed by the same
-  *    FrameQ ring buffers as the light sweep.
+  *    then lie entirely within its segment's feed — exact, the same
+  *    segment salting as FastWindows.rangeFeaturesChunked, executed by
+  *    the same FrameQ ring buffers as the light sweep.
   *  - lag/sessions: a NARROW summary pass (conv, turn, ts, role only —
   *    the scan never decodes text; a dedup-lite min_by is enough
   *    because rows tying on (ts, role, tool) cannot disagree on

@@ -317,18 +317,18 @@ object Checkpoint {
     * quadratic over a long backfill). Each slice appends only a DELTA
     * — the conversations it actually touched — under
     * `_meta/conv_state/slice_start=<sec>`; readers take, per
-    * conversation, the row from the highest slice_start. Periodic
-    * COMPACTION ([[compactConvState]]) collapses the chain into a
-    * snapshot so the read stays O(active conversations), not O(slices).
+    * conversation, the row from the highest slice_start. COMPACTION
+    * ([[compactConvState]], whenever the chain outgrows a small bound)
+    * collapses the chain into a snapshot so the read stays O(active
+    * conversations), not O(slices).
     *
-    * Write is an idempotent per-slice-dir overwrite: a crashed slice
-    * that re-runs replaces its own delta exactly (same resume contract
-    * as the data partitions).
+    * A slice's delta dir is cleared before each write attempt
+    * ([[clearConvStateDelta]]): a crashed slice that re-runs replaces
+    * its own delta exactly (same resume contract as the data
+    * partitions).
+    *
+    * This accessor gives the dir to the per-task side-file sink.
     */
-  def writeConvStateDelta(outDir: String, sliceStartSec: Long, delta: DataFrame): Unit =
-    delta.write.mode(SaveMode.Overwrite).parquet(stateDeltaPath(outDir, sliceStartSec))
-
-  /** Public path accessor for the per-task side-file sink. */
   def stateDeltaDir(outDir: String, sliceStartSec: Long): String =
     stateDeltaPath(outDir, sliceStartSec)
 

@@ -10,12 +10,18 @@ class BackfillCliSpec extends AnyFunSuite {
       "--start", "2024-01-01T00:00:00Z", "--slice-secs", "86400", "--slices", "30",
       "--format", "json", "--session-gap-secs", "900",
       "--skew-threshold", "500000", "--segment-secs", "43200",
-      "--compact-every", "8", "--range-layout"))
+      "--late-policy", "collect", "--materialize-silver"))
     assert(a.bronze == "/data/bronze" && a.out == "/data/medallion")
     assert(a.startSec == 1704067200L && a.sliceSecs == 86400L && a.nSlices == 30)
     assert(a.format == "json" && a.sessionGapSecs == 900L)
     assert(a.skewThreshold.contains(500000L) && a.segmentSecs == 43200L)
-    assert(a.compactEvery == 8 && a.rangeLayout)
+    assert(a.latePolicy == "collect" && a.materializeSilver)
+    // the removed layout and periodic-compaction flags are unknown now
+    Seq(Seq("--range-layout"), Seq("--compact-every", "8")).foreach { flag =>
+      val ex = intercept[IllegalArgumentException](BackfillCli.parse(Seq(
+        "--bronze", "b", "--out", "o", "--start", "0", "--slices", "1") ++ flag))
+      assert(ex.getMessage == s"unknown or incomplete argument: ${flag.head}")
+    }
   }
 
   test("epoch-seconds start, defaults, and skew-path opt-out") {

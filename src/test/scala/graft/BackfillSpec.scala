@@ -10,6 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.gen.TranscriptGen
 import graft.gold.FeatureWindows
 import graft.meta.Checkpoint
+import graft.schema.TranscriptSchema
 import graft.silver.SilverBuilder
 
 /** Checkpoint/resume properties (FIXTURES.md §5): sliced backfill ==
@@ -99,31 +100,39 @@ class BackfillSpec extends AnyFunSuite {
       spark, nConvs = 20, avgTurns = 15, megaConvs = 2, megaTurns = 2000,
       injectAnomalies = true).cache()
     val oracle = FeatureWindows.gold(SilverBuilder.build(megaBronze))
-    val dir = Files.createTempDirectory("bf_skew").toString
     // threshold 300 forces both mega-conversations onto the segmented
-    // heavy path; compact every 2 slices exercises snapshot + delta reads
-    Backfill.run(spark, megaBronze, dir, start, sliceSecs, nSlices,
-      skewHeavyThreshold = Some(300L), compactStateEvery = 2, segmentSecs = 2L * 86400)
+    // heavy path; 4-day slices over the same 40 days make the state
+    // chain outgrow 4 deltas at the 5th slice, so the adaptive trigger
+    // writes a snapshot before the kill below
+    val (width, n) = (4L * 86400, 10)
+    val dir = Files.createTempDirectory("bf_skew").toString
+    Backfill.run(spark, megaBronze, dir, start, width, n,
+      skewHeavyThreshold = Some(300L), segmentSecs = 2L * 86400)
     assertSame(spark.read.parquet(s"$dir/gold"), oracle)
-    // resume after a kill must read state through the snapshot + deltas
+    // kill after the 6th slice's gold write: the resume reads state
+    // through the snapshot + the deltas after it
     val dir2 = Files.createTempDirectory("bf_skew_resume").toString
-    val failAt = Backfill.sliceId(start + 3 * sliceSecs)
+    val failAt = Backfill.sliceId(start + 5 * width)
     intercept[RuntimeException] {
-      Backfill.run(spark, megaBronze, dir2, start, sliceSecs, nSlices,
-        skewHeavyThreshold = Some(300L), compactStateEvery = 2,
-        segmentSecs = 2L * 86400, failAfterGoldWriteOfSlice = Some(failAt))
+      Backfill.run(spark, megaBronze, dir2, start, width, n,
+        skewHeavyThreshold = Some(300L), segmentSecs = 2L * 86400,
+        failAfterGoldWriteOfSlice = Some(failAt))
     }
-    Backfill.run(spark, megaBronze, dir2, start, sliceSecs, nSlices,
-      skewHeavyThreshold = Some(300L), compactStateEvery = 2, segmentSecs = 2L * 86400)
+    val snapDir = new org.apache.hadoop.fs.Path(s"$dir2/_meta/conv_state_snapshot")
+    assert(fs.exists(snapDir) && fs.listStatus(snapDir).exists(st =>
+      fs.exists(new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS"))),
+      "expected a _SUCCESS-marked state snapshot at the crash point")
+    Backfill.run(spark, megaBronze, dir2, start, width, n,
+      skewHeavyThreshold = Some(300L), segmentSecs = 2L * 86400)
     assertSame(spark.read.parquet(s"$dir2/gold"), oracle)
   }
 
   test("adaptive compaction: chain longer than 4 deltas snapshots even with periodic off") {
-    // 2-day slices over the full span -> ~20 slices; compactStateEvery=0
-    // disables the periodic trigger, so any snapshot present proves the
-    // adaptive chain-length trigger fired
+    // 2-day slices over the full span -> ~20 slices; compaction has no
+    // other trigger, so any snapshot present proves the adaptive
+    // chain-length trigger fired
     val dir = Files.createTempDirectory("bf_adaptive").toString
-    Backfill.run(spark, bronze, dir, start, 2L * 86400, 20, compactStateEvery = 0)
+    Backfill.run(spark, bronze, dir, start, 2L * 86400, 20)
     val snapDir = new org.apache.hadoop.fs.Path(s"$dir/_meta/conv_state_snapshot")
     val fs = snapDir.getFileSystem(spark.sparkContext.hadoopConfiguration)
     assert(fs.exists(snapDir) && fs.listStatus(snapDir).nonEmpty,
@@ -157,6 +166,33 @@ class BackfillSpec extends AnyFunSuite {
     assert(dirs.forall(_ == s"slice_start=$start"), dirs.mkString(","))
     // and a resume over the sparse table is a no-op (zero-row slices committed)
     assert(Backfill.run(spark, sparse, dir, start, sliceSecs, nSlices).forall(_.skipped))
+  }
+
+  test("silver: the served projection == SilverBuilder.build; a materialized copy equals it, " +
+      "with no stale slice dir after a sparse re-run") {
+    val silverCols = TranscriptSchema.silver.fieldNames.map(col).toSeq
+    def same(a: DataFrame, b: DataFrame): Unit = {
+      assert(a.count() == b.count())
+      assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
+    }
+    val dir = Files.createTempDirectory("bf_silver").toString
+    def sliceDirs(table: String): Set[String] =
+      fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/$table")).map(_.getPath.getName)
+        .filter(_.startsWith("slice_id=")).toSet
+    same(Backfill.readSilver(spark, committedTable).drop("slice_id"),
+      SilverBuilder.build(bronze).select(silverCols: _*))
+    Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices, materializeSilver = true)
+    same(spark.read.parquet(s"$dir/silver"), Backfill.readSilver(spark, dir))
+    // the empty-slice case's sparse re-run: slice 1 runs the full
+    // (empty) pipeline, slices 2..4 the probe fast path
+    val sparse = bronze.filter(col("ts") < timestamp_seconds(lit(start + sliceSecs)))
+    Checkpoint.invalidateFrom(spark, dir, start + sliceSecs)
+    Backfill.run(spark, sparse, dir, start, sliceSecs, nSlices, materializeSilver = true)
+    same(spark.read.parquet(s"$dir/silver"), Backfill.readSilver(spark, dir))
+    same(Backfill.readSilver(spark, dir).drop("slice_id"),
+      SilverBuilder.build(sparse).select(silverCols: _*))
+    assert(sliceDirs("silver") == sliceDirs("gold"),
+      s"silver ${sliceDirs("silver")} vs gold ${sliceDirs("gold")}")
   }
 
   test("gold file count per slice is bounded by data size, not core count") {

@@ -51,11 +51,14 @@ class FastWindowsSpec extends AnyFunSuite {
     assert(r3.getAs[Long]("turns_cnt_1h") == 4)
   }
 
-  test("fast chunked and auto dispatch == declarative") {
+  test("fast chunked == declarative at 1-day, 3.5-day and 7-day segments") {
     val silver = SilverBuilder.build(
       TranscriptGen.transcripts(spark, nConvs = 15, avgTurns = 15, megaConvs = 1, megaTurns = 600))
     val ref = FeatureWindows.rangeFeatures(silver)
-    assertSame(FastWindows.rangeFeaturesChunked(silver, segmentSecs = 86400L), ref)
-    assertSame(FastWindows.rangeFeaturesAuto(silver, heavyThreshold = 100L), ref)
+    // small segments (high parallelism, 8x replication), the benches'
+    // 3.5 days, and segment = max lookback (2x replication)
+    Seq(86400L, 302400L, 604800L).foreach { seg =>
+      assertSame(FastWindows.rangeFeaturesChunked(silver, segmentSecs = seg), ref)
+    }
   }
 }

@@ -55,4 +55,21 @@ class SkewDispatchSpec extends AnyFunSuite {
     assert(Backfill.relativeThreshold(Some(300L), Some(5000000L), 4).isEmpty)
     assert(Backfill.relativeThreshold(None, Some(5000000L), 4).isEmpty)
   }
+
+  test("at <= 8 cores the relative rule never fires and never asks for the row estimate") {
+    // alpha / cores >= beta: 2r/cores >= r/4 for every r, so no
+    // candidate can pass both the threshold and the budget
+    for (cores <- 1 to 8; exp <- 3 to 9; abs <- Seq(Abs, Long.MaxValue)) {
+      var asked = 0
+      val r = BigInt(10).pow(exp).toLong
+      assert(Backfill.relativeThreshold(Some(abs), { asked += 1; Some(r) }, cores).isEmpty,
+        s"cores=$cores rows=$r")
+      assert(asked == 0, s"row estimate evaluated at cores=$cores rows=$r")
+    }
+    // one core more and the same slice routes: the gate is exact
+    var asked = 0
+    assert(Backfill.relativeThreshold(Some(Long.MaxValue), { asked += 1; Some(1000000000L) }, 9)
+      .contains(2000000000L / 9))
+    assert(asked == 1)
+  }
 }
