@@ -5,7 +5,6 @@ import java.sql.Timestamp
 import scala.annotation.tailrec
 import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
-import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -44,90 +43,6 @@ object Backfill {
   final case class SliceReport(sliceId: String, rows: Long, wallMs: Long, skipped: Boolean)
 
   private[graft] val MaxLookbackSecs = 604800L // the widest feature frame (7d)
-
-  /** CORE-AWARE heavy dispatch (round-6): the absolute
-    * `skewHeavyThreshold` was calibrated at low parallelism where
-    * cpu-sum bounds the wall; at high core counts the stage wall is
-    * max(task), so a conversation whose slice rows exceed a small
-    * multiple of the FAIR CORE SHARE (sliceRows / cores) straggles the
-    * sweep stage long before the absolute crossover — at 1000 cores an
-    * absolute 10^7 threshold leaves a 10M-row task serializing while
-    * every other core handles ~1M rows. Relative candidate threshold =
-    * max(floor, alpha x sliceRows / cores), alpha = 2.
-    *
-    * Routing is additionally gated on the candidates being a small
-    * FRACTION of the slice ([[RouteBudgetFraction]]): the segmented
-    * detour only wins when it runs OFF the critical path — the light
-    * sweep of the other (1 - beta) of the slice keeps the cores busy
-    * while the detour's extra full-width passes process the tail.
-    * Measured counter-example (this round, driver bench shape): the
-    * planted 2M-turn megas are 83% of the 4.8M-turn table, and routing
-    * them pushed backfill_gold 49.8 -> 71.6-134.8 s across three heavy
-    * -path variants — when the "tail" IS most of the slice, every
-    * extra pass over it is a pass over the whole slice, and the plain
-    * sweep's single hot task is the cheaper evil. Conversations above
-    * the ABSOLUTE crossover always route (the sweep would abort on
-    * them anyway — cpu-sum explosion beats any detour argument).
-    */
-  private val SkewAlpha = 2L
-
-  /** Routing below this many rows never pays: the segmented path's
-    * fixed cost (summary pass + seed broadcast + its own exchange)
-    * exceeds any possible straggle saving. Also keeps the relative rule
-    * inert in small-data specs, whose dispatch behavior is pinned by
-    * their explicit absolute thresholds.
-    */
-  private val MinRouteRows = 200000L
-
-  /** Relative-routed rows may total at most this fraction of the
-    * slice (see the critical-path rationale above).
-    */
-  private val RouteBudgetFraction = 0.25
-
-  /** Relative candidate threshold for a slice, None when relative
-    * dispatch cannot fire (no absolute threshold configured, no row
-    * estimate, or no conversation could pass both the candidate
-    * threshold and the budget: a candidate needs > relThr rows AND
-    * <= beta x rows budget, impossible once relThr >= beta x rows).
-    *
-    * At alpha / cores >= beta (<= 8 cores) that holds for EVERY row
-    * count, since relThr >= alpha x rows / cores >= beta x rows — so
-    * the core count is checked first and `rowsEst` (a count job on a
-    * run's first slice) is not evaluated at all.
-    */
-  private[graft] def relativeThreshold(
-      absolute: Option[Long],
-      rowsEst: => Option[Long],
-      cores: Int): Option[Long] = {
-    val c = Math.max(cores, 1)
-    if (SkewAlpha >= RouteBudgetFraction * c) None
-    else (absolute, rowsEst) match {
-      case (Some(a), Some(r)) =>
-        val rel = Math.max(MinRouteRows, SkewAlpha * r / c)
-        if (rel < a && rel < (r * RouteBudgetFraction).toLong) Some(rel) else None
-      case _ => None
-    }
-  }
-
-  /** Pick the routed set from detected (conv, sliceRows) candidates:
-    * every conversation above the absolute crossover, plus the largest
-    * relative candidates while their cumulative rows fit the slice
-    * budget, capped at `cap`.
-    */
-  private[graft] def selectRouted(
-      candidates: Seq[(String, Long)],
-      absolute: Long,
-      relThr: Long,
-      budgetRows: Long,
-      cap: Int): Seq[String] = {
-    val sorted = candidates.sortBy { case (id, n) => (-n, id) }
-    val must = sorted.filter(_._2 > absolute)
-    var cum = 0L
-    val opt = sorted
-      .filter { case (_, n) => n <= absolute && n > relThr }
-      .takeWhile { case (_, n) => cum += n; cum <= budgetRows }
-    (must ++ opt).take(cap).map(_._1)
-  }
 
   def sliceId(startSec: Long): String = s"s$startSec"
 
@@ -256,7 +171,11 @@ object Backfill {
     * handles ~600k rows/conversation/slice in well under a second of
     * straggler time while the segmented machinery costs seconds of
     * fixed overhead — dispatch pays only in the millions
-    * (Bench/docs/NEXT.md).
+    * (Bench/docs/NEXT.md). This absolute crossover is the only rule.
+    * A core-aware one (2x a fair core share) made the local[32] bench
+    * backfill 1.4-2.7x slower where it routed (OPTIMIZATION_r06.md
+    * §2); gated to a 25% slice budget it routed nothing at local[32]
+    * or local[16] and cost a count and a detection job per run.
     *
     * `materializeSilver`: the gold schema is a superset of silver
     * (silver columns + features), so the silver layer is SERVED as a
@@ -308,8 +227,8 @@ object Backfill {
 
     val env = RunEnv(spark, bronze, outDir, sliceSecs, nSlices, sessionGapSecs,
       skewHeavyThreshold, segmentSecs, materializeSilver)
-    // committed row counts: the resume set, and the seeds of the
-    // empty-slice flag and the row estimate across resumes
+    // committed row counts: the resume set, and the seed of the
+    // empty-slice flag across resumes
     val committedRows: Map[String, Long] = wms.map(w => w.sliceId -> w.rowCount).toMap
 
     (0 until nSlices).foldLeft((Carried(), Vector.empty[SliceReport])) {
@@ -318,8 +237,7 @@ object Backfill {
         val t0 = System.nanoTime()
         val (report, next) = committedRows.get(s.id) match {
           case Some(rows) =>
-            (SliceReport(s.id, 0L, 0L, skipped = true),
-              c.copy(prevEmpty = rows == 0L, lastRows = if (rows > 0L) Some(rows) else c.lastRows))
+            (SliceReport(s.id, 0L, 0L, skipped = true), c.copy(prevEmpty = rows == 0L))
           case None if c.prevEmpty && phase(s.id, "empty probe")(env.sliceRows(s).isEmpty) =>
             commitEmpty(env, s)
             (SliceReport(s.id, 0L, (System.nanoTime() - t0) / 1000000L, skipped = false), c)
@@ -343,12 +261,8 @@ object Backfill {
       // at `heavyExpiry`, where one re-detection refreshes the set
       heavyIds: Seq[String] = Nil,
       heavyExpiry: Int = -1,
-      // no relative detection before this slice index (see [[plan]])
-      relCooldownUntil: Int = -1,
-      // the last slice written (bytes, rows) or found committed (rows):
-      // sweep-exchange and relative-dispatch sizing
+      // the last slice's written bytes: sweep-exchange sizing
       lastBytes: Option[Long] = None,
-      lastRows: Option[Long] = None,
       // the previous slice had no rows: probe this one (see [[commitEmpty]])
       prevEmpty: Boolean = false)
 
@@ -370,7 +284,8 @@ object Backfill {
     val goldPath = s"$outDir/gold"
     val silverPath = s"$outDir/silver"
     val cores: Int = spark.sparkContext.defaultParallelism
-    val routedCap: Int = Math.max(64, 2 * cores)
+    // most conversations one detection routes
+    val routedCap: Int = Math.max(128, 4 * cores)
     // slices until a carried heavy set expires: the lookback drains
     val heavyReach: Int = (Math.ceil(MaxLookbackSecs.toDouble / sliceSecs) + 1).toInt
 
@@ -393,17 +308,6 @@ object Backfill {
       if (s > 0 && s < BigInt(Long.MaxValue) / 4) Some((s / BigInt(Math.max(nSlices, 1))).toLong)
       else None
     }
-
-    /** First-slice row estimate for relative dispatch: bronzeRows /
-      * nSlices. A parquet count(*) is footer-metadata-only, one job per
-      * run, taken only when relative dispatch can fire and no neighbor
-      * estimate exists.
-      */
-    lazy val bronzeRowsPerSlice: Option[Long] =
-      try {
-        val n = bronze.count()
-        if (n > 0) Some(Math.max(1L, n / Math.max(nSlices, 1))) else None
-      } catch { case NonFatal(_) => None }
 
     def sliceRows(s: Slice): DataFrame =
       bronze.filter(bronze("ts") >= tsLit(bronze, s.start) && bronze("ts") < tsLit(bronze, s.end))
@@ -461,57 +365,23 @@ object Backfill {
         else None)
         .orElse(env.bronzeBytesEst)
       val sweepParts = sweepPartitions(env.spark, estBytes)
+      // a carried heavy set is re-detected where its lookback drains
       env.skewHeavyThreshold match {
-        case None => SlicePlan(sweepParts, c)
-        case Some(abs) =>
-          // relative-dispatch inputs: the slice-row estimate (previous
-          // written/committed slice, else bronzeRows/nSlices — asked for
-          // only when the relative rule can fire at this core count)
-          // and the fair-core-share threshold. A relative round that
-          // routes NOTHING starts a cooldown — sustained shapes where
-          // routing never pays (a mega that IS most of the slice) stop
-          // paying the per-slice count jobs; the absolute capacity
-          // backstop in [[write]] still guards genuine cpu-sum
-          // explosions meanwhile.
-          lazy val rowsEst = c.lastRows.orElse(env.bronzeRowsPerSlice)
-          val relThr =
-            if (s.i < c.relCooldownUntil) None
-            else relativeThreshold(Some(abs), rowsEst, env.cores)
-          if (relThr.isEmpty && (c.heavyIds.isEmpty || s.i < c.heavyExpiry))
-            SlicePlan(sweepParts, c)
-          else {
-            val thr = relThr.getOrElse(abs)
-            val cand = detectCounts(env, s, in, thr)
-            val budget = relThr.flatMap(_ => rowsEst)
-              .map(r => (r * RouteBudgetFraction).toLong).getOrElse(Long.MaxValue)
-            val routed = selectRouted(cand, abs, thr, budget, env.routedCap)
-            val cooldown =
-              if (relThr.isEmpty || routed.nonEmpty) c.relCooldownUntil
-              else {
-                if (cand.nonEmpty)
-                  println(s"[backfill] ${s.id}: ${cand.size} conversation(s) above the relative " +
-                    s"threshold $thr but past the ${RouteBudgetFraction} slice-budget — " +
-                    "keeping them on the plain sweep (detour would ride the critical path)")
-                // suppressed candidates change slowly (a mega must halve,
-                // or the slice 2x, before the budget admits it) — back
-                // off harder than the carried-heavy expiry so sustained
-                // unroutable shapes pay ~one count job per backfill, not
-                // one per heavyReach slices
-                s.i + Math.max(env.heavyReach, 4)
-              }
-            SlicePlan(sweepParts, c.copy(heavyIds = routed, heavyExpiry = s.i + env.heavyReach,
-              relCooldownUntil = cooldown))
-          }
+        case Some(thr) if c.heavyIds.nonEmpty && s.i >= c.heavyExpiry =>
+          SlicePlan(sweepParts, c.copy(heavyIds = detectCounts(env, s, in, thr),
+            heavyExpiry = s.i + env.heavyReach))
+        case _ => SlicePlan(sweepParts, c)
       }
     }
 
   /** Skew detection on PER-SLICE cost: rows this slice, or committed
     * lookback events (what one sweep task would have to stream for the
-    * conversation). Candidates above `thr` are the skew TAIL — one
+    * conversation). Conversations above `thr` are the skew TAIL — one
     * narrow map-combined count + driver collect beats re-planning
-    * broadcast joins into all split branches.
+    * broadcast joins into all split branches. Largest first, at most
+    * `routedCap` of them.
     */
-  private def detectCounts(env: RunEnv, s: Slice, in: SliceInputs, thr: Long): Seq[(String, Long)] =
+  private def detectCounts(env: RunEnv, s: Slice, in: SliceInputs, thr: Long): Seq[String] =
     phase(s.id, "heavy ids") {
       val sliceCnt = in.raw.groupBy(col("conv_id")).count()
       val ctxCnt = in.ctx.groupBy(col("conv_id")).count()
@@ -519,8 +389,8 @@ object Backfill {
         .unionByName(ctxCnt.filter(col("count") > thr))
         .groupBy(col("conv_id")).agg(max(col("count")).as("count"))
         .orderBy(col("count").desc, col("conv_id"))
-        .limit(2 * env.routedCap).collect()
-        .map(r => (r.getString(0), r.getLong(1))).toSeq
+        .limit(env.routedCap).collect()
+        .map(_.getString(0)).toSeq
     }
 
   /** A landed gold write: its observed lineage row (None = observe
@@ -626,9 +496,8 @@ object Backfill {
         landed match {
           case Success(metrics) => SliceWrite(metrics, (c.heavyIds ++ inverted).distinct, c)
           case Failure(e) if n <= 3 && isCapacity(e) =>
-            // capacity aborts fire at the ABSOLUTE crossover only;
-            // everything detected there must route
-            val detected = detectCounts(env, s, in, env.skewHeavyThreshold.get).map(_._1)
+            // everything detected at the crossover must route
+            val detected = detectCounts(env, s, in, env.skewHeavyThreshold.get)
             if (!detected.exists(d => !c.heavyIds.contains(d))) throw e
             println(s"[backfill] ${s.id}: routing ${detected.size} oversize " +
               s"conversation(s) to the segmented heavy path: " +
@@ -680,7 +549,7 @@ object Backfill {
         phase(s.id, "state compaction")(Checkpoint.compactConvState(spark, env.outDir, s.start))
       (SliceReport(s.id, rows, wallMs, skipped = false),
         if (rows == 0L) w.carried.copy(prevEmpty = true)
-        else w.carried.copy(lastBytes = bytes, lastRows = Some(rows), prevEmpty = false))
+        else w.carried.copy(lastBytes = bytes, prevEmpty = false))
     }
 
   private def deleteDir(spark: SparkSession, path: String): Unit = {

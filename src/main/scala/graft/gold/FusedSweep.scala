@@ -36,8 +36,10 @@ import graft.schema.TranscriptSchema
   * PRECONDITION (transcript contract): within a conversation, ts is
   * non-decreasing in turn_idx for the rows that survive dedup — true
   * of transcripts by construction (turn order IS time order). The
-  * sweep validates this and throws if violated, in which case the
-  * declarative path (SilverBuilder + FeatureWindows) applies.
+  * sweep validates this and throws if violated, in which case
+  * [[graft.Backfill]] reroutes the offending conversations to
+  * `heavyGold(segmented = false)`: segment-chunked range features
+  * (FastWindows.rangeFeaturesChunked) + the turn-ordered `withState`.
   *
   * Semantics are bit-identical to the declarative pipeline
   * (FusedSweepSpec property-tests equality including injected
@@ -171,26 +173,26 @@ object FusedSweep {
     // per bench slice
     StructField("text_len", LongType, nullable = true))
 
-  /** Run the fused sweep. `state` rows carry (conv_id, st_last_ts,
-    * st_last_turn_idx, st_last_role, st_sessions, slice_start);
-    * `context` is prior-slice silver inside the lookback; `bronze` is
-    * the validated current slice. Emits gold rows for the slice only.
-    */
-  /** `capacityLimit`: optimistic skew detection — the sweep throws a
-    * marked exception the moment one conversation's accepted slice
-    * rows OR side-stream context entries exceed the limit (the same
-    * two quantities the explicit dispatch counts). The caller catches
-    * it, runs the explicit heavy-id detection, and re-runs with those
-    * conversations routed — so the common all-light slice pays ZERO
-    * detection jobs.
-    */
   /** Default sweep-exchange over-partitioning multiple of
     * `spark.sql.shuffle.partitions` (see the rationale at the
     * numParts computation in [[gold]]).
     */
   val OverPartitionFactor: Int = 8
 
-  /** `stateSink`: when set, each sweep task also emits the slice's
+  /** Run the fused sweep. `state` rows carry (conv_id, st_last_ts,
+    * st_last_turn_idx, st_last_role, st_sessions, slice_start);
+    * `context` is prior-slice silver inside the lookback; `bronze` is
+    * the validated current slice. Emits gold rows for the slice only.
+    *
+    * `capacityLimit`: optimistic skew detection — the sweep throws a
+    * marked exception the moment one conversation's accepted slice
+    * rows OR side-stream context entries exceed the limit (the same
+    * two quantities the explicit dispatch counts). The caller catches
+    * it, runs the explicit heavy-id detection, and re-runs with those
+    * conversations routed — so the common all-light slice pays ZERO
+    * detection jobs.
+    *
+    * `stateSink`: when set, each sweep task also emits the slice's
     * per-conversation state delta as a parquet side-file — see
     * [[graft.meta.StateSideSink]]. This replaces the separate
     * post-write slice-meta aggregate job for every conversation that

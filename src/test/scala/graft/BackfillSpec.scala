@@ -127,6 +127,23 @@ class BackfillSpec extends AnyFunSuite {
     assertSame(spark.read.parquet(s"$dir2/gold"), oracle)
   }
 
+  test("a skew threshold above every conversation adds no Spark job; gold is identical") {
+    val sc = spark.sparkContext
+    def runWith(thr: Option[Long]): (String, Int) = {
+      val dir = Files.createTempDirectory("bf_thr").toString
+      val (reports, jobs) = TestListenerBus.jobsDuring(sc)(
+        Backfill.run(spark, bronze, dir, start, sliceSecs, nSlices, skewHeavyThreshold = thr))
+      assert(reports.count(!_.skipped) == nSlices)
+      (dir, jobs)
+    }
+    val (plainDir, plainJobs) = runWith(None)
+    val (thrDir, thrJobs) = runWith(Some(10000000L))
+    assert(thrJobs == plainJobs, s"$thrJobs jobs with the threshold vs $plainJobs without")
+    val (a, b) = (spark.read.parquet(s"$thrDir/gold"), spark.read.parquet(s"$plainDir/gold"))
+    assert(a.count() == b.count())
+    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
+  }
+
   test("adaptive compaction: chain longer than 4 deltas snapshots even with periodic off") {
     // 2-day slices over the full span -> ~20 slices; compaction has no
     // other trigger, so any snapshot present proves the adaptive

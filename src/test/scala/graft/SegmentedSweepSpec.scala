@@ -2,7 +2,10 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.TestListenerBus
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LocalTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -121,6 +124,26 @@ class SegmentedSweepSpec extends AnyFunSuite {
     assert(byK(1) == 8L, s"pruned feeder count (got $byK)")
     val shortFeeders = input.filter(col("_k") === 1 && col("conv_id") === "short").count()
     assert(shortFeeders == 1L, "short ships only its own ctx feeder")
+  }
+
+  test("routed conversations with context but no slice rows: zero rows, no exchange") {
+    // a carried heavy id whose conversation went quiet: its committed
+    // lookback events still reach the heavy path, its slice rows do not
+    val quiet = nastyBronze.filter(col("conv_id") === "nasty").cache()
+    val context = SilverBuilder.build(quiet).select(emptyContext.columns.map(col): _*)
+    assert(context.count() > 0)
+    val noSliceRows = SilverBuilder.validate(quiet.limit(0))
+    val out = Backfill.heavyGold(emptyState, context, noSliceRows,
+      start = start, gapSecs = 1800L, segmentSecs = 2L * 86400)
+    assert(out.schema == FusedSweep.gold(emptyState, emptyContext, noSliceRows).schema)
+    // the segmented sweep hides its exchange inside an RDD scan, so
+    // the plan must be a local scan and collecting it must run no job
+    val plan = out.queryExecution.executedPlan
+    assert(plan.collectLeaves().forall(_.isInstanceOf[LocalTableScanExec]) &&
+      plan.collect { case e: ShuffleExchangeLike => e }.isEmpty, s"expected a local scan:\n$plan")
+    val (rows, jobs) = TestListenerBus.jobsDuring(spark.sparkContext)(out.collect())
+    assert(rows.isEmpty && jobs == 0, s"${rows.length} rows, $jobs job(s)")
+    quiet.unpersist()
   }
 
   test("backfill with mid-size routed conversations == single-shot (fused heavy)") {
