@@ -50,7 +50,7 @@ object Backfill {
     * `[phase] <slice> <name> <secs>` for bench forensics; zero cost
     * when unset.
     */
-  private val phaseLog = sys.env.get("SPARK_GRAFT_PHASE_LOG").contains("1")
+  private[graft] val phaseLog = sys.env.get("SPARK_GRAFT_PHASE_LOG").contains("1")
   @inline private def phase[A](id: String, name: String)(f: => A): A =
     if (!phaseLog) f
     else {
@@ -299,6 +299,9 @@ object Backfill {
         StructField("text_len", LongType, nullable = true),
         StructField("slice_id", StringType, nullable = true)))
 
+    // one gold row as the sweep emits it: the state rows' `latest` type
+    val goldRowType: StructType = FusedSweep.goldSchemaFor(bronze.schema("ts").dataType)
+
     /** First-slice byte estimate: bronze plan stats / nSlices (file
       * bytes for parquet scans; the "unknown" Long.MaxValue default is
       * discarded).
@@ -546,7 +549,8 @@ object Backfill {
         new Timestamp(s.start * 1000L), new Timestamp(s.end * 1000L), hw, rows))
       if (phase(s.id, "compaction check")(
           Checkpoint.uncompactedDeltaDirs(spark, env.outDir, s.start + 1) > MaxStateChain))
-        phase(s.id, "state compaction")(Checkpoint.compactConvState(spark, env.outDir, s.start))
+        phase(s.id, "state compaction")(
+          Checkpoint.compactConvState(spark, env.outDir, s.start, env.goldRowType))
       (SliceReport(s.id, rows, wallMs, skipped = false),
         if (rows == 0L) w.carried.copy(prevEmpty = true)
         else w.carried.copy(lastBytes = bytes, prevEmpty = false))

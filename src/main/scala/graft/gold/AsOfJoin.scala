@@ -1,14 +1,16 @@
 package graft.gold
 
-import scala.collection.mutable
+import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, GraftInternalAccess}
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Ascending, BoundReference, InterpretedOrdering, SortOrder}
+import org.apache.spark.sql.catalyst.expressions.AttributeReference
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.StructType
-import org.apache.spark.unsafe.types.UTF8String
+
+import graft.meta.Checkpoint
 
 /** Point-in-time (as-of) join: for each query (conv_id, ts_q), return
   * the payload of the latest history row with `ts <= ts_q` (ties at
@@ -16,14 +18,19 @@ import org.apache.spark.unsafe.types.UTF8String
   * ts_q ARE visible — matching the inclusive upper bound of the
   * reference's window frames).
   *
-  * This single operator replaces the reference's entire SageMaker
-  * Feature Store surface: the online `get_record` latest-row lookup
-  * (feature_store/ingest_features.py:107-122) is [[latestPerKey]]
-  * (= as-of at ts = +inf) over the whole table and [[latestForKeys]]
-  * for a small key set, and offline point-in-time training joins
-  * against the append log (register_feature_groups.py:44-48) are
-  * [[asOf]] at historical timestamps. Zero temporal leakage by
-  * construction.
+  * The reference keeps two stores (SageMaker Feature Store), and so
+  * does this engine:
+  *  - the OFFLINE store is the gold append log: point-in-time training
+  *    joins against it (register_feature_groups.py:44-48) are [[asOf]]
+  *    at historical timestamps, and a whole-table latest read is
+  *    [[latestPerKey]] (= as-of at ts = +inf);
+  *  - the ONLINE store is the backfill's per-conversation state table
+  *    (`_meta/conv_state`, one row per conversation per slice, each
+  *    carrying the conversation's newest gold row): the `get_record`
+  *    latest-row lookup (feature_store/ingest_features.py:107-122) for
+  *    a small key set is [[latestForKeys]], answered from it on the
+  *    driver with no Spark job.
+  * Zero temporal leakage by construction.
   *
   * Physical shape (scale): tag sides, union, ONE hash exchange on
   * conv_id + one local sort by (ts, side, turn_idx), then a running
@@ -33,12 +40,6 @@ import org.apache.spark.unsafe.types.UTF8String
   * O((|Q|+|H|) log) per partition and broadcast-free, so it survives
   * 100 TB histories; skewed mega-conversations follow the same
   * time-segment lever as the window stage ([[asOfSegmented]]).
-  *
-  * Keyed lookups ([[latestForKeys]]) take the other shape: the key set
-  * is small, so it goes to the driver as a literal `conv_id IN (...)`
-  * that the parquet scan pushes down, each scan task keeps the newest
-  * row per key, and the driver merges the per-task rows into an eager
-  * local result. One Spark job, no shuffle, no window.
   */
 object AsOfJoin {
 
@@ -203,50 +204,81 @@ object AsOfJoin {
   }
 
   /** J2 batched (`batch_get_record`, ingest_features.py:124-143): the
-    * latest row per key, restricted to a small key set, in ONE Spark
-    * job. The key frame's distinct non-null conv_ids are collected on
-    * the driver (a `batch_get_record`-sized set, not a table: they
-    * become one literal `conv_id IN (...)` filter that the parquet scan
-    * prunes row groups with; a local key frame collects without a job),
-    * each scan task keeps the newest row per key by (ts, turn_idx), and
-    * the driver merges those per-task rows.
+    * latest row per key by (ts, turn_idx), restricted to a small key
+    * set. The key frame's distinct non-null conv_ids are collected on
+    * the driver (a `batch_get_record`-sized set; a local key frame
+    * collects without a job).
+    *
+    * When `history` is a plain column projection of a committed engine
+    * gold table (`spark.read.parquet("<out>/gold")`, optionally minus
+    * columns such as `slice_id`), the rows come from the online store —
+    * the state table the backfill commits next to gold — through
+    * [[graft.meta.Checkpoint.latestGoldRows]]: a driver-side parquet
+    * read of the snapshot plus the later deltas for these keys, ZERO
+    * Spark jobs, and a cost that grows with conversations, not turns.
+    * [[committedGold]] decides whether `history` is such a table;
+    * anything else (an in-memory frame, a filtered read, a table with
+    * an uncommitted slice dir) takes the gold scan
+    * `latestPerKey(history.filter(conv_id IN keys))`. Both answer
+    * exactly [[latestPerKey]] restricted to the keys.
     *
     * The result is eager: a local DataFrame (`LocalRelation`) in
     * `history`'s column order. Collecting it launches no further job,
     * and no action on it rescans `history`. Null keys match nothing; an
-    * empty key set returns zero rows without a job. For a whole-table
-    * read use [[latestPerKey]].
+    * empty key set returns zero rows without a job or a read. With
+    * `SPARK_GRAFT_PHASE_LOG=1` each call prints one `[phase] lookup`
+    * line: the path taken, its wall time and, from the state table,
+    * the files opened, rows decoded and bytes read.
     */
   def latestForKeys(history: DataFrame, keys: DataFrame): DataFrame = {
-    val ids = keys.select(col("conv_id")).collect().flatMap(r => Option(r.getString(0))).distinct
-    val newest = newestPerKey(history.schema)
-    val perTask =
-      if (ids.isEmpty) Array.empty[InternalRow]
-      else GraftInternalAccess.toInternalRdd(history.filter(col("conv_id").isin(ids.toSeq: _*)))
-        .mapPartitions(rows => newest(rows).iterator).collect()
-    GraftInternalAccess.localCreateDataFrame(
-      history.sparkSession, newest(perTask.iterator).toSeq, history.schema)
+    val spark = history.sparkSession
+    // straight from the executed plan's rows: a key set needs neither
+    // the SQL-execution bookkeeping nor the Row conversion of a collect
+    val k = keys.schema.fieldIndex("conv_id")
+    val ids = keys.queryExecution.executedPlan.executeCollect()
+      .flatMap(r => if (r.isNullAt(k)) None else Some(r.getUTF8String(k).toString)).distinct.toSeq
+    if (ids.isEmpty) return GraftInternalAccess.localCreateDataFrame(spark, Nil, history.schema)
+    val t0 = System.nanoTime()
+    def logged(line: String): Unit =
+      if (graft.Backfill.phaseLog)
+        println(f"[phase] lookup $line%-22s ${(System.nanoTime() - t0) / 1e9}%7.2f s")
+    committedGold(history).flatMap { case (outDir, slices) =>
+      Checkpoint.latestGoldRows(spark, outDir, slices, ids, history.schema)
+    } match {
+      case Some(read) =>
+        logged(s"state table (${read.files} files, ${read.rowsDecoded} rows, ${read.bytes} B)")
+        GraftInternalAccess.localCreateDataFrame(spark, read.rows, history.schema)
+      case None =>
+        val rows = latestPerKey(history.filter(col("conv_id").isin(ids: _*))).collect()
+        logged("gold scan")
+        spark.createDataFrame(rows.toSeq.asJava, history.schema)
+    }
   }
 
-  /** Reduces InternalRows in `schema` to the newest row per conv_id by
-    * (ts, turn_idx) ascending, nulls lowest — [[latestPerKey]]'s order.
-    * Kept rows are copied (scan iterators reuse their row buffer).
+  /** `(table dir, listed slice ids)` when `history`'s analyzed plan is
+    * a projection of plain columns over ONE parquet relation rooted at
+    * `<dir>/gold` whose files all sit in its `slice_id=` dirs; the
+    * slice ids are the dirs the relation listed. The state read checks
+    * them against the committed watermarks before it answers.
     */
-  private def newestPerKey(schema: StructType): Iterator[InternalRow] => Iterable[InternalRow] = {
-    val key = schema.fieldIndex("conv_id")
-    val order = new InterpretedOrdering(Seq("ts", "turn_idx").map { c =>
-      val i = schema.fieldIndex(c)
-      SortOrder(BoundReference(i, schema(i).dataType, nullable = true), Ascending)
-    })
-    rows => {
-      val latest = mutable.HashMap.empty[UTF8String, InternalRow]
-      rows.foreach { r =>
-        if (latest.get(r.getUTF8String(key)).forall(order.lt(_, r))) {
-          val kept = r.copy()
-          latest(kept.getUTF8String(key)) = kept
-        }
+  private def committedGold(history: DataFrame): Option[(String, Set[String])] = {
+    def relation(p: LogicalPlan): Option[HadoopFsRelation] = p match {
+      case Project(list, child) if list.forall(_.isInstanceOf[AttributeReference]) => relation(child)
+      case l: LogicalRelation => l.relation match {
+        case fs: HadoopFsRelation if fs.fileFormat.isInstanceOf[ParquetFileFormat] => Some(fs)
+        case _ => None
       }
-      latest.values
+      case _ => None
+    }
+    relation(history.queryExecution.analyzed).flatMap { fs =>
+      fs.location.rootPaths match {
+        case Seq(root) if root.getName == "gold" =>
+          val dirs = fs.location.inputFiles.toSeq.map(f => new org.apache.hadoop.fs.Path(f).getParent)
+          if (dirs.forall(d => d.getParent == root && d.getName.startsWith("slice_id=")))
+            Some((root.getParent.toString, dirs.map(_.getName.stripPrefix("slice_id=")).toSet))
+          else None
+        case _ => None
+      }
     }
   }
 }

@@ -155,7 +155,7 @@ object FusedSweep {
   /** Gold output schema: silver columns + dt + the eight feature
     * columns, preserving the input's timestamp flavor (ntz/tz).
     */
-  private[gold] def goldSchemaFor(tsType: DataType): StructType = goldSchema(tsType)
+  private[graft] def goldSchemaFor(tsType: DataType): StructType = goldSchema(tsType)
 
   private def goldSchema(tsType: DataType): StructType = StructType(Seq(
     StructField("conv_id", StringType, nullable = true),
@@ -238,7 +238,7 @@ object FusedSweep {
       .zipPartitions(GraftInternalAccess.toInternalRdd(ctxSorted.toDF())) {
         (data, cx) =>
           val writer = sink.map { s =>
-            val w = new graft.meta.StateSideWriter(s)
+            val w = new graft.meta.StateSideWriter(s, outSchema)
             // close on task completion: commits the parquet footer on
             // success; on failure leaves a partial the retry overwrites
             Option(org.apache.spark.TaskContext.get())
@@ -285,10 +285,19 @@ object FusedSweep {
     private var accTurn = 0
     private var accRole: UTF8String = _
     private var accSession = 0
+    // ... and the conversation's newest EMITTED gold row by
+    // (ts, turn_idx), the state row's `latest`. Rows leave in turn
+    // order, so a row at an equal or later ts replaces the kept one
+    // (the monotonicity check works in whole seconds; this keeps the
+    // exact order within one). A copy of the emit array: its
+    // references point into the group's copied input rows.
+    private val latestOut = new Array[Any](16)
+    private var latestTsUs = Long.MinValue
 
     private def flushAcc(): Unit =
       if (accAny) {
-        writer.writeState(curConv, accTsUs, accTurn, accRole, accSession)
+        writer.writeState(curConv, accTsUs, accTurn, accRole, accSession,
+          new GenericInternalRow(latestOut.clone()))
         accAny = false
       }
 
@@ -393,6 +402,7 @@ object FusedSweep {
       convCtxRows = 0L
       accAny = false
       accRole = null
+      latestTsUs = Long.MinValue
       sawState = false
       sessions = 0
       hasPrev = false
@@ -505,7 +515,9 @@ object FusedSweep {
         }
         r = nextRow()
       }
-      if (writer != null) flushAcc() // EOF: last conversation's state
+      // EOF: the last conversation's state, once its last group has
+      // been emitted (a still-open group flushes on the next call)
+      if (writer != null && !groupOpen) flushAcc()
       groupOpen
     }
 
@@ -545,6 +557,10 @@ object FusedSweep {
       out(13) = if (p.hasGap) p.gapSecs else null
       out(14) = p.sessionId
       out(15) = p.textLen
+      if (writer != null && r.getLong(TS) >= latestTsUs) {
+        latestTsUs = r.getLong(TS)
+        System.arraycopy(out, 0, latestOut, 0, out.length)
+      }
       outRow
     }
   }

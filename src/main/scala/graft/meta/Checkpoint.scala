@@ -1,10 +1,25 @@
 package graft.meta
 
+import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.Path
+import org.apache.hadoop.mapred.FileSplit
+import org.apache.hadoop.mapreduce.TaskAttemptID
+import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
+import org.apache.parquet.HadoopReadOptions
+import org.apache.parquet.filter2.predicate.{FilterApi, Operators}
+import org.apache.parquet.hadoop.{ParquetFileReader, ParquetInputFormat}
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.io.api.Binary
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.datasources.parquet.{
+  ParquetReadSupport, ParquetToSparkSchemaConverter, VectorizedParquetRecordReader}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Self-managed checkpoint/lineage metadata under `<table>/_meta/`,
   * emulating Iceberg snapshot/metadata tables (no Iceberg jar ships in
@@ -47,12 +62,29 @@ object Checkpoint {
     StructField("row_count", LongType, nullable = false),
     StructField("status", StringType, nullable = false)))
 
+  /** The narrow state row: what the sweep, the heavy path and the
+    * as-of size dispatch read. Every reader of these columns passes
+    * this schema explicitly, so parquet column pruning never decodes
+    * the wide `latest` column ([[wideStateSchema]]).
+    */
   val convStateSchema: StructType = StructType(Seq(
     StructField("conv_id", StringType, nullable = false),
     StructField("st_last_ts", TimestampType, nullable = false),
     StructField("st_last_turn_idx", IntegerType, nullable = false),
     StructField("st_last_role", StringType, nullable = false),
     StructField("st_sessions", IntegerType, nullable = false)))
+
+  /** The full state row: [[convStateSchema]] plus `latest`, the
+    * conversation's newest gold row (`latestRow`: every gold data
+    * column, in the gold table's own ts type). Read only by
+    * compaction and the keyed lookup ([[latestGoldRows]]).
+    */
+  def wideStateSchema(latestRow: StructType): StructType =
+    StructType(convStateSchema.fields :+ StructField("latest", latestRow, nullable = true))
+
+  /** Column names of the `latest` struct, in gold column order. */
+  private[graft] val latestFieldNames: Seq[String] =
+    graft.schema.TranscriptSchema.gold.fieldNames.toSeq :+ "text_len"
 
   def pathExists(spark: SparkSession, path: String): Boolean = exists(spark, path)
 
@@ -327,21 +359,34 @@ object Checkpoint {
     * its own delta exactly (same resume contract as the data
     * partitions).
     *
+    * Each state row keeps two orders, which differ only on ts-inverted
+    * conversations:
+    *  - the `st_*` columns ([[convStateSchema]]) are the slice's newest
+    *    row by turn_idx: the dedup horizon, lag chain and session
+    *    counter the next slice's sweep seeds from;
+    *  - `latest` ([[wideStateSchema]]) is the slice's newest gold row by
+    *    (ts, turn_idx), every gold data column. The state table is the
+    *    engine's ONLINE store: [[latestGoldRows]] answers keyed lookups
+    *    from it. Slices partition by ts, so the row of the highest
+    *    slice_start is the conversation's newest gold row overall.
+    * Compaction snapshots are written sorted by conv_id within each
+    * file. Late-data reprocessing re-runs the slices it invalidates, so
+    * their deltas — and the lookups — follow without a second
+    * mechanism.
+    *
     * This accessor gives the dir to the per-task side-file sink.
     */
   def stateDeltaDir(outDir: String, sliceStartSec: Long): String =
     stateDeltaPath(outDir, sliceStartSec)
 
   /** On-disk schema of the sweep's per-task parquet side-files
-    * ([[StateSideWriter]]) — field ORDER is binding for the writer's
-    * InternalRow layout; readers match by name.
+    * ([[StateSideWriter]]): [[wideStateSchema]] with a nullable role.
+    * Field ORDER is binding for the writer's InternalRow layout;
+    * readers match by name.
     */
-  val sideFileSchema: StructType = StructType(Seq(
-    StructField("conv_id", StringType, nullable = false),
-    StructField("st_last_ts", TimestampType, nullable = false),
-    StructField("st_last_turn_idx", IntegerType, nullable = false),
-    StructField("st_last_role", StringType, nullable = true),
-    StructField("st_sessions", IntegerType, nullable = false)))
+  def sideFileSchema(latestRow: StructType): StructType =
+    StructType(wideStateSchema(latestRow).fields.map(f =>
+      if (f.name == "st_last_role") f.copy(nullable = true) else f))
 
   /** Append slice-meta rows (the heavy-path aggregate's output,
     * [[stateDeltaFromGold]]) to a slice's delta dir — same parquet
@@ -367,32 +412,42 @@ object Checkpoint {
     * slice_start (the fused sweep does this inline during its one
     * sort; small consumers use [[latestConvState]]).
     */
-  def readConvStateDeltas(spark: SparkSession, outDir: String, uptoExclusiveSec: Long): DataFrame = {
+  def readConvStateDeltas(spark: SparkSession, outDir: String, uptoExclusiveSec: Long): DataFrame =
+    readStateChain(spark, outDir, uptoExclusiveSec, convStateSchema)
+
+  /** [[readConvStateDeltas]] in an explicit row schema (`schema` +
+    * slice_start): [[convStateSchema]] for every per-slice reader,
+    * [[wideStateSchema]] for compaction.
+    */
+  private def readStateChain(
+      spark: SparkSession, outDir: String, uptoExclusiveSec: Long, schema: StructType): DataFrame = {
     val snap = latestSnapshotSec(spark, outDir, uptoExclusiveSec)
     val deltas =
       if (exists(spark, stateDir(outDir)))
-        readDeltaTable(spark, outDir, minExclusive = snap, maxExclusive = Some(uptoExclusiveSec))
+        readDeltaTable(spark, outDir, minExclusive = snap, maxExclusive = Some(uptoExclusiveSec),
+          schema = schema)
           .filter(col("slice_start") < uptoExclusiveSec &&
             snap.map(s => col("slice_start") > s).getOrElse(lit(true)))
-      else emptyDeltas(spark)
+      else emptyDeltas(spark, schema)
     snap match {
       case Some(s) =>
-        spark.read.schema(convStateSchema).parquet(snapPath(outDir, s))
-          .select(convStateSchema.fieldNames.map(col).toSeq :+ lit(s).as("slice_start"): _*)
+        spark.read.schema(schema).parquet(snapPath(outDir, s))
+          .select(schema.fieldNames.map(col).toSeq :+ lit(s).as("slice_start"): _*)
           .unionByName(deltas)
       case None => deltas
     }
   }
 
-  private def emptyDeltas(spark: SparkSession): DataFrame =
-    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], deltaFileSchema)
+  private def emptyDeltas(spark: SparkSession, schema: StructType): DataFrame =
+    spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+      deltaFileSchema(schema))
 
   /** Rows of the state-delta table: the conversation state plus the
     * `slice_start` partition value. Explicit on every read (no schema
     * inference job).
     */
-  private val deltaFileSchema: StructType = StructType(
-    convStateSchema.fields :+ StructField("slice_start", LongType, nullable = false))
+  private def deltaFileSchema(schema: StructType): StructType = StructType(
+    schema.fields :+ StructField("slice_start", LongType, nullable = false))
 
   /** The whole state-delta table: parquet slice dirs — sweep
     * side-files and the heavy-path aggregate's appends share the
@@ -400,21 +455,23 @@ object Checkpoint {
     * range-pruned DRIVER-side first — `(minExclusive, maxExclusive)`
     * on the slice_start value — so the read lists only the dirs a
     * chain read actually touches (post-compaction: <= MaxStateChain),
-    * not every dir an old backfill ever wrote. Returns the
-    * deltaFileSchema columns.
+    * not every dir an old backfill ever wrote. Returns `schema`'s
+    * columns plus slice_start.
     */
   private[graft] def readDeltaTable(
       spark: SparkSession, outDir: String,
-      minExclusive: Option[Long] = None, maxExclusive: Option[Long] = None): DataFrame = {
+      minExclusive: Option[Long] = None, maxExclusive: Option[Long] = None,
+      schema: StructType = convStateSchema): DataFrame = {
     val base = stateDir(outDir)
     val sliceDirs = numberedDirs(spark, base, "slice_start=")
       .filter { case (_, sec) =>
         minExclusive.forall(sec > _) && maxExclusive.forall(sec < _)
       }
-    if (sliceDirs.isEmpty) emptyDeltas(spark)
-    else spark.read.schema(deltaFileSchema).option("basePath", base)
+    val rowSchema = deltaFileSchema(schema)
+    if (sliceDirs.isEmpty) emptyDeltas(spark, schema)
+    else spark.read.schema(rowSchema).option("basePath", base)
       .parquet(sliceDirs.map(_._1.toString): _*)
-      .select(deltaFileSchema.fieldNames.map(col).toSeq: _*)
+      .select(rowSchema.fieldNames.map(col).toSeq: _*)
   }
 
   /** `(path, n)` for each `<prefix><n>` subdirectory of `dir` (a
@@ -436,26 +493,34 @@ object Checkpoint {
   /** Slice state delta from written gold: the per-conversation
     * carried state as a plain map-side-combinable max_by — the same
     * rows the sweep's side-files hold (StateSideFileSpec). Used for
-    * skew-routed conversations, which the sweep never sees. The
-    * max_by key is (turn_idx, ts), NOT (ts, turn_idx): the dedup
-    * horizon must be the highest committed ORDINAL even for
-    * contract-violating ts-inverted conversations, and the lag chain
-    * seeds in turn order, matching the declarative windows.
+    * skew-routed conversations, which the sweep never sees. It keeps
+    * two orders on purpose; they differ only on ts-inverted
+    * conversations:
+    *  - the `st_*` columns take the max by (turn_idx, ts): the dedup
+    *    horizon must be the highest committed ORDINAL even for
+    *    contract-violating conversations, and the lag chain seeds in
+    *    turn order, matching the declarative windows;
+    *  - `latest` takes the max by (ts, turn_idx), [[graft.gold.AsOfJoin.latestPerKey]]'s
+    *    order: the row a keyed lookup serves.
     */
   def stateDeltaFromGold(gold: DataFrame): DataFrame =
     gold.groupBy(col("conv_id"))
       .agg(
         max_by(struct(col("ts").as("st_last_ts"), col("turn_idx").as("st_last_turn_idx"),
           col("role").as("st_last_role")), struct(col("turn_idx"), col("ts"))).as("_st"),
-        max(col("session_id")).as("st_sessions"))
+        max(col("session_id")).as("st_sessions"),
+        max_by(struct(latestFieldNames.map(col): _*), struct(col("ts"), col("turn_idx")))
+          .as("latest"))
       .select(col("conv_id"),
         col("_st.st_last_ts").as("st_last_ts"),
         col("_st.st_last_turn_idx").as("st_last_turn_idx"),
-        col("_st.st_last_role").as("st_last_role"), col("st_sessions"))
+        col("_st.st_last_role").as("st_last_role"), col("st_sessions"), col("latest"))
 
-  /** Latest state per conversation from a delta-chain read. */
+  /** Latest state per conversation from a delta-chain read: the row of
+    * the highest slice_start, in whatever state columns `deltas` holds.
+    */
   def latestConvState(deltas: DataFrame): DataFrame = {
-    val cols = convStateSchema.fieldNames.filterNot(_ == "conv_id")
+    val cols = deltas.columns.filterNot(c => c == "conv_id" || c == "slice_start").toSeq
     deltas.groupBy(col("conv_id"))
       .agg(max_by(struct(cols.map(col): _*), col("slice_start")).as("_s"))
       .select(col("conv_id") +: cols.map(c => col(s"_s.$c")): _*)
@@ -515,13 +580,19 @@ object Checkpoint {
     }
   }
 
-  /** Collapse the chain at `uptoInclusiveSec` into a snapshot. Only
+  /** Collapse the chain at `uptoInclusiveSec` into a snapshot of full
+    * state rows (`latest` in the gold row type `latestRow`). Only
     * called AFTER the covering slice committed; an interrupted write
-    * leaves no _SUCCESS marker and is ignored by readers.
+    * leaves no _SUCCESS marker and is ignored by readers. Each
+    * snapshot file is sorted by conv_id, so its parquet page index
+    * bounds a keyed read's pages. A global sort would also make the
+    * files' key ranges disjoint, at the cost of a sampling job and a
+    * second shuffle per compaction.
     */
-  def compactConvState(spark: SparkSession, outDir: String, uptoInclusiveSec: Long): Unit = {
-    val chain = readConvStateDeltas(spark, outDir, uptoInclusiveSec + 1)
-    latestConvState(chain).write.mode(SaveMode.Overwrite)
+  def compactConvState(
+      spark: SparkSession, outDir: String, uptoInclusiveSec: Long, latestRow: StructType): Unit = {
+    val chain = readStateChain(spark, outDir, uptoInclusiveSec + 1, wideStateSchema(latestRow))
+    latestConvState(chain).sortWithinPartitions(col("conv_id")).write.mode(SaveMode.Overwrite)
       .parquet(snapPath(outDir, uptoInclusiveSec))
   }
 
@@ -540,4 +611,130 @@ object Checkpoint {
       .filter { case (s, p) => s < uptoExclusiveSec && fs.exists(new org.apache.hadoop.fs.Path(p, "_SUCCESS")) }
       .map(_._1).maxOption
   }
+
+  /** One keyed read of the state table: the rows, and its cost — files
+    * opened, rows decoded, bytes this thread read.
+    */
+  final case class KeyedRead(rows: Seq[InternalRow], files: Int, rowsDecoded: Long, bytes: Long)
+
+  /** The ONLINE STORE read: for each of `keys`, the `latest` gold row
+    * of its newest committed state row, in `row` (a subset of the
+    * `latest` fields, in the caller's order and types), read on the
+    * driver with no Spark job.
+    *
+    * Slices partition by ts, so the state row of the highest
+    * slice_start holds the conversation's newest gold row by
+    * (ts, turn_idx) — [[graft.gold.AsOfJoin.latestPerKey]] over gold.
+    * The read opens the newest complete snapshot plus the delta of
+    * every committed slice after it, skips the row groups and pages
+    * whose conv_id statistics exclude every key through a parquet
+    * `conv_id IN (keys)` filter predicate, decodes the rest with
+    * Spark's vectorized reader, and keeps the key's row of the highest
+    * slice_start.
+    *
+    * None — the caller falls back to a gold scan — whenever the answer
+    * could differ from gold: `goldSliceIds` (the `slice_id=` dirs the
+    * caller's gold relation lists) holds an uncommitted slice or misses
+    * a committed slice with rows, a file lacks one of `row`'s fields in
+    * its type, or a winning state row has no `latest` (written by an
+    * engine that did not carry it).
+    */
+  def latestGoldRows(
+      spark: SparkSession, outDir: String, goldSliceIds: Set[String],
+      keys: Seq[String], row: StructType): Option[KeyedRead] = {
+    val committed = watermarks(spark, outDir).filter(_.committed)
+    // every listed dir committed, every committed slice with rows listed
+    // (a slice that wrote zero rows may still hold an empty file)
+    if (!goldSliceIds.subsetOf(committed.map(_.sliceId).toSet) ||
+        !committed.filter(_.rowCount > 0).forall(w => goldSliceIds(w.sliceId))) return None
+    val starts = committed.map(_.startSec).toSet
+    val snap = latestSnapshotSec(spark, outDir, Long.MaxValue)
+    val dirs = snap.map(s => new Path(snapPath(outDir, s))).toSeq ++
+      numberedDirs(spark, stateDir(outDir), "slice_start=")
+        .filter { case (_, s) => starts(s) && snap.forall(s > _) }
+        .sortBy(_._2).map(_._1)
+    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
+    val requested = StructType(Seq(
+      StructField("conv_id", StringType), StructField("latest", row)))
+    conf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, requested.json)
+    conf.set(ParquetInputFormat.READ_SUPPORT_CLASS, classOf[ParquetReadSupport].getName)
+    ParquetReadKeys.foreach(k => conf.set(k, spark.conf.get(k)))
+    // row groups (and, in sorted files, pages) whose conv_id statistics
+    // exclude every key are skipped
+    ParquetInputFormat.setFilterPredicate(conf,
+      FilterApi.in[Binary, Operators.BinaryColumn](FilterApi.binaryColumn("conv_id"),
+        keys.map(Binary.fromString).toSet.asJava))
+    // built once per call: opening a file without prebuilt options
+    // parses a fresh Hadoop Configuration each time
+    val options = HadoopReadOptions.builder(conf).build()
+    val wanted = keys.map(UTF8String.fromString).toSet
+    val bytes0 = threadBytesRead()
+    val fs = new Path(outDir).getFileSystem(conf)
+    val files = dirs.flatMap(d => fs.listStatus(d).toSeq
+      .filter(st => st.isFile && !st.getPath.getName.startsWith("_") &&
+        !st.getPath.getName.startsWith("."))
+      .map(_.getPath).sortBy(_.getName))
+    val newest = mutable.HashMap.empty[String, InternalRow]
+    var decoded = 0L
+    val complete = files.forall(f => readLatest(f, conf, options, requested) { r =>
+      decoded += 1
+      val key = r.getUTF8String(0)
+      if (wanted(key)) newest(key.toString) = r.copy()
+    })
+    if (!complete || newest.values.exists(_.isNullAt(1))) None
+    else Some(KeyedRead(newest.values.map(_.getStruct(1, row.size)).toSeq,
+      files.size, decoded, threadBytesRead() - bytes0))
+  }
+
+  /** The SQL settings Spark's parquet schema conversion reads from the
+    * Hadoop conf (the scan copies them in per query): mirrored from the
+    * session, so a state file's types resolve as the gold relation's did.
+    */
+  private val ParquetReadKeys = Seq(
+    "spark.sql.parquet.binaryAsString", "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive", "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong")
+
+  /** Feeds `keep` every row of `file`'s row groups that survive the
+    * conf's filter predicate, decoded by Spark's own vectorized parquet
+    * reader (the scan tasks' reader, run here on the driver; the row is
+    * reused across calls). False, reading nothing, when the file lacks a
+    * `requested` field in its type.
+    */
+  private def readLatest(
+      file: Path, conf: Configuration, options: org.apache.parquet.ParquetReadOptions,
+      requested: StructType)(keep: InternalRow => Unit): Boolean = {
+    def covers(want: StructType, got: StructType): Boolean = want.forall { f =>
+      got.find(_.name == f.name).exists(g => (f.dataType, g.dataType) match {
+        case (w: StructType, h: StructType) => covers(w, h)
+        case (w, h) => w == h
+      })
+    }
+    val in = HadoopInputFile.fromPath(file, conf)
+    val stream = in.newStream()
+    val footer =
+      try ParquetFileReader.readFooter(in, options, stream)
+      catch { case e: Throwable => stream.close(); throw e }
+    if (!covers(requested,
+        new ParquetToSparkSchemaConverter(conf).convert(footer.getFileMetaData.getSchema))) {
+      stream.close()
+      false
+    } else {
+      val reader = new VectorizedParquetRecordReader(
+        null, "CORRECTED", "UTC", "CORRECTED", "UTC", false, 1024)
+      try {
+        reader.initialize(new FileSplit(file, 0L, in.getLength, Array.empty[String]),
+          new TaskAttemptContextImpl(conf, new TaskAttemptID()), Some(in), Some(stream), Some(footer))
+        reader.initBatch(new StructType(), InternalRow.empty)
+        while (reader.nextKeyValue()) keep(reader.getCurrentValue.asInstanceOf[InternalRow])
+        true
+      } finally reader.close()
+    }
+  }
+
+  /** Bytes this thread has read through Hadoop file systems so far. */
+  @annotation.nowarn("cat=deprecation")
+  private def threadBytesRead(): Long =
+    org.apache.hadoop.fs.FileSystem.getAllStatistics.asScala
+      .map(_.getThreadStatistics.getBytesRead).sum
 }

@@ -10,6 +10,7 @@ import org.apache.spark.TaskContext
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Per-task state side-files: the fused sweep emits each slice's
@@ -74,18 +75,21 @@ private[meta] object StateSideWriter {
 /** One sweep task's side-file writer. Opened lazily on the first state
   * row (empty partitions create no file); closed by a task-completion
   * listener (commits the parquet footer on success; a failed task's
-  * partial is overwritten on retry).
+  * partial is overwritten on retry). `latestRow` is the gold row type
+  * the sweep emits: the type of the `latest` column.
   */
-final class StateSideWriter(sink: StateSideSink) {
+final class StateSideWriter(sink: StateSideSink, latestRow: StructType) {
   private var out: ParquetWriter[InternalRow] = _
 
   /** Write one conversation's state row: its last accepted row's
-    * (ts, turn_idx, role) and session counter.
+    * (ts, turn_idx, role) and session counter, and `latest`, its
+    * newest emitted gold row by (ts, turn_idx).
     */
   def writeState(convId: UTF8String, lastTsUs: Long, lastTurn: Int,
-      lastRole: UTF8String, sessions: Int): Unit = {
+      lastRole: UTF8String, sessions: Int, latest: InternalRow): Unit = {
     ensureOpen()
-    out.write(new GenericInternalRow(Array[Any](convId, lastTsUs, lastTurn, lastRole, sessions)))
+    out.write(new GenericInternalRow(
+      Array[Any](convId, lastTsUs, lastTurn, lastRole, sessions, latest)))
   }
 
   private def ensureOpen(): Unit =
@@ -94,7 +98,7 @@ final class StateSideWriter(sink: StateSideSink) {
       val p = new org.apache.hadoop.fs.Path(f"${sink.dir}%s/part-$pid%05d.parquet")
       // a private conf copy per writer: setSchema mutates it
       val conf = new Configuration(sink.conf.value)
-      ParquetWriteSupport.setSchema(Checkpoint.sideFileSchema, conf)
+      ParquetWriteSupport.setSchema(Checkpoint.sideFileSchema(latestRow), conf)
       // ParquetWriteSupport/SparkToParquetSchemaConverter read these
       // SQLConf keys from the Configuration with NO defaults (the
       // normal write path copies them in via prepareWrite)

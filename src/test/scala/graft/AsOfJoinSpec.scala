@@ -175,6 +175,8 @@ class AsOfJoinSpec extends AnyFunSuite {
   }
 
   test("latestForKeys: a key whose rows span several partitions") {
+    // an in-memory history takes the gold-scan fallback; its result is
+    // local like the state-table path's
     import spark.implicits._
     val spread = gold.repartition(7)
     val keys = gold.select("conv_id").distinct().orderBy("conv_id").limit(5).as[String].collect().toSeq
@@ -182,6 +184,8 @@ class AsOfJoinSpec extends AnyFunSuite {
       .select(spark_partition_id()).distinct().count()
     assert(parts > 1, s"key ${keys.head} sits in $parts partition(s)")
     assert(lookupMatchesLatest(spread, keys).length == keys.size)
+    assert(AsOfJoin.latestForKeys(spread, keys.toDF("conv_id"))
+      .queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
   }
 
   test("latestForKeys: an empty key set returns zero rows with the history schema") {
@@ -198,22 +202,52 @@ class AsOfJoinSpec extends AnyFunSuite {
     assert(lookupMatchesLatest(h, Seq(null)).isEmpty)
   }
 
-  test("latestForKeys launches one Spark job; its result is local and collects without one") {
+  private val start = 1704067200L
+  private val sliceSecs = 8L * 86400
+
+  /** A backfilled table's gold, as readers open it. */
+  private def committedHistory(dir: String): DataFrame =
+    spark.read.parquet(s"$dir/gold").drop("slice_id")
+
+  private lazy val lookupBronze =
+    TranscriptGen.transcripts(spark, nConvs = 12, avgTurns = 10).cache()
+
+  test("latestForKeys on a committed gold table launches no Spark job; its result is local") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("lookup").toString + "/gold"
-    gold.write.parquet(dir)
-    val history = spark.read.parquet(dir)
-    val keys = gold.select("conv_id").distinct().orderBy("conv_id").limit(3).as[String].collect().toSeq
+    val dir = java.nio.file.Files.createTempDirectory("lookup").toString
+    Backfill.run(spark, lookupBronze, dir, start, sliceSecs, 4)
+    val history = committedHistory(dir)
+    val keys = history.select("conv_id").distinct().orderBy("conv_id").limit(3)
+      .as[String].collect().toSeq
     val (got, jobs) = TestListenerBus.jobsDuring(spark.sparkContext)(
       AsOfJoin.latestForKeys(history, (keys :+ keys.head).toDF("conv_id")))
-    assert(jobs == 1)
+    assert(jobs == 0)
+    assert(got.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
     val (rows, after) = TestListenerBus.jobsDuring(spark.sparkContext)(got.collect())
     assert(after == 0 && rows.length == keys.size)
-    // a count plans an aggregate over the local rows, never a rescan
-    assert(got.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
-    assert(got.count() == keys.size)
+    assert(got.columns.toSeq == history.columns.toSeq)
+    val want = AsOfJoin.latestPerKey(history).filter(col("conv_id").isin(keys: _*)).collect()
+    assert(rows.toSet == want.toSet)
     val (_, emptyJobs) = TestListenerBus.jobsDuring(spark.sparkContext)(
       AsOfJoin.latestForKeys(history, Seq.empty[String].toDF("conv_id")).collect())
     assert(emptyJobs == 0)
+  }
+
+  test("latestForKeys: a gold table with an uncommitted slice dir falls back to the gold scan") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("lookup_crash").toString
+    intercept[RuntimeException](Backfill.run(spark, lookupBronze, dir, start, sliceSecs, 4,
+      failAfterGoldWriteOfSlice = Some(Backfill.sliceId(start + 2 * sliceSecs))))
+    val history = committedHistory(dir)
+    // the crashed slice's rows are in the listing but not in the state
+    // table's committed view: only a gold scan answers for them
+    val keys = history.filter(col("ts") >= timestamp_seconds(lit(start + 2 * sliceSecs)))
+      .select("conv_id").distinct().orderBy("conv_id").limit(3).as[String].collect().toSeq
+    assert(keys.nonEmpty)
+    val (got, jobs) = TestListenerBus.jobsDuring(spark.sparkContext)(
+      AsOfJoin.latestForKeys(history, keys.toDF("conv_id")))
+    assert(jobs > 0)
+    assert(got.queryExecution.optimizedPlan.isInstanceOf[LocalRelation])
+    lookupMatchesLatest(history, keys)
   }
 }

@@ -80,6 +80,22 @@ class PruningSpec extends AnyFunSuite {
     }
   }
 
+  test("the sweep's state scan never reads the wide latest column") {
+    val dir = Files.createTempDirectory("prune_state").toString
+    Backfill.run(spark, TranscriptGen.transcripts(spark, nConvs = 10, avgTurns = 10),
+      dir, 1704067200L, 8L * 86400, 2)
+    // the state files carry `latest` (one driver-side footer read) ...
+    assert(graft.meta.Checkpoint.firstFileColumns(spark, s"$dir/_meta/conv_state")
+      .exists(_.contains("latest")))
+    // ... and the sweep's state input does not request it
+    val stateIn = graft.gold.FusedSweep.stateRows(
+      graft.meta.Checkpoint.readConvStateDeltas(spark, dir, Long.MaxValue))
+    val readSchemas = stateIn.queryExecution.executedPlan.toString.linesIterator
+      .filter(_.contains("ReadSchema")).toSeq
+    assert(readSchemas.nonEmpty && readSchemas.forall(!_.contains("latest")),
+      s"state scan reads `latest`:\n${readSchemas.mkString("\n")}")
+  }
+
   test("column pruning reaches the scan (ReadSchema only has needed columns)") {
     val df = spark.read.parquet(goldDir).select("conv_id", "turns_cnt_1h")
     val scan = df.queryExecution.executedPlan.toString
