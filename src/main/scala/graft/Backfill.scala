@@ -440,8 +440,7 @@ object Backfill {
         val isRouted =
           if (routedIds.isEmpty) lit(false) else col("conv_id").isin(routedIds: _*)
         val light = FusedSweep.gold(
-          in.deltas.filter(!isRouted), emptySilver(env.spark),
-          in.bronze.filter(!isRouted), env.sessionGapSecs,
+          in.deltas.filter(!isRouted), in.bronze.filter(!isRouted), env.sessionGapSecs,
           Some(FusedSweep.ctxStreamRows(in.ctx.filter(!isRouted))),
           capacityLimit = env.skewHeavyThreshold,
           numPartitions = Some(p.sweepParts),
@@ -540,6 +539,12 @@ object Backfill {
         case None =>
           Checkpoint.appendLineage(env.outDir, env.goldWritten(s), s.id, wallMs)
       })
+      // a zero-row slice keeps no gold dir, as on the empty-slice fast
+      // path: the write left a metadata-only file readers would open
+      if (rows == 0L) {
+        deleteDir(spark, s"${env.goldPath}/slice_id=${s.id}")
+        if (env.materializeSilver) deleteDir(spark, s"${env.silverPath}/slice_id=${s.id}")
+      }
       val bytes = if (rows > 0L) dirBytes(spark, s"${env.goldPath}/slice_id=${s.id}") else None
       if (rows > 0L && w.routedIds.nonEmpty)
         phase(s.id, "routed slice meta")(Checkpoint.appendSliceMeta(env.outDir, s.start,
@@ -722,14 +727,6 @@ object Backfill {
     deleteDir(spark, latePath)
     reports
   }
-
-  /** Empty DF with the silver schema (the light path's context input —
-    * the narrow context side-stream replaces raw context rows there).
-    */
-  private[graft] def emptySilver(spark: SparkSession): DataFrame =
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(TranscriptSchema.silver.fields))
 
   /** True if the failure (anywhere in the cause chain) is the fused
     * sweep's ts-monotonicity precondition.

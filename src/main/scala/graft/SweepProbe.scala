@@ -31,16 +31,16 @@ object SweepProbe {
     }
     val bronze = spark.read.parquet(bronzeDir)
 
-    // the bench backfill's FIRST slice (empty carried state/context —
-    // its sweep stage already shows the full mega straggler), same
-    // 10-day bounds and sweep partition count as the driver bench
+    // the bench backfill's FIRST slice (empty carried state and
+    // committed context — its sweep stage already shows the full mega
+    // straggler), same 10-day bounds and sweep partition count as the
+    // driver bench
     val start = 1704067200L
     val end = start + 10L * 86400
     val sliceBronze = graft.silver.SilverBuilder.validate(bronze.filter(
       bronze("ts") >= lit(java.time.Instant.ofEpochSecond(start)) &&
         bronze("ts") < lit(java.time.Instant.ofEpochSecond(end))))
     val deltas = graft.meta.Checkpoint.readConvStateDeltas(spark, work, start)
-    val context = Backfill.contextRead(spark, s"$work/silver", "s0", start, 10L * 86400)
     val numParts = 12 // what sweepPartitions sizes a ~90 MB slice to
 
     def timed(name: String)(f: => Unit): Unit = {
@@ -61,12 +61,10 @@ object SweepProbe {
 
     import graft.gold.FusedSweep
     val exchangeOnly = FusedSweep.stateRows(deltas)
-      .unionByName(FusedSweep.contextRows(context))
       .unionByName(FusedSweep.bronzeRows(sliceBronze))
       .repartition(numParts, col("conv_id"))
-    def sorted = FusedSweep.sortedInput(deltas, context, sliceBronze, numParts)
-    def swept = FusedSweep.gold(deltas, context, sliceBronze,
-      numPartitions = Some(numParts))
+    def sorted = FusedSweep.sortedInput(deltas, sliceBronze, numParts)
+    def swept = FusedSweep.gold(deltas, sliceBronze, numPartitions = Some(numParts))
 
     // untimed warmup of every shape (JIT/codegen, same protocol as Bench)
     noop(exchangeOnly); noop(sorted); noop(swept)

@@ -25,13 +25,12 @@ import graft.schema.TranscriptSchema
   *  - state deltas enter the SAME shuffle as pseudo-rows (`_k = 0`)
   *    sorted before all data rows of their conversation — no separate
   *    state join;
-  *  - lookback context rows (`_k = 1`) feed the sliding frames and the
-  *    lag chain but are not emitted;
   *  - current-slice bronze rows (`_k = 2`) are deduplicated by
   *    adjacency (sort prefix is (conv_id, turn_idx); the winner order
-  *    (_k, ts, role, tool, text) reproduces SilverBuilder.dedup with
-  *    committed context rows taking precedence), then emitted with all
-  *    gold columns.
+  *    (ts, role, tool, text) reproduces SilverBuilder.dedup), then
+  *    emitted with all gold columns;
+  *  - committed lookback events feed the sliding frames from a narrow
+  *    side-stream ([[ctxStreamRows]]) and are not emitted.
   *
   * PRECONDITION (transcript contract): within a conversation, ts is
   * non-decreasing in turn_idx for the rows that survive dedup — true
@@ -87,6 +86,10 @@ object FusedSweep {
       col("slice_start").cast("long").as("_seq"),
       col("st_sessions").as("_sessions"))
 
+  /** Committed context rows (`_k = 1`) for the heavy path's dedup
+    * union ([[graft.Backfill.heavyGold]]); the light sweep takes its
+    * context from the side-stream instead.
+    */
   private[graft] def contextRows(context: DataFrame): DataFrame =
     context.select(
       col("conv_id"), col("turn_idx"), col("role"), col("text"), col("tool"), col("ts"),
@@ -130,7 +133,7 @@ object FusedSweep {
         StructField("tool", StringType, nullable = true))))
 
   /** The sweep's exchanged-and-sorted input stream: state pseudo-rows
-    * first (turn forced to Int.MinValue), then context/bronze rows in
+    * first (turn forced to Int.MinValue), then bronze rows in
     * (turn, _k, _seq, ts, role, tool, text) order — the SilverBuilder
     * winner order, so dedup-by-adjacency keeps the right row. Extracted
     * so dev probes ([[graft.SweepProbe]]) can time the exchange+sort
@@ -138,11 +141,9 @@ object FusedSweep {
     */
   private[graft] def sortedInput(
       state: DataFrame,
-      context: DataFrame,
       bronze: DataFrame,
       numParts: Int): DataFrame =
     stateRows(state)
-      .unionByName(contextRows(context))
       .unionByName(bronzeRows(bronze))
       .repartition(numParts, col("conv_id"))
       .sortWithinPartitions(
@@ -181,8 +182,9 @@ object FusedSweep {
 
   /** Run the fused sweep. `state` rows carry (conv_id, st_last_ts,
     * st_last_turn_idx, st_last_role, st_sessions, slice_start);
-    * `context` is prior-slice silver inside the lookback; `bronze` is
-    * the validated current slice. Emits gold rows for the slice only.
+    * `bronze` is the validated current slice; `ctxStream` is the
+    * committed lookback ([[ctxStreamRows]]). Emits gold rows for the
+    * slice only.
     *
     * `capacityLimit`: optimistic skew detection — the sweep throws a
     * marked exception the moment one conversation's accepted slice
@@ -200,7 +202,6 @@ object FusedSweep {
     */
   def gold(
       state: DataFrame,
-      context: DataFrame,
       bronze: DataFrame,
       gapSecs: Long = TranscriptSchema.DefaultSessionGapSecs,
       ctxStream: Option[DataFrame] = None,
@@ -223,7 +224,7 @@ object FusedSweep {
     // ([[graft.Backfill]] sizes it from the previous slice's bytes).
     val numParts = numPartitions.getOrElse(
       spark.conf.get("spark.sql.shuffle.partitions").toInt * OverPartitionFactor)
-    val sorted = sortedInput(state, context, bronze, numParts)
+    val sorted = sortedInput(state, bronze, numParts)
 
     val ctxSorted = ctxStream.getOrElse(emptyCtxStream(spark))
       .repartition(numParts, col("conv_id"))
@@ -371,7 +372,7 @@ object FusedSweep {
     private var curConv: UTF8String = _
     private var sawState = false
     private var sessions = 0
-    private var hasPrev = false       // lag chain seeded (state/context/slice)
+    private var hasPrev = false       // lag chain seeded (state/slice)
     private var prevTsSec = 0L
     private var prevRole: UTF8String = _
     private var hasPrevData = false   // last DATA row's second (monotonicity check)
@@ -423,10 +424,10 @@ object FusedSweep {
       else if (in.hasNext) in.next()
       else null
 
-    /** Process one data row (k == 1 context or k == 2 slice): frames,
-      * lag chain, session counter, group buffering.
+    /** Process one slice row: frames, lag chain, session counter,
+      * group buffering.
       */
-    private def processData(r: InternalRow, k: Int): Unit = {
+    private def processData(r: InternalRow): Unit = {
       val t = tsSecOf(r)
       if (hasPrevData && t < prevDataTsSec)
         throw new IllegalStateException(
@@ -445,22 +446,15 @@ object FusedSweep {
 
       val g = if (hasPrev) t - prevTsSec else -1L
       val isBreak = !hasPrev || g > gapSecs
-      if (k == 2) {
-        if (isBreak) sessions += 1
-        group += new Pending(r.copy(), g, hasPrev, prevRole, sessions, textLen)
-        groupOpen = true
-      } else if (!sawState && isBreak) {
-        // no carried state = full history present (single-shot use):
-        // context rows count their own session breaks so slice rows
-        // continue the correct numbering
-        sessions += 1
-      }
+      if (isBreak) sessions += 1
+      group += new Pending(r.copy(), g, hasPrev, prevRole, sessions, textLen)
+      groupOpen = true
       prevTsSec = t
       prevRole = r.getUTF8String(ROLE).copy()
       hasPrev = true
       prevDataTsSec = t
       hasPrevData = true
-      if (k == 2 && writer != null) {
+      if (writer != null) {
         accAny = true
         accTsUs = r.getLong(TS)
         accTurn = r.getInt(TURN)
@@ -485,8 +479,7 @@ object FusedSweep {
           if (writer != null) flushAcc() // previous conversation's state
           resetConv(conv.copy())
         }
-        val k = r.getInt(K)
-        if (k == 0) {
+        if (r.getInt(K) == 0) {
           // state pseudo-row: seed lag chain + session counter (latest
           // delta wins — rows arrive in slice_start order)
           sessions = if (r.isNullAt(SESSIONS)) 0 else r.getInt(SESSIONS)
@@ -498,7 +491,7 @@ object FusedSweep {
         } else {
           if (!ctxDrained) { drainCtx(curConv); ctxDrained = true }
           val turn = r.getInt(TURN)
-          if (k == 2 && turn <= stateTurn) {
+          if (turn <= stateTurn) {
             // re-send of a committed turn (possibly beyond the frame
             // lookback): dropped — the committed row already emitted
             // in its own slice, exactly the single-shot winner
@@ -509,8 +502,9 @@ object FusedSweep {
             val t = tsSecOf(r)
             if (groupOpen && t != groupTsSec) { lookahead = r.copy(); return true }
             lastTurn = turn; hasLastTurn = true
-            if (k == 2) { convDataRows += 1L; checkCapacity(convDataRows, "accepted rows") }
-            processData(r, k)
+            convDataRows += 1L
+            checkCapacity(convDataRows, "accepted rows")
+            processData(r)
           }
         }
         r = nextRow()

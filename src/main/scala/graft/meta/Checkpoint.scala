@@ -103,7 +103,7 @@ object Checkpoint {
     * This mirrors Iceberg, whose snapshot metadata is also
     * driver-written JSON/Avro, not a table write.
     */
-  private def writeDriverFile(spark: SparkSession, path: String, content: String): Unit = {
+  private[graft] def writeDriverFile(spark: SparkSession, path: String, content: String): Unit = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = fs.create(p, true)
@@ -128,6 +128,10 @@ object Checkpoint {
       jsonStr(TsFmt.format(t.toInstant)) // fixed-width micros, see TsFmt
     case other => other.toString
   }
+
+  /** One JSON object line (newline-terminated) of `fields` in order. */
+  private[graft] def jsonLine(fields: Seq[(String, Any)]): String =
+    fields.map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }.mkString("{", ", ", "}\n")
 
   /** Fixed-width ISO-8601 with exactly 6 fraction digits — one
     * deterministic wire format for both writer and reader.
@@ -195,12 +199,10 @@ object Checkpoint {
       sliceEnd: java.sql.Timestamp,
       highWatermark: Option[java.sql.Timestamp],
       rowCount: Long): Unit = {
-    val line = Seq(
+    val line = jsonLine(Seq(
       "slice_id" -> sliceId, "slice_start" -> sliceStart, "slice_end" -> sliceEnd,
       "high_watermark_ts" -> highWatermark.orNull, "row_count" -> rowCount,
-      "status" -> "committed")
-      .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }
-      .mkString("{", ", ", "}\n")
+      "status" -> "committed"))
     writeDriverFile(spark, s"${wmPath(outDir)}/$sliceId.json", line)
   }
 
@@ -285,14 +287,12 @@ object Checkpoint {
       rows: Seq[(String, Long, Long, Option[Any])], wallMs: Long)
       : (Long, Option[java.sql.Timestamp]) = {
     val lines = rows.map { case (dt, cnt, hash, _) =>
-      Seq(
+      jsonLine(Seq(
         "slice_id" -> sliceId, "dt" -> dt,
         "row_count" -> cnt, "content_hash" -> hash,
         "wall_ms" -> wallMs,
-        "rows_per_sec" -> (math.round(cnt * 100000.0 / math.max(wallMs, 1L)) / 100.0))
-        .map { case (k, v) => s"${jsonStr(k)}: ${jsonStr(v)}" }
-        .mkString("{", ", ", "}")
-    }.mkString("", "\n", "\n")
+        "rows_per_sec" -> (math.round(cnt * 100000.0 / math.max(wallMs, 1L)) / 100.0)))
+    }.mkString
     writeDriverFile(spark, s"${linPath(outDir)}/$sliceId.json", lines)
     val total = rows.map(_._2).sum
     val hw = rows.flatMap(_._4).map {

@@ -185,6 +185,29 @@ class BackfillSpec extends AnyFunSuite {
     assert(Backfill.run(spark, sparse, dir, start, sliceSecs, nSlices).forall(_.skipped))
   }
 
+  test("a slice whose rows all fail validation commits 0 rows and leaves no gold dir") {
+    import spark.implicits._
+    // slice 1 keeps its bronze rows, but every one lacks its text
+    val inSlice1 = col("ts") >= timestamp_seconds(lit(start + sliceSecs)) &&
+      col("ts") < timestamp_seconds(lit(start + 2 * sliceSecs))
+    val b = bronze.filter(!inSlice1)
+      .unionByName(bronze.filter(inSlice1).withColumn("text", lit(null).cast("string")))
+    val dir = Files.createTempDirectory("bf_invalid_slice").toString
+    val reports = Backfill.run(spark, b, dir, start, sliceSecs, 3)
+    assert(reports.map(r => (r.rows > 0, r.skipped)) == Seq((true, false), (false, false), (true, false)))
+    val id = Backfill.sliceId(start + sliceSecs)
+    assert(Checkpoint.watermarks(spark, dir).exists(w => w.sliceId == id && w.committed && w.rowCount == 0))
+    assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/gold/slice_id=$id")))
+    // the online store still answers with no job, and agrees with the gold scan
+    val h = spark.read.parquet(s"$dir/gold").drop("slice_id")
+    val keys = h.select("conv_id").distinct().orderBy("conv_id").as[String].collect().take(8).toSeq
+    val (got, jobs) = TestListenerBus.jobsDuring(spark.sparkContext)(
+      graft.gold.AsOfJoin.latestForKeys(h, keys.toDF("conv_id")).collect())
+    assert(jobs == 0, s"$jobs job(s) — the state-table path was not taken")
+    val want = graft.gold.AsOfJoin.latestPerKey(h).filter(col("conv_id").isin(keys: _*)).collect()
+    assert(got.sortBy(_.getAs[String]("conv_id")).toSeq == want.sortBy(_.getAs[String]("conv_id")).toSeq)
+  }
+
   test("silver: the served projection == SilverBuilder.build; a materialized copy equals it, " +
       "with no stale slice dir after a sparse re-run") {
     val silverCols = TranscriptSchema.silver.fieldNames.map(col).toSeq

@@ -42,7 +42,7 @@ class FusedSweepSpec extends AnyFunSuite {
   }
 
   test("fused sweep == declarative pipeline on anomalous data (no state/context)") {
-    val fused = FusedSweep.gold(emptyState, emptyContext, SilverBuilder.validate(bronze))
+    val fused = FusedSweep.gold(emptyState, SilverBuilder.validate(bronze))
     assertSame(fused, declarative(bronze))
   }
 
@@ -59,7 +59,7 @@ class FusedSweepSpec extends AnyFunSuite {
     ).toDF("conv_id", "turn_idx", "role", "text", "tool_s", "sec")
       .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
         col("tool_s").as("tool"), timestamp_seconds(col("sec")).as("ts"))
-    val fused = FusedSweep.gold(emptyState, emptyContext, b)
+    val fused = FusedSweep.gold(emptyState, b)
     assertSame(fused, declarative(b))
     // every tie row sees the full tie group (RANGE semantics)
     val r = fused.filter(col("turn_idx") === 0).select("turns_cnt_1h").head().getLong(0)
@@ -75,7 +75,7 @@ class FusedSweepSpec extends AnyFunSuite {
       .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
         lit(null).cast("string").as("tool"), timestamp_seconds(col("sec")).as("ts"))
     val ex = intercept[org.apache.spark.SparkException] {
-      FusedSweep.gold(emptyState, emptyContext, b).count()
+      FusedSweep.gold(emptyState, b).count()
     }
     assert(ex.getMessage.contains("precondition") ||
       Option(ex.getCause).exists(_.getMessage.contains("precondition")))
@@ -86,7 +86,7 @@ class FusedSweepSpec extends AnyFunSuite {
       megaConvs = 1, megaTurns = 3000, injectAnomalies = true)
     val start = 1704067200L
     val sliceBronze = SilverBuilder.validate(mega)
-    val viaLight = FusedSweep.gold(emptyState, emptyContext, sliceBronze)
+    val viaLight = FusedSweep.gold(emptyState, sliceBronze)
     val viaHeavy = Backfill.heavyGold(emptyState, emptyContext, sliceBronze,
       start = 0L, gapSecs = 1800L, segmentSecs = 86400L)
     assertSame(viaLight, viaHeavy)

@@ -84,7 +84,7 @@ class SegmentedSweepSpec extends AnyFunSuite {
   test("fused segmented == light sweep == declarative (no carried state)") {
     val bronze = nastyBronze.cache()
     val sliceBronze = SilverBuilder.validate(bronze)
-    val viaLight = FusedSweep.gold(emptyState, emptyContext, sliceBronze)
+    val viaLight = FusedSweep.gold(emptyState, sliceBronze)
     val fused = Backfill.heavyGold(emptyState, emptyContext, sliceBronze,
       start = 0L, gapSecs = 1800L, segmentSecs = 2L * 86400)
     assertSame(fused, viaLight, "fused vs light")
@@ -135,7 +135,7 @@ class SegmentedSweepSpec extends AnyFunSuite {
     val noSliceRows = SilverBuilder.validate(quiet.limit(0))
     val out = Backfill.heavyGold(emptyState, context, noSliceRows,
       start = start, gapSecs = 1800L, segmentSecs = 2L * 86400)
-    assert(out.schema == FusedSweep.gold(emptyState, emptyContext, noSliceRows).schema)
+    assert(out.schema == FusedSweep.gold(emptyState, noSliceRows).schema)
     // the segmented sweep hides its exchange inside an RDD scan, so
     // the plan must be a local scan and collecting it must run no job
     val plan = out.queryExecution.executedPlan
