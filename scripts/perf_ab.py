@@ -3,12 +3,13 @@
 
     python3 scripts/perf_ab.py BASE_DIR CHANGE_DIR --workload bulk_skewed --seeds 2-11
 
-Runs `perfbench/run.py --trace 0` of each checkout once per seed, the
-base first on even seeds and the change first on odd ones, then prints
+Runs `perfbench/run.py --trace 0` of each checkout once per seed, at the
+`run_seconds` that BASE_DIR/BENCHMARK.json sets, the base first on even
+seeds and the change first on odd ones, then prints
 each end-to-end metric's median per side (and the base's interquartile
 range), the pairs the change won, and every run whose result has
 `correct` false or `failed` > 0. The metric names and directions come
-from BASE_DIR/BENCHMARK.json.
+from the same file.
 """
 import argparse
 import json
@@ -19,7 +20,7 @@ import sys
 
 
 def run(checkout, workload, seed, seconds):
-    cmd = [sys.executable, os.path.join(checkout, "perfbench", "run.py"), "--workload", workload,
+    cmd = [sys.executable, os.path.join("perfbench", "run.py"), "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds), "--trace", "0"]
     out = subprocess.run(cmd, cwd=checkout, capture_output=True, text=True).stdout.strip()
     try:
@@ -34,25 +35,21 @@ def main():
     ap.add_argument("change")
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", default="2-11", help="inclusive range, e.g. 2-11")
-    ap.add_argument("--seconds", type=int, default=5)
-    ap.add_argument("--out", help="append every run's result here as JSON lines")
     a = ap.parse_args()
     lo, hi = (int(s) for s in a.seeds.split("-"))
     with open(os.path.join(a.base, "BENCHMARK.json")) as f:
-        better = {m["name"]: m["better"] for m in json.load(f)["end_to_end"]}
+        bench = json.load(f)
+    better = {m["name"]: m["better"] for m in bench["end_to_end"]}
 
     results = {"base": {}, "change": {}}
     for seed in range(lo, hi + 1):
         order = ("base", "change") if seed % 2 == 0 else ("change", "base")
         for side in order:
-            r = run(getattr(a, side), a.workload, seed, a.seconds)
+            r = run(getattr(a, side), a.workload, seed, bench["run_seconds"])
             results[side][seed] = r
             vals = {k: v["value"] for k, v in r["metrics"].items() if k in better}
             print(f"seed {seed} {side:6} correct={r['correct']} failed={r['failed']} "
                   + " ".join(f"{k}={v:.4g}" for k, v in vals.items()), flush=True)
-            if a.out:
-                with open(a.out, "a") as f:
-                    f.write(json.dumps({"seed": seed, "side": side, **r}) + "\n")
 
     value = lambda side, seed, m: results[side][seed]["metrics"].get(m, {}).get("value")
     print(f"\n{'metric':18} {'base p50':>12} {'base IQR':>10} {'change p50':>12} {'change wins':>12}")
