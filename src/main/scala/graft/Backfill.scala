@@ -432,8 +432,8 @@ object Backfill {
         conf = new graft.meta.SerializableHadoopConf(env.spark.sparkContext.hadoopConfiguration))
 
       // heavy-path intermediates persisted for one attempt (the dedup
-      // output feeds both the owner and the feeder side of the
-      // segmented exchange — uncached it computes twice)
+      // output feeds the owners, the feeders and the summary pass of
+      // the segmented path — uncached it computes three times)
       def buildGold(heavy: Seq[String], inverted: Seq[String],
           persists: mutable.Buffer[DataFrame]): DataFrame = {
         val routedIds = (heavy ++ inverted).distinct
@@ -456,9 +456,9 @@ object Backfill {
               col("dt"), col("text_len"))
             .filter(isRouted)
           // ts-inverted conversations take the plain single-window
-          // session stage: the segmented path chains per-segment
-          // summaries in turn order within TS-based segments, which
-          // an inversion crossing a segment boundary would corrupt.
+          // session stage: the segmented path needs ts order within
+          // each time segment and turn ranges rising across them, and
+          // throws the marked precondition error otherwise.
           // (Anomalies are few; heavy AND inverted prefers correct.)
           val segIds = heavy.filterNot(inverted.contains)
           Seq((segIds, true), (inverted, false)).filter(_._1.nonEmpty).map {
@@ -762,8 +762,8 @@ object Backfill {
   /** Heavy-conversation slice path: dedup by (conv, turn) key (a
     * keyed row_number over an explicit hash exchange — massively
     * parallel, no per-conversation window), then frames + lag +
-    * sessions in ONE (conv, time-segment) exchange
-    * ([[graft.gold.SegmentedSweep]]). No stage in this path
+    * sessions with each (conv, time-segment) as one key of the fused
+    * sweep ([[graft.gold.SegmentedSweep]]). No stage in this path
     * serializes a whole conversation on one task.
     *
     * `segmented = false` is the ts-INVERTED reroute: segment-chunked
@@ -847,29 +847,18 @@ object Backfill {
       .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
         col("tool"), col("ts")))
 
-    val ctxF = scoped(ctx.withColumn("_fw_len", ctxLen).drop("text_len"))
+    val ctxF = ctx.withColumn("_fw_len", ctxLen).drop("text_len")
 
-    // FUSED segmented path (round-5, NEXT.md lead 1): frames + lag +
-    // sessions in one full-width (conv, seg) exchange + one narrow
-    // summary pass. Only for contract-clean conversations — the
-    // ts-inverted reroute below keeps the turn-ordered single-window
-    // session stage.
+    // segmented path: each (conv, time-segment) runs through the fused
+    // light sweep with chained state rows and narrow feeders. A
+    // ts-inverted conversation throws the sweep's marked error there,
+    // and the caller reroutes it to the turn-ordered single-window
+    // session stage below.
     if (segmented) {
       val state = Checkpoint.latestConvState(deltas)
         .select(col("conv_id"), col("st_last_ts"), col("st_last_role"), col("st_sessions"))
-      // the summary's winners derive from the CACHED dedup output, not
-      // a third scan+aggregate over raw bronze: silverH is exactly the
-      // deduped row set the sweep will emit as owners (one row per
-      // (conv, turn), so the summary's min_by collapses trivially),
-      // and the seed-count job materializes the cache before the big
-      // write job's two consumers read it — no duplicate subtree, no
-      // cache-build race. This also makes summary == owners BY
-      // CONSTRUCTION where the former bronze-side winners could count
-      // a context-superseded turn the owners never emit.
-      val silverHNarrow = silverH.select(
-        col("conv_id"), col("turn_idx"), col("ts"), col("role"), col("tool"))
       return graft.gold.SegmentedSweep.gold(
-        silverH, ctxF, state, silverHNarrow,
+        silverH, ctxF, state,
         gapSecs, segmentSecs,
         // share the backfill's lookback constant explicitly (ADVICE r5):
         // a future widest-frame change must move the feeder replication
@@ -958,11 +947,10 @@ object Backfill {
     * seeded by the previous slice's per-conversation state — exact
     * across slice boundaries. Production use: the ts-INVERTED
     * conversation reroute only (the turn-ordered single window is
-    * correct under any turn/ts disagreement, where the segmented
-    * two-pass would chain summaries across ts-based segments in the
-    * wrong order); a mega-conversation serializes here, so the skew
-    * path proper is [[graft.gold.SegmentedSweep]]. Also the equality
-    * baseline in specs.
+    * correct under any turn/ts disagreement; both sweeps throw on
+    * one, light or segmented); a mega-conversation serializes here,
+    * so the skew path proper is [[graft.gold.SegmentedSweep]]. Also
+    * the equality baseline in specs.
     */
   private[graft] def withState(ranged: DataFrame, state: DataFrame, gapSecs: Long): DataFrame = {
     val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))

@@ -39,6 +39,10 @@ import graft.schema.TranscriptSchema
   * [[graft.Backfill]] reroutes the offending conversations to
   * `heavyGold(segmented = false)`: segment-chunked range features
   * (FastWindows.rangeFeaturesChunked) + the turn-ordered `withState`.
+  * [[SegmentedSweep]] runs each time segment of a skew-routed
+  * conversation through this sweep as a key of its own, so it checks
+  * the contract across segments itself, before the sweep runs, and
+  * throws the same marked error naming the conversation.
   *
   * Semantics are bit-identical to the declarative pipeline
   * (FusedSweepSpec property-tests equality including injected

@@ -59,6 +59,44 @@ class TailContextSpec extends AnyFunSuite {
     assert(reports.count(!_.skipped) == nSlices)
     assertSame(spark.read.parquet(s"$dir/gold"),
       FeatureWindows.gold(SilverBuilder.build(bronze)))
+
+    // the same catch on the segmented heavy path: each conversation
+    // below crosses the skew threshold (400) before its inversion, so
+    // it is routed first and must be caught there
+    def turn(conv: String, i: Int, sec: Long) =
+      (conv, i, if (i % 3 == 0) "user" else "assistant", s"$conv turn $i",
+        if (i % 7 == 0) Some(s"tool_${i % 3}") else None, sec)
+    val segSecs = 2L * 86400
+    // epoch-aligned segment boundary (start itself is not aligned)
+    val boundary = (start / segSecs + 1) * segSecs
+    val s1 = start + sliceSecs
+    val routed = Seq(
+      // (a) turn 900 is 2 h early: an inversion inside one segment
+      "within a segment" -> (0 until 1000).map(i =>
+        turn("inv_seg", i, start + 1000 + i * 60L - (if (i == 900) 7200L else 0L))),
+      // (b) turn 599 at boundary + 5 s, turn 600 at boundary - 5 s:
+      // both segments are ts-sorted in turn order, only the turn
+      // ranges across the boundary overlap
+      "across a segment boundary" -> (0 until 1000).map(i =>
+        turn("inv_edge", i,
+          if (i == 599) boundary + 5 else if (i == 600) boundary - 5
+          else boundary + (i - 600) * 60L)),
+      // (c) heavy in slice 0 (carried into slice 1's first attempt),
+      // then turn 505 is 2 h early in slice 1
+      "in a later slice of a carried heavy" -> ((0 until 500).map(i =>
+        turn("inv_carry", i, s1 - 86400 + i * 60L)) ++ (500 until 510).map(i =>
+        turn("inv_carry", i, s1 + 10000 + (i - 500) * 600L - (if (i == 505) 7200L else 0L)))))
+    for ((what, conv) <- routed) {
+      val routedBronze = base.unionByName(rows(conv)).cache()
+      val routedDir = Files.createTempDirectory("bf_inv_routed").toString
+      Backfill.run(spark, routedBronze, routedDir, start, sliceSecs, nSlices,
+        skewHeavyThreshold = Some(400L), segmentSecs = segSecs)
+      withClue(s"inversion $what: ") {
+        assertSame(spark.read.parquet(s"$routedDir/gold"),
+          FeatureWindows.gold(SilverBuilder.build(routedBronze)))
+      }
+      routedBronze.unpersist()
+    }
   }
 
   test("ts-inverted conversation continued in the next slice == single-shot") {
