@@ -3,7 +3,6 @@ package graft
 import java.sql.Timestamp
 
 import scala.annotation.tailrec
-import scala.collection.mutable
 import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.{Column, DataFrame, Row, SaveMode, SparkSession}
@@ -161,21 +160,15 @@ object Backfill {
     * the dominant text column, and the rows ride a small side shuffle
     * into the sweep, not the big exchange.
     *
-    * `skewHeavyThreshold` routes conversations whose PER-SLICE cost —
-    * rows in this slice, or committed lookback events — exceeds the
-    * threshold onto the segmented heavy path. The cost of one plain
-    * fused-sweep task is O(slice rows + lookback context) per
-    * conversation, so the dispatch keys on exactly that; cumulative
-    * conversation size is irrelevant (a 10^8-turn conversation that
-    * went quiet costs nothing). Measured on this host the plain sweep
-    * handles ~600k rows/conversation/slice in well under a second of
-    * straggler time while the segmented machinery costs seconds of
-    * fixed overhead — dispatch pays only in the millions
-    * (Bench/docs/NEXT.md). This absolute crossover is the only rule.
-    * A core-aware one (2x a fair core share) made the local[32] bench
-    * backfill 1.4-2.7x slower where it routed (OPTIMIZATION_r06.md
-    * §2); gated to a 25% slice budget it routed nothing at local[32]
-    * or local[16] and cost a count and a detection job per run.
+    * Every contract-clean conversation takes the fused sweep
+    * ([[FusedSweep.gold]]), however large; its byte-sized, 8x
+    * over-partitioned exchange bounds a mega's task at the mega's own
+    * rows. `skewHeavyThreshold` has NO effect: it stays on the
+    * signature for existing callers only. The time-segmented skew
+    * route it used to select lost every rung of the skew ladder, up to
+    * 16M turns of one conversation in one slice (docs/SKEW_LADDER.md).
+    * `segmentSecs` sizes the chunks of the ts-inverted reroute's range
+    * features ([[heavyGold]]).
     *
     * `materializeSilver`: the gold schema is a superset of silver
     * (silver columns + features), so the silver layer is SERVED as a
@@ -226,7 +219,7 @@ object Backfill {
           "length(text) into the committed slices first")
 
     val env = RunEnv(spark, bronze, outDir, sliceSecs, nSlices, sessionGapSecs,
-      skewHeavyThreshold, segmentSecs, materializeSilver)
+      segmentSecs, materializeSilver)
     // committed row counts: the resume set, and the seed of the
     // empty-slice flag across resumes
     val committedRows: Map[String, Long] = wms.map(w => w.sliceId -> w.rowCount).toMap
@@ -243,10 +236,10 @@ object Backfill {
             (SliceReport(s.id, 0L, (System.nanoTime() - t0) / 1000000L, skipped = false), c)
           case None =>
             val in = inputs(env, s)
-            val w = write(env, s, in, plan(env, s, in, c))
+            val w = write(env, s, in, plan(env, s, c))
             if (failAfterGoldWriteOfSlice.contains(s.id))
               throw new RuntimeException(s"injected failure after gold write of ${s.id} (test hook)")
-            commit(env, s, w, t0)
+            commit(env, s, w, c, t0)
         }
         (next, reports :+ report)
     }._2
@@ -254,13 +247,6 @@ object Backfill {
 
   /** What one slice hands the next within a [[run]] call. */
   private final case class Carried(
-      // heavy ids detected in one slice are routed on the next slices'
-      // first attempts (an ongoing mega keeps > thr lookback events
-      // until it goes quiet; re-detecting it every slice would pay a
-      // wasted optimistic attempt each time) until the lookback drains
-      // at `heavyExpiry`, where one re-detection refreshes the set
-      heavyIds: Seq[String] = Nil,
-      heavyExpiry: Int = -1,
       // the last slice's written bytes: sweep-exchange sizing
       lastBytes: Option[Long] = None,
       // the previous slice had no rows: probe this one (see [[commitEmpty]])
@@ -279,15 +265,9 @@ object Backfill {
   /** What every slice of one [[run]] call shares. */
   private final case class RunEnv(
       spark: SparkSession, bronze: DataFrame, outDir: String, sliceSecs: Long, nSlices: Int,
-      sessionGapSecs: Long, skewHeavyThreshold: Option[Long], segmentSecs: Long,
-      materializeSilver: Boolean) {
+      sessionGapSecs: Long, segmentSecs: Long, materializeSilver: Boolean) {
     val goldPath = s"$outDir/gold"
     val silverPath = s"$outDir/silver"
-    val cores: Int = spark.sparkContext.defaultParallelism
-    // most conversations one detection routes
-    val routedCap: Int = Math.max(128, 4 * cores)
-    // slices until a carried heavy set expires: the lookback drains
-    val heavyReach: Int = (Math.ceil(MaxLookbackSecs.toDouble / sliceSecs) + 1).toInt
 
     // explicit read schema for all committed-gold reads: survives empty
     // dirs (zero readable files) and pre-upgrade slices (text_len reads
@@ -334,74 +314,41 @@ object Backfill {
       new Timestamp(s.start * 1000L), new Timestamp(s.end * 1000L), None, 0L)
   }
 
-  /** A slice's inputs: the raw and validated slice bronze, the state
+  /** A slice's inputs: the validated slice bronze, the state
     * delta chain of all committed slices before it (one parquet read;
     * the sweep resolves latest-per-conversation inline) and the
     * committed lookback context — conv_id + ts + persisted text_len +
     * tool only, so parquet column pruning never touches the dominant
     * text column (one listing of the overlapping slice dirs).
     */
-  private final case class SliceInputs(
-      raw: DataFrame, bronze: DataFrame, deltas: DataFrame, ctx: DataFrame)
+  private final case class SliceInputs(bronze: DataFrame, deltas: DataFrame, ctx: DataFrame)
 
   private def inputs(env: RunEnv, s: Slice): SliceInputs = phase(s.id, "inputs") {
-    val raw = env.sliceRows(s)
-    SliceInputs(raw, SilverBuilder.validate(raw),
+    SliceInputs(SilverBuilder.validate(env.sliceRows(s)),
       Checkpoint.readConvStateDeltas(env.spark, env.outDir, s.start),
       contextRead(env.spark, env.goldPath, s.id, s.start, env.sliceSecs, Some(env.goldFileSchema)))
   }
 
-  /** The write-shape decision for a slice: sweep partitions (= output
-    * files), and the carried state with the heavy set the first write
-    * attempt routes off the light sweep.
+  /** The write-shape decision for a slice: its sweep partition count
+    * (= output files), sized from the best available byte estimate:
+    * this run's previous written slice, a committed neighbor on
+    * resume, or bronze-size/nSlices.
     */
-  private final case class SlicePlan(sweepParts: Int, carried: Carried)
-
-  private def plan(env: RunEnv, s: Slice, in: SliceInputs, c: Carried): SlicePlan =
+  private def plan(env: RunEnv, s: Slice, c: Carried): Int =
     phase(s.id, "plan") {
-      // size the sweep exchange from the best available byte estimate:
-      // this run's previous written slice, a committed neighbor on
-      // resume, or bronze-size/nSlices
       val estBytes = c.lastBytes
         .orElse(if (s.i > 0)
           dirBytes(env.spark, s"${env.goldPath}/slice_id=${sliceId(s.start - env.sliceSecs)}")
         else None)
         .orElse(env.bronzeBytesEst)
-      val sweepParts = sweepPartitions(env.spark, estBytes)
-      // a carried heavy set is re-detected where its lookback drains
-      env.skewHeavyThreshold match {
-        case Some(thr) if c.heavyIds.nonEmpty && s.i >= c.heavyExpiry =>
-          SlicePlan(sweepParts, c.copy(heavyIds = detectCounts(env, s, in, thr),
-            heavyExpiry = s.i + env.heavyReach))
-        case _ => SlicePlan(sweepParts, c)
-      }
-    }
-
-  /** Skew detection on PER-SLICE cost: rows this slice, or committed
-    * lookback events (what one sweep task would have to stream for the
-    * conversation). Conversations above `thr` are the skew TAIL — one
-    * narrow map-combined count + driver collect beats re-planning
-    * broadcast joins into all split branches. Largest first, at most
-    * `routedCap` of them.
-    */
-  private def detectCounts(env: RunEnv, s: Slice, in: SliceInputs, thr: Long): Seq[String] =
-    phase(s.id, "heavy ids") {
-      val sliceCnt = in.raw.groupBy(col("conv_id")).count()
-      val ctxCnt = in.ctx.groupBy(col("conv_id")).count()
-      sliceCnt.filter(col("count") > thr)
-        .unionByName(ctxCnt.filter(col("count") > thr))
-        .groupBy(col("conv_id")).agg(max(col("count")).as("count"))
-        .orderBy(col("count").desc, col("conv_id"))
-        .limit(env.routedCap).collect()
-        .map(_.getString(0)).toSeq
+      sweepPartitions(env.spark, estBytes)
     }
 
   /** A landed gold write: its observed lineage row (None = observe
-    * skipped or timed out), the conversations it routed off the light
-    * sweep, and the carried state with the heavy set it routed.
+    * skipped or timed out) and the ts-inverted conversations it
+    * rerouted off the light sweep.
     */
-  private final case class SliceWrite(
-      metrics: Option[Row], routedIds: Seq[String], carried: Carried)
+  private final case class SliceWrite(metrics: Option[Row], invertedIds: Seq[String])
 
   /** ONE compute pass lands gold into the slice's OWN static
     * `slice_id=` directory (a plain overwrite: the idempotent-replace
@@ -413,62 +360,37 @@ object Backfill {
     * slice's conversation-state delta as per-task side-files of the
     * same job.
     *
-    * The fused sweep asserts two preconditions, and the slice RE-RUNS
-    * (idempotent overwrite) with the offending conversations rerouted
-    * when either fails, at most three times:
-    *  - per-conversation capacity (lazy skew detection: the explicit
-    *    count job runs only after a conversation actually crosses the
-    *    absolute threshold; detected heavies carry into later slices'
-    *    first attempts), and
-    *  - ts non-decreasing in turn_idx (the transcript contract;
-    *    clock-skewed conversations go to the ts-sorted heavy frame path
-    *    + plain turn-ordered sessions).
-    * Zero cost on the contract-clean, all-light path.
+    * The fused sweep asserts the transcript contract (ts non-decreasing
+    * in turn_idx). When a conversation breaks it, the slice RE-RUNS
+    * (idempotent overwrite) with the clock-skewed conversations
+    * rerouted to [[heavyGold]]: ts-sorted range features + plain
+    * turn-ordered sessions. Zero cost on the contract-clean path.
     */
-  private def write(env: RunEnv, s: Slice, in: SliceInputs, p: SlicePlan): SliceWrite =
+  private def write(env: RunEnv, s: Slice, in: SliceInputs, sweepParts: Int): SliceWrite =
     phase(s.id, "write") {
       val stateSink = graft.meta.StateSideSink(
         dir = Checkpoint.stateDeltaDir(env.outDir, s.start),
         conf = new graft.meta.SerializableHadoopConf(env.spark.sparkContext.hadoopConfiguration))
 
-      // heavy-path intermediates persisted for one attempt (the dedup
-      // output feeds the owners, the feeders and the summary pass of
-      // the segmented path — uncached it computes three times)
-      def buildGold(heavy: Seq[String], inverted: Seq[String],
-          persists: mutable.Buffer[DataFrame]): DataFrame = {
-        val routedIds = (heavy ++ inverted).distinct
-        val isRouted =
-          if (routedIds.isEmpty) lit(false) else col("conv_id").isin(routedIds: _*)
+      def buildGold(inverted: Seq[String]): DataFrame = {
+        val isInverted =
+          if (inverted.isEmpty) lit(false) else col("conv_id").isin(inverted: _*)
         val light = FusedSweep.gold(
-          in.deltas.filter(!isRouted), in.bronze.filter(!isRouted), env.sessionGapSecs,
-          Some(FusedSweep.ctxStreamRows(in.ctx.filter(!isRouted))),
-          capacityLimit = env.skewHeavyThreshold,
-          numPartitions = Some(p.sweepParts),
+          in.deltas.filter(!isInverted), in.bronze.filter(!isInverted), env.sessionGapSecs,
+          Some(FusedSweep.ctxStreamRows(in.ctx.filter(!isInverted))),
+          numPartitions = Some(sweepParts),
           stateSink = Some(stateSink))
-        if (routedIds.isEmpty) light
+        if (inverted.isEmpty) light
         else {
-          // routed context comes from the same narrow gold read; the
-          // heavy path's dedup union additionally needs turn_idx and
-          // role, with text passed as null + text_len
+          // the reroute's frame context comes from the same narrow gold
+          // read, text passed as null + text_len
           val context = in.ctx
             .select(col("conv_id"), col("turn_idx"), col("role"),
-              lit(null).cast("string").as("text"), col("tool"), col("ts"),
-              col("dt"), col("text_len"))
-            .filter(isRouted)
-          // ts-inverted conversations take the plain single-window
-          // session stage: the segmented path needs ts order within
-          // each time segment and turn ranges rising across them, and
-          // throws the marked precondition error otherwise.
-          // (Anomalies are few; heavy AND inverted prefers correct.)
-          val segIds = heavy.filterNot(inverted.contains)
-          Seq((segIds, true), (inverted, false)).filter(_._1.nonEmpty).map {
-            case (ids, segmented) =>
-              val sel = col("conv_id").isin(ids: _*)
-              heavyGold(in.deltas.filter(sel), context.filter(sel),
-                in.bronze.filter(sel), s.start, env.sessionGapSecs, env.segmentSecs,
-                segmented = segmented, outPartitions = Some(p.sweepParts),
-                persistRegistry = Some(persists))
-          }.foldLeft(light)((acc, h) => acc.unionByName(h.select(light.columns.map(col): _*)))
+              lit(null).cast("string").as("text"), col("tool"), col("ts"), col("text_len"))
+          val rerouted = heavyGold(in.deltas.filter(isInverted), context.filter(isInverted),
+            in.bronze.filter(isInverted), s.start, env.sessionGapSecs, env.segmentSecs,
+            outPartitions = Some(sweepParts))
+          light.unionByName(rerouted.select(light.columns.map(col): _*))
         }
       }
 
@@ -485,47 +407,35 @@ object Backfill {
           Checkpoint.lineageObserveExprs(df, s.days))(save)
       }
 
-      // `c.heavyIds` is the heavy set this attempt routes
-      @tailrec def attempt(n: Int, c: Carried, inverted: Seq[String]): SliceWrite = {
+      @tailrec def attempt(n: Int, inverted: Seq[String]): SliceWrite = {
         // pre-clear the slice's delta dir before EVERY attempt: a failed
         // attempt's side-files (possibly for partitions the retry's
         // different routing never rewrites) must not survive
         Checkpoint.clearConvStateDelta(env.spark, env.outDir, s.start)
-        val persists = mutable.Buffer[DataFrame]()
-        val landed =
-          try Try(writeGold(buildGold(c.heavyIds, inverted, persists), n))
-          finally persists.foreach(_.unpersist())
-        landed match {
-          case Success(metrics) => SliceWrite(metrics, (c.heavyIds ++ inverted).distinct, c)
-          case Failure(e) if n <= 3 && isCapacity(e) =>
-            // everything detected at the crossover must route
-            val detected = detectCounts(env, s, in, env.skewHeavyThreshold.get)
-            if (!detected.exists(d => !c.heavyIds.contains(d))) throw e
-            println(s"[backfill] ${s.id}: routing ${detected.size} oversize " +
-              s"conversation(s) to the segmented heavy path: " +
-              detected.take(5).mkString(", ") + (if (detected.size > 5) ", ..." else ""))
-            attempt(n + 1, c.copy(heavyIds = (c.heavyIds ++ detected).distinct,
-              heavyExpiry = s.i + env.heavyReach), inverted)
-          case Failure(e) if n <= 3 && isTsInversion(e) =>
+        Try(writeGold(buildGold(inverted), n)) match {
+          case Success(metrics) => SliceWrite(metrics, inverted)
+          case Failure(e) if isTsInversion(e) =>
             val found = phase(s.id, "inversion detect")(detectInvertedConvs(in.bronze))
             if (!found.exists(d => !inverted.contains(d))) throw e
             println(s"[backfill] ${s.id}: rerouting ${found.size} ts-inverted " +
               s"conversation(s) off the fused sweep: ${found.take(5).mkString(", ")}" +
               (if (found.size > 5) ", ..." else ""))
-            attempt(n + 1, c, (inverted ++ found).distinct)
+            attempt(n + 1, (inverted ++ found).distinct)
           case Failure(e) => throw e
         }
       }
-      attempt(1, p.carried, Nil)
+      attempt(1, Nil)
     }
 
   /** Everything after the gold write, watermark last: the optional
     * silver copy, lineage (from the observed write metrics, or an
-    * aggregate over the written files), the state delta of the routed
-    * conversations (the light path's already landed as side-files),
-    * the committing watermark row, and adaptive state compaction.
+    * aggregate over the written files), the state delta of the
+    * rerouted conversations (the light path's already landed as
+    * side-files), the committing watermark row, and adaptive state
+    * compaction.
     */
-  private def commit(env: RunEnv, s: Slice, w: SliceWrite, t0: Long): (SliceReport, Carried) =
+  private def commit(
+      env: RunEnv, s: Slice, w: SliceWrite, c: Carried, t0: Long): (SliceReport, Carried) =
     phase(s.id, "commit") {
       val spark = env.spark
       if (env.materializeSilver)
@@ -546,10 +456,10 @@ object Backfill {
         if (env.materializeSilver) deleteDir(spark, s"${env.silverPath}/slice_id=${s.id}")
       }
       val bytes = if (rows > 0L) dirBytes(spark, s"${env.goldPath}/slice_id=${s.id}") else None
-      if (rows > 0L && w.routedIds.nonEmpty)
-        phase(s.id, "routed slice meta")(Checkpoint.appendSliceMeta(env.outDir, s.start,
+      if (rows > 0L && w.invertedIds.nonEmpty)
+        phase(s.id, "rerouted slice meta")(Checkpoint.appendSliceMeta(env.outDir, s.start,
           Checkpoint.stateDeltaFromGold(
-            env.goldWritten(s).filter(col("conv_id").isin(w.routedIds: _*)))))
+            env.goldWritten(s).filter(col("conv_id").isin(w.invertedIds: _*)))))
       phase(s.id, "watermark")(Checkpoint.commitSlice(spark, env.outDir, s.id,
         new Timestamp(s.start * 1000L), new Timestamp(s.end * 1000L), hw, rows))
       if (phase(s.id, "compaction check")(
@@ -557,8 +467,8 @@ object Backfill {
         phase(s.id, "state compaction")(
           Checkpoint.compactConvState(spark, env.outDir, s.start, env.goldRowType))
       (SliceReport(s.id, rows, wallMs, skipped = false),
-        if (rows == 0L) w.carried.copy(prevEmpty = true)
-        else w.carried.copy(lastBytes = bytes, prevEmpty = false))
+        if (rows == 0L) c.copy(prevEmpty = true)
+        else c.copy(lastBytes = bytes, prevEmpty = false))
     }
 
   private def deleteDir(spark: SparkSession, path: String): Unit = {
@@ -698,7 +608,8 @@ object Backfill {
     * downstream of it change), re-run the backfill on the caller's
     * full bronze (which contains the late rows), and clear the queue.
     * Result equals a single-shot run over the full input
-    * (LateDataSpec property).
+    * (LateDataSpec property). `skewHeavyThreshold` has no effect, as on
+    * [[run]] (docs/SKEW_LADDER.md).
     */
   def reprocessLate(
       spark: SparkSession,
@@ -713,8 +624,8 @@ object Backfill {
       materializeSilver: Boolean = false): Seq[SliceReport] = {
     val latePath = s"$outDir/_late"
     val runAll = () => run(spark, bronze, outDir, firstStartSec, sliceSecs, nSlices,
-      sessionGapSecs = sessionGapSecs, skewHeavyThreshold = skewHeavyThreshold,
-      segmentSecs = segmentSecs, materializeSilver = materializeSilver)
+      sessionGapSecs = sessionGapSecs, segmentSecs = segmentSecs,
+      materializeSilver = materializeSilver)
     // the earliest queued slice, from the queue's partition dir names
     // (driver-side listing, no Spark job)
     val lateSecs = Checkpoint.numberedDirs(spark, latePath, "late_slice_start=").map(_._2)
@@ -735,13 +646,6 @@ object Backfill {
     Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
       .exists(t => Option(t.getMessage).exists(_.contains("fused sweep precondition violated")))
 
-  /** True if the failure is the fused sweep's per-conversation
-    * capacity check (lazy skew detection).
-    */
-  private[graft] def isCapacity(e: Throwable): Boolean =
-    Iterator.iterate(e)(_.getCause).takeWhile(_ != null).take(16)
-      .exists(t => Option(t.getMessage).exists(_.contains("fused sweep capacity exceeded")))
-
   /** Conversations whose deduped slice rows have ts DECREASING in
     * turn_idx — the ones the fused sweep cannot stream. Only runs on
     * the anomaly path (after a precondition failure), so its extra
@@ -759,17 +663,15 @@ object Backfill {
       .collect().map(_.getString(0)).toSeq
   }
 
-  /** Heavy-conversation slice path: dedup by (conv, turn) key (a
-    * keyed row_number over an explicit hash exchange — massively
-    * parallel, no per-conversation window), then frames + lag +
-    * sessions with each (conv, time-segment) as one key of the fused
-    * sweep ([[graft.gold.SegmentedSweep]]). No stage in this path
-    * serializes a whole conversation on one task.
-    *
-    * `segmented = false` is the ts-INVERTED reroute: segment-chunked
-    * range features ([[graft.gold.FastWindows.rangeFeaturesChunked]])
-    * and the turn-ordered single-window [[withState]], whose session
-    * chain stays correct when ts disagrees with turn order.
+  /** The ts-INVERTED reroute: the slice path of conversations whose ts
+    * decreases in turn order, which the fused sweep rejects. Slice
+    * rows are deduplicated as silver is ([[SilverBuilder.dedup]]),
+    * the range features run ts-sorted in time chunks of `segmentSecs`
+    * ([[graft.gold.FastWindows.rangeFeaturesChunked]]), and lag and
+    * sessions come from the turn-ordered single window of
+    * [[withState]], whose session chain stays correct when ts
+    * disagrees with turn order. `context` holds the conversations'
+    * committed lookback rows, which feed the frames only.
     */
   private[graft] def heavyGold(
       deltas: DataFrame,
@@ -778,98 +680,29 @@ object Backfill {
       start: Long,
       gapSecs: Long,
       segmentSecs: Long,
-      segmented: Boolean = true,
-      outPartitions: Option[Int] = None,
-      // slice-scoped persist registry: intermediates cached here are
-      // unpersisted by the caller right after the slice's write lands.
-      // None (specs / single-shot) skips the persists entirely.
-      persistRegistry: Option[scala.collection.mutable.Buffer[DataFrame]] = None): DataFrame = {
-    import graft.gold.FusedSweep
-    val spark = sliceBronze.sparkSession
-    def scoped(df: DataFrame): DataFrame = persistRegistry match {
-      case Some(reg) =>
-        val p = df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        reg += p
-        p
-      case None => df
-    }
+      outPartitions: Option[Int] = None): DataFrame = {
+    val state = Checkpoint.latestConvState(deltas)
     // same horizon-free re-send drop as the fused light path: a bronze
     // turn at or below the carried last committed turn_idx is a
-    // duplicate of committed data (heavy conversations are few — the
-    // lastTurns side broadcasts)
-    val lastTurns = Checkpoint.latestConvState(deltas)
-      .select(col("conv_id"), col("st_last_turn_idx").as("_lt"))
-    val bronzeNew = sliceBronze.join(broadcast(lastTurns), Seq("conv_id"), "left")
-      .filter(col("_lt").isNull || col("turn_idx") > col("_lt")).drop("_lt")
-    // committed context rows take precedence (_k = 1 < 2), then the
-    // SilverBuilder winner order — identical to the fused sweep's.
+    // duplicate of committed data, so no committed row can win the
+    // dedup (rerouted conversations are few — the state side broadcasts)
+    val bronzeNew = sliceBronze
+      .join(broadcast(state.select(col("conv_id"), col("st_last_turn_idx").as("_lt"))),
+        Seq("conv_id"), "left")
+      .filter(col("_lt").isNull || col("turn_idx") > col("_lt"))
+    val silverF = SilverBuilder.dedup(bronzeNew)
+      .select(col("conv_id"), col("turn_idx"), col("role"), col("text"), col("tool"),
+        col("ts"), coalesce(length(col("text")).cast("long"), lit(0L)).as("_fw_len"))
     // Context may arrive gold-sourced (null text + text_len) or as raw
-    // silver (specs, single-shot use) — normalize the frame length.
-    val hasLen = context.columns.contains("text_len")
-    val ctx = context.drop("dt")
-    // fall through to length(text) when text_len is null (raw-silver
-    // context in specs; pre-upgrade gold slices are rejected loudly at
-    // run start, so a null-null pair cannot silently zero the lengths)
+    // silver (specs) — normalize the frame length. Fall through to
+    // length(text) when text_len is null (pre-upgrade gold slices are
+    // rejected loudly at run start, so a null-null pair cannot
+    // silently zero the lengths).
     val ctxLen =
-      if (hasLen) coalesce(col("text_len"), length(col("text")).cast("long"), lit(0L))
+      if (context.columns.contains("text_len"))
+        coalesce(col("text_len"), length(col("text")).cast("long"), lit(0L))
       else coalesce(length(col("text")).cast("long"), lit(0L))
-    val both = FusedSweep.contextRows(ctx.drop("text_len"))
-      .unionByName(FusedSweep.bronzeRows(bronzeNew))
-    // Dedup via row_number over an explicit hash repartition on the
-    // exact grouping key — two measured pathologies in the former
-    // min_by(struct(...)) aggregate:
-    //  - a var-length struct buffer bars hash aggregation, and the
-    //    partial SORT aggregate then ran concentrated on the mega's
-    //    few time-clustered input splits (~6.5 s max task vs 0.05 s
-    //    median, §2.5 input skew);
-    //  - spread out, the aggregate was still ~200 us/row (9 s medians
-    //    at 45k rows/task): every row built TWO structs copying the
-    //    dominant text column, compared through interpreted struct
-    //    ordering.
-    // The window form sorts binary UnsafeRows (codegen prefix
-    // comparators) and evaluates a streaming row_number — the same
-    // machinery the light sweep's big sort uses at ~2 us/row. The
-    // numbered repartition satisfies the window's distribution (its
-    // own exchange is elided) and the scan tasks just forward bytes.
-    // Winner semantics are IDENTICAL: row_number orders by the exact
-    // tuple the min_by ordering struct held, and rows tying on the
-    // full tuple are value-identical (every output field is in the
-    // tuple), so the kept row is the same (SegmentedSweepSpec /
-    // BackfillSpec bit-equality).
-    val dedupParts = Math.max(spark.sparkContext.defaultParallelism,
-      outPartitions.getOrElse(1))
-    val wDedup = Window.partitionBy(col("conv_id"), col("turn_idx"))
-      .orderBy(col("_k"), col("ts"), col("role"), coalesce(col("tool"), lit("")), col("text"))
-    val silverH = scoped(both
-      .repartition(dedupParts, col("conv_id"), col("turn_idx"))
-      .withColumn("_rn", row_number().over(wDedup))
-      .filter(col("_rn") === 1 && col("_k") === 2)
-      .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
-        col("tool"), col("ts")))
-
-    val ctxF = ctx.withColumn("_fw_len", ctxLen).drop("text_len")
-
-    // segmented path: each (conv, time-segment) runs through the fused
-    // light sweep with chained state rows and narrow feeders. A
-    // ts-inverted conversation throws the sweep's marked error there,
-    // and the caller reroutes it to the turn-ordered single-window
-    // session stage below.
-    if (segmented) {
-      val state = Checkpoint.latestConvState(deltas)
-        .select(col("conv_id"), col("st_last_ts"), col("st_last_role"), col("st_sessions"))
-      return graft.gold.SegmentedSweep.gold(
-        silverH, ctxF, state,
-        gapSecs, segmentSecs,
-        // share the backfill's lookback constant explicitly (ADVICE r5):
-        // a future widest-frame change must move the feeder replication
-        // reach with it, not silently desync from a duplicated literal
-        lookbackSecs = MaxLookbackSecs,
-        numPartitions = outPartitions)
-    }
-
-    val silverF = silverH.withColumn("_fw_len",
-      coalesce(length(col("text")).cast("long"), lit(0L)))
-    val withContext = ctxF
+    val withContext = context.withColumn("_fw_len", ctxLen)
       .select(silverF.columns.map(col): _*)
       .unionByName(silverF)
     // O(n) segment-salted sweep (FastWindows), not a declarative
@@ -883,17 +716,17 @@ object Backfill {
       .filter(col("ts") >= tsLit(withContext, start))
       .withColumn("dt", to_date(col("ts")))
 
-    val state = Checkpoint.latestConvState(deltas)
-      .select(col("conv_id"), col("st_last_ts"), col("st_last_role"), col("st_sessions"))
-    val sessioned = withState(ranged, state, gapSecs)
-    // round-robin the heavy output across the session's full
+    val sessioned = withState(ranged,
+      state.select(col("conv_id"), col("st_last_ts"), col("st_last_role"), col("st_sessions")),
+      gapSecs)
+    // round-robin the rerouted output across the session's full
     // parallelism before it unions into the slice write: the segment
     // stages leave O(span/segment) partitions, and a downstream write
-    // inheriting that would serialize the mega's full-width rows on a
-    // few tasks (measured: a ~7 s write straggler for 1M rows on 3
-    // tasks). Numbered repartition so AQE leaves it alone; the
+    // inheriting that would serialize a large conversation's full-width
+    // rows on a few tasks (measured: a ~7 s write straggler for 1M rows
+    // on 3 tasks). Numbered repartition so AQE leaves it alone; the
     // backfill passes its size-targeted sweep partition count so the
-    // heavy branch's file count stays bounded too.
+    // rerouted branch's file count stays bounded too.
     val numParts = outPartitions.getOrElse(
       ranged.sparkSession.conf.get("spark.sql.shuffle.partitions").toInt)
     sessioned.withColumn("text_len", length(col("text")).cast("long"))
@@ -946,11 +779,11 @@ object Backfill {
   /** lag/gap/session over a slice via ONE window per conversation,
     * seeded by the previous slice's per-conversation state — exact
     * across slice boundaries. Production use: the ts-INVERTED
-    * conversation reroute only (the turn-ordered single window is
-    * correct under any turn/ts disagreement; both sweeps throw on
-    * one, light or segmented); a mega-conversation serializes here,
-    * so the skew path proper is [[graft.gold.SegmentedSweep]]. Also
-    * the equality baseline in specs.
+    * conversation reroute only ([[heavyGold]]; the turn-ordered single
+    * window is correct under any turn/ts disagreement, the fused sweep
+    * throws on one). Each conversation is one window on one task, as
+    * it is one key of the fused sweep. Also the equality baseline in
+    * specs.
     */
   private[graft] def withState(ranged: DataFrame, state: DataFrame, gapSecs: Long): DataFrame = {
     val w = Window.partitionBy(col("conv_id")).orderBy(col("turn_idx"))

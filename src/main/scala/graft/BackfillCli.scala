@@ -20,9 +20,8 @@ import graft.sources.TranscriptSource
   *   --slices   30                            (number of slices)
   *   [--format parquet|json]                  (default parquet)
   *   [--session-gap-secs 1800]
-  *   [--skew-threshold 10000000]              (per-slice rows or lookback events per
-  *                                             conversation -> segmented heavy path)
-  *   [--segment-secs 604800]
+  *   [--segment-secs 604800]                  (time chunk of the ts-inverted reroute's
+  *                                             range features)
   *   [--materialize-silver]                   (also write a physical silver/ copy;
   *                                             by default silver is served as a
   *                                             projection of the gold files)
@@ -43,7 +42,6 @@ object BackfillCli {
       nSlices: Int = -1,
       format: String = "parquet",
       sessionGapSecs: Long = 1800L,
-      skewThreshold: Option[Long] = Some(10000000L),
       segmentSecs: Long = 604800L,
       latePolicy: String = "ignore",
       materializeSilver: Boolean = false)
@@ -73,8 +71,6 @@ object BackfillCli {
       case "--slices" :: v :: t           => loop(t, a.copy(nSlices = v.toInt))
       case "--format" :: v :: t           => loop(t, a.copy(format = v))
       case "--session-gap-secs" :: v :: t => loop(t, a.copy(sessionGapSecs = v.toLong))
-      case "--skew-threshold" :: v :: t =>
-        loop(t, a.copy(skewThreshold = if (v.toLong <= 0) None else Some(v.toLong)))
       case "--segment-secs" :: v :: t     => loop(t, a.copy(segmentSecs = v.toLong))
       case "--late-policy" :: v :: t      => loop(t, a.copy(latePolicy = v))
       case "--materialize-silver" :: t    => loop(t, a.copy(materializeSilver = true))
@@ -116,12 +112,12 @@ object BackfillCli {
     val reports =
       if (a.latePolicy == "reprocess")
         Backfill.reprocessLate(spark, bronze, a.out, a.startSec, a.sliceSecs, a.nSlices,
-          sessionGapSecs = a.sessionGapSecs, skewHeavyThreshold = a.skewThreshold,
-          segmentSecs = a.segmentSecs, materializeSilver = a.materializeSilver)
+          sessionGapSecs = a.sessionGapSecs, segmentSecs = a.segmentSecs,
+          materializeSilver = a.materializeSilver)
       else
         Backfill.run(spark, bronze, a.out, a.startSec, a.sliceSecs, a.nSlices,
-          sessionGapSecs = a.sessionGapSecs, skewHeavyThreshold = a.skewThreshold,
-          segmentSecs = a.segmentSecs, materializeSilver = a.materializeSilver)
+          sessionGapSecs = a.sessionGapSecs, segmentSecs = a.segmentSecs,
+          materializeSilver = a.materializeSilver)
     reports.foreach { r =>
       println(s"[backfill] ${r.sliceId} rows=${r.rows} wallMs=${r.wallMs}" +
         (if (r.skipped) " (skipped: already committed)" else ""))

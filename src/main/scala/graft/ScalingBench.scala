@@ -210,10 +210,10 @@ object ScalingBench {
          |$nConvs conversations, 2 planted 2M-turn dense mega-conversations
          |(sub-3s agent ticks), $turns turns total, time-ranged bronze files
          |like a real landed ingest layer). Job: full checkpointed backfill
-         |(bronze → silver-as-projection → gold, 4 x 10-day slices, per-slice
-         |skew dispatch at the measured 10^7 crossover — the 2M-turn megas
-         |ride the plain fused sweep, which beats the segmented path
-         |below that size) + as-of join of 1-in-10 feature
+         |(bronze → silver-as-projection → gold, 4 x 10-day slices; every
+         |conversation, the 2M-turn megas included, rides the fused sweep,
+         |which beat a time-segmented split up to 16M turns per slice in
+         |docs/SKEW_LADDER.md) + as-of join of 1-in-10 feature
          |queries vs the gold history through the dispatching asOfAuto.
          |Identical job and input at both parallelism levels of each pair
          |(`spark.sql.shuffle.partitions` = cores). No multi-executor

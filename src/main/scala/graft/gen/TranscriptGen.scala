@@ -13,8 +13,9 @@ import org.apache.spark.sql.functions._
   *
   * Mirrors the shape of the reference's fixture generator
   * (scripts/transform_and_prepare_sample_data.py) but scaled: zipf-ish
-  * conversation sizes with optional planted mega-conversations (to
-  * exercise the segmented skew paths), mixed inter-turn gaps including
+  * conversation sizes with optional planted mega-conversations (the
+  * skew a mega brings to its gold-sweep task and to the as-of join's
+  * segmented form), mixed inter-turn gaps including
   * > session-threshold breaks, ~20 distinct tools, and optional
   * anomaly injection (duplicate (conv_id, turn_idx) rows, null
   * conv_ids) for silver-layer tests.

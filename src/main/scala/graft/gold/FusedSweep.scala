@@ -37,12 +37,15 @@ import graft.schema.TranscriptSchema
   * of transcripts by construction (turn order IS time order). The
   * sweep validates this and throws if violated, in which case
   * [[graft.Backfill]] reroutes the offending conversations to
-  * `heavyGold(segmented = false)`: segment-chunked range features
+  * `heavyGold`: segment-chunked range features
   * (FastWindows.rangeFeaturesChunked) + the turn-ordered `withState`.
-  * [[SegmentedSweep]] runs each time segment of a skew-routed
-  * conversation through this sweep as a key of its own, so it checks
-  * the contract across segments itself, before the sweep runs, and
-  * throws the same marked error naming the conversation.
+  *
+  * Every other conversation rides this sweep, however large: a
+  * conversation is one hash key, so a mega's task holds the mega's own
+  * rows (the 8x over-partitioned exchange spreads the rest), and the
+  * frames hold at most the 7-day lookback. The skew ladder
+  * (docs/SKEW_LADDER.md) measured this path faster than a
+  * time-segmented split of the mega up to 16M turns in one slice.
   *
   * Semantics are bit-identical to the declarative pipeline
   * (FusedSweepSpec property-tests equality including injected
@@ -89,15 +92,6 @@ object FusedSweep {
       lit(0).as("_k"),
       col("slice_start").cast("long").as("_seq"),
       col("st_sessions").as("_sessions"))
-
-  /** Committed context rows (`_k = 1`) for the heavy path's dedup
-    * union ([[graft.Backfill.heavyGold]]); the light sweep takes its
-    * context from the side-stream instead.
-    */
-  private[graft] def contextRows(context: DataFrame): DataFrame =
-    context.select(
-      col("conv_id"), col("turn_idx"), col("role"), col("text"), col("tool"), col("ts"),
-      lit(1).as("_k"), lit(0L).as("_seq"), lit(null).cast("int").as("_sessions"))
 
   private[graft] def bronzeRows(bronze: DataFrame): DataFrame =
     bronze.select(
@@ -190,14 +184,6 @@ object FusedSweep {
     * committed lookback ([[ctxStreamRows]]). Emits gold rows for the
     * slice only.
     *
-    * `capacityLimit`: optimistic skew detection — the sweep throws a
-    * marked exception the moment one conversation's accepted slice
-    * rows OR side-stream context entries exceed the limit (the same
-    * two quantities the explicit dispatch counts). The caller catches
-    * it, runs the explicit heavy-id detection, and re-runs with those
-    * conversations routed — so the common all-light slice pays ZERO
-    * detection jobs.
-    *
     * `stateSink`: when set, each sweep task also emits the slice's
     * per-conversation state delta as a parquet side-file — see
     * [[graft.meta.StateSideSink]]. This replaces the separate
@@ -209,7 +195,6 @@ object FusedSweep {
       bronze: DataFrame,
       gapSecs: Long = TranscriptSchema.DefaultSessionGapSecs,
       ctxStream: Option[DataFrame] = None,
-      capacityLimit: Option[Long] = None,
       numPartitions: Option[Int] = None,
       stateSink: Option[graft.meta.StateSideSink] = None): DataFrame = {
     val spark = bronze.sparkSession
@@ -236,7 +221,6 @@ object FusedSweep {
 
     val outSchema = goldSchema(tsType)
     val gap = gapSecs
-    val limit = capacityLimit.getOrElse(Long.MaxValue)
 
     val sink = stateSink
     val rdd = GraftInternalAccess.toInternalRdd(sorted.toDF())
@@ -250,7 +234,7 @@ object FusedSweep {
               .foreach(_.addTaskCompletionListener[Unit](_ => w.close()))
             w
           }.orNull
-          new SweepIterator(data, cx, gap, limit, writer)
+          new SweepIterator(data, cx, gap, writer)
       }
     GraftInternalAccess.internalCreateDataFrame(spark, rdd, outSchema)
   }
@@ -277,7 +261,6 @@ object FusedSweep {
   private final class SweepIterator(
       in: Iterator[InternalRow],
       ctx: Iterator[InternalRow], gapSecs: Long,
-      capacityLimit: Long = Long.MaxValue,
       writer: graft.meta.StateSideWriter = null)
       extends Iterator[InternalRow] {
 
@@ -305,15 +288,6 @@ object FusedSweep {
           new GenericInternalRow(latestOut.clone()))
         accAny = false
       }
-
-    // optimistic skew detection (see [[gold]])
-    private var convDataRows = 0L
-    private var convCtxRows = 0L
-    private def checkCapacity(n: Long, what: String): Unit =
-      if (n > capacityLimit)
-        throw new IllegalStateException(
-          s"fused sweep capacity exceeded: conversation $curConv has > $capacityLimit " +
-            s"$what this slice — route it to the segmented heavy path")
 
     // single-row lookahead into the (conv, t)-sorted side-stream;
     // always a private copy (UnsafeRow buffers are reused by the
@@ -359,8 +333,6 @@ object FusedSweep {
         throw new IllegalStateException(
           "fused sweep: scalar context without carried state for conversation " +
             s"$curConv — context seeds frames only; pass the state delta chain")
-      convCtxRows += 1L
-      checkCapacity(convCtxRows, "committed context events")
       val t = c.getLong(C_T)
       val l = c.getLong(C_LEN)
       val tool = if (c.isNullAt(C_TOOL)) null else c.getUTF8String(C_TOOL).toString
@@ -403,8 +375,6 @@ object FusedSweep {
 
     private def resetConv(conv: UTF8String): Unit = {
       curConv = conv
-      convDataRows = 0L
-      convCtxRows = 0L
       accAny = false
       accRole = null
       latestTsUs = Long.MinValue
@@ -506,8 +476,6 @@ object FusedSweep {
             val t = tsSecOf(r)
             if (groupOpen && t != groupTsSec) { lookahead = r.copy(); return true }
             lastTurn = turn; hasLastTurn = true
-            convDataRows += 1L
-            checkCapacity(convDataRows, "accepted rows")
             processData(r)
           }
         }

@@ -9,15 +9,17 @@ class BackfillCliSpec extends AnyFunSuite {
       "--bronze", "/data/bronze", "--out", "/data/medallion",
       "--start", "2024-01-01T00:00:00Z", "--slice-secs", "86400", "--slices", "30",
       "--format", "json", "--session-gap-secs", "900",
-      "--skew-threshold", "500000", "--segment-secs", "43200",
+      "--segment-secs", "43200",
       "--late-policy", "collect", "--materialize-silver"))
     assert(a.bronze == "/data/bronze" && a.out == "/data/medallion")
     assert(a.startSec == 1704067200L && a.sliceSecs == 86400L && a.nSlices == 30)
     assert(a.format == "json" && a.sessionGapSecs == 900L)
-    assert(a.skewThreshold.contains(500000L) && a.segmentSecs == 43200L)
+    assert(a.segmentSecs == 43200L)
     assert(a.latePolicy == "collect" && a.materializeSilver)
-    // the removed layout and periodic-compaction flags are unknown now
-    Seq(Seq("--range-layout"), Seq("--compact-every", "8")).foreach { flag =>
+    // the removed layout, periodic-compaction and skew-route flags are
+    // unknown now
+    Seq(Seq("--range-layout"), Seq("--compact-every", "8"),
+        Seq("--skew-threshold", "500000")).foreach { flag =>
       val ex = intercept[IllegalArgumentException](BackfillCli.parse(Seq(
         "--bronze", "b", "--out", "o", "--start", "0", "--slices", "1") ++ flag))
       assert(ex.getMessage == s"unknown or incomplete argument: ${flag.head}")
@@ -27,10 +29,10 @@ class BackfillCliSpec extends AnyFunSuite {
   test("epoch-seconds start, defaults, and skew-path opt-out") {
     val a = BackfillCli.parse(Seq(
       "--bronze", "b", "--out", "o", "--start", "1704067200",
-      "--slices", "4", "--skew-threshold", "0"))
+      "--slices", "4"))
     assert(a.startSec == 1704067200L)
     assert(a.sliceSecs == 86400L && a.format == "parquet")
-    assert(a.skewThreshold.isEmpty)
+    assert(a.segmentSecs == 604800L)
   }
 
   test("missing required args and unknown flags are rejected") {

@@ -100,15 +100,30 @@ class BackfillSpec extends AnyFunSuite {
       spark, nConvs = 20, avgTurns = 15, megaConvs = 2, megaTurns = 2000,
       injectAnomalies = true).cache()
     val oracle = FeatureWindows.gold(SilverBuilder.build(megaBronze))
-    // threshold 300 forces both mega-conversations onto the segmented
-    // heavy path; 4-day slices over the same 40 days make the state
-    // chain outgrow 4 deltas at the 5th slice, so the adaptive trigger
-    // writes a snapshot before the kill below
+    // every conversation takes the fused sweep: a threshold of 300,
+    // below both mega-conversations, routes nothing — the same gold
+    // from the same Spark jobs as no threshold. 4-day slices over the
+    // same 40 days make the state chain outgrow 4 deltas at the 5th
+    // slice, so the adaptive trigger writes a snapshot before the kill
+    // below
     val (width, n) = (4L * 86400, 10)
-    val dir = Files.createTempDirectory("bf_skew").toString
-    Backfill.run(spark, megaBronze, dir, start, width, n,
-      skewHeavyThreshold = Some(300L), segmentSecs = 2L * 86400)
-    assertSame(spark.read.parquet(s"$dir/gold"), oracle)
+    // the first scan of a cached frame runs a job of its own (AQE's
+    // table-cache stage): load it before counting either run
+    megaBronze.count()
+    def runWith(thr: Option[Long]): (String, Int) = {
+      val d = Files.createTempDirectory("bf_skew").toString
+      val (_, jobs) = TestListenerBus.jobsDuring(spark.sparkContext)(
+        Backfill.run(spark, megaBronze, d, start, width, n,
+          skewHeavyThreshold = thr, segmentSecs = 2L * 86400))
+      (d, jobs)
+    }
+    val (dir, thrJobs) = runWith(Some(300L))
+    val (plainDir, plainJobs) = runWith(None)
+    assert(thrJobs == plainJobs, s"$thrJobs jobs with the threshold vs $plainJobs without")
+    val (a, b) = (spark.read.parquet(s"$dir/gold"), spark.read.parquet(s"$plainDir/gold"))
+    assert(a.count() == b.count())
+    assert(a.exceptAll(b).count() == 0 && b.exceptAll(a).count() == 0)
+    assertSame(a, oracle)
     // kill after the 6th slice's gold write: the resume reads state
     // through the snapshot + the deltas after it
     val dir2 = Files.createTempDirectory("bf_skew_resume").toString
@@ -125,6 +140,55 @@ class BackfillSpec extends AnyFunSuite {
     Backfill.run(spark, megaBronze, dir2, start, width, n,
       skewHeavyThreshold = Some(300L), segmentSecs = 2L * 86400)
     assertSame(spark.read.parquet(s"$dir2/gold"), oracle)
+  }
+
+  /** A nasty conversation: dense bursts crossing 2-day segment
+    * boundaries, a quiet gap LONGER than the 7d lookback, ties at the
+    * exact segment boundary second, duplicate turns with divergent
+    * payloads, and tool calls.
+    */
+  private def nastyBronze: DataFrame = {
+    import spark.implicits._
+    val segSecs = 2L * 86400
+    val rows = scala.collection.mutable.ArrayBuffer[(String, Int, String, String, Option[String], Long)]()
+    var turn = 0
+    // burst 1: 3000 turns at 50s ticks crossing the first boundary
+    for (i <- 0 until 3000) {
+      rows += (("nasty", turn, if (i % 3 == 0) "user" else "assistant",
+        s"burst one text $i", if (i % 11 == 0) Some(s"t${i % 4}") else None,
+        start + 100 + i * 50L))
+      turn += 1
+    }
+    // ties at the exact segment boundary second
+    for (i <- 0 until 5) {
+      rows += (("nasty", turn, "tool", s"tie $i", Some("edge"), start + segSecs))
+      turn += 1
+    }
+    // quiet gap longer than the 7d lookback, then a short burst
+    val resume = start + segSecs + 604800L + 3600L
+    for (i <- 0 until 500) {
+      rows += (("nasty", turn, if (i % 2 == 0) "assistant" else "user",
+        s"late burst $i", None, resume + i * 30L))
+      turn += 1
+    }
+    // duplicate turn with a divergent payload (dedup must pick min)
+    rows += (("nasty", 3100, "zz_dup", "zzzz should lose", None, resume + 400 * 30L))
+    val extra = TranscriptGen.transcripts(spark, nConvs = 6, avgTurns = 12)
+    rows.toSeq.toDF("conv_id", "turn_idx", "role", "text", "tool_s", "sec")
+      .select(col("conv_id"), col("turn_idx"), col("role"), col("text"),
+        col("tool_s").as("tool"), timestamp_seconds(col("sec")).as("ts"))
+      .unionByName(extra)
+  }
+
+  test("backfill with mid-size routed conversations == single-shot (fused heavy)") {
+    val bronze = TranscriptGen.transcripts(spark, nConvs = 15, avgTurns = 12,
+      megaConvs = 2, megaTurns = 3000, injectAnomalies = true)
+      .unionByName(nastyBronze).cache()
+    val dir = Files.createTempDirectory("segsweep").toString
+    Backfill.run(spark, bronze, dir, start, 8L * 86400, 5,
+      skewHeavyThreshold = Some(400L), segmentSecs = 2L * 86400)
+    assertSame(spark.read.parquet(s"$dir/gold"), FeatureWindows.gold(SilverBuilder.build(bronze)))
+    bronze.unpersist()
   }
 
   test("a skew threshold above every conversation adds no Spark job; gold is identical") {
