@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.gold.{FeatureWindows, FusedSweep}
-import graft.meta.Checkpoint
+import graft.meta.{Checkpoint, FanOutParquet}
 import graft.schema.TranscriptSchema
 import graft.silver.SilverBuilder
 
@@ -330,7 +330,9 @@ object Backfill {
   }
 
   /** The write-shape decision for a slice: its sweep partition count
-    * (= output files), sized from the best available byte estimate:
+    * (one output file each, plus the siblings of a task that fans out
+    * its parquet encode: [[FanOutParquet]]), sized from the best
+    * available byte estimate:
     * this run's previous written slice, a committed neighbor on
     * resume, or bronze-size/nSlices.
     */
@@ -355,7 +357,8 @@ object Backfill {
     * semantics of dynamic partition overwrite without its staging
     * protocol, whose driver-side file moves grow with task count;
     * FLAT inside the dir — `dt` stays a data column, time pruning
-    * happens at slice granularity). Lineage metrics are OBSERVED on the
+    * happens at slice granularity), through [[FanOutParquet]], so the
+    * task holding a mega encodes on the idle cores. Lineage metrics are OBSERVED on the
     * write itself (zero extra jobs), and the sweep tasks emit the
     * slice's conversation-state delta as per-task side-files of the
     * same job.
@@ -400,8 +403,8 @@ object Backfill {
       // observes under its own name: a late listener event from a
       // failed attempt must never satisfy the retry's waiter.
       def writeGold(df: DataFrame, attempt: Int): Option[Row] = {
-        def save(d: DataFrame): Unit =
-          d.write.mode(SaveMode.Overwrite).parquet(s"${env.goldPath}/slice_id=${s.id}")
+        def save(d: DataFrame): Unit = d.write.mode(SaveMode.Overwrite)
+          .format(FanOutParquet.name).save(s"${env.goldPath}/slice_id=${s.id}")
         if (s.days.size > 64) { save(df); None }
         else writeObserved(env.spark, s"lineage_${s.id}_a$attempt", df,
           Checkpoint.lineageObserveExprs(df, s.days))(save)

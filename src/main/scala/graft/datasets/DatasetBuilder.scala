@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Backfill
 import graft.guard.LeakageGuard
-import graft.meta.Checkpoint
+import graft.meta.{Checkpoint, FanOutParquet}
 
 /** Train / validation / inference dataset builds over the gold table.
   * Replaces spark_jobs/build_datasets.py with two corrections:
@@ -88,7 +88,8 @@ object DatasetBuilder {
     * the frame takes ONE exchange on (_split, conv_id) and ONE sort on
     * (_split, conv_id, turn_idx) — which is already the ordering the
     * partitioned writer needs. It is written once with
-    * `partitionBy("_split")` into the hidden staging dir `_splits`
+    * `partitionBy("_split")` through [[FanOutParquet]] (a mega's
+    * writer encodes on the idle cores) into the hidden staging dir `_splits`
     * (Spark readers skip `_`-prefixed paths), and the two partition
     * dirs are then renamed to `train/` and `validation/` (no `_split`
     * column in the files); a side with no rows gets an empty dir with
@@ -113,7 +114,7 @@ object DatasetBuilder {
     def rows(side: String) = count(when(col("_split") === side, true))
     val observed = Backfill.writeObserved(spark, s"datasets_splits_${System.nanoTime()}", splits,
         Seq(rows("train"), rows("validation"), max(col("dt"))))(
-      _.write.mode("overwrite").partitionBy("_split").parquet(staging))
+      _.write.mode("overwrite").partitionBy("_split").format(FanOutParquet.name).save(staging))
     val sides = Seq("train", "validation").map { side =>
       val path = s"$outDir/$side"
       fs.delete(new Path(path), true)

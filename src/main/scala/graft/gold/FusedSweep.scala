@@ -133,11 +133,9 @@ object FusedSweep {
   /** The sweep's exchanged-and-sorted input stream: state pseudo-rows
     * first (turn forced to Int.MinValue), then bronze rows in
     * (turn, _k, _seq, ts, role, tool, text) order — the SilverBuilder
-    * winner order, so dedup-by-adjacency keeps the right row. Extracted
-    * so dev probes ([[graft.SweepProbe]]) can time the exchange+sort
-    * component of the identical plan [[gold]] executes.
+    * winner order, so dedup-by-adjacency keeps the right row.
     */
-  private[graft] def sortedInput(
+  private def sortedInput(
       state: DataFrame,
       bronze: DataFrame,
       numParts: Int): DataFrame =

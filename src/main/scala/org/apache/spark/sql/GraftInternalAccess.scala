@@ -51,4 +51,16 @@ object GraftInternalAccess {
     */
   def columnExpr(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
+
+  /** Concurrent task slots of one executor JVM: N for `local[N]` and
+    * `local[N,F]` (SparkContext's own parse of the master, private[spark]),
+    * else executor cores over task cpus.
+    */
+  def taskSlots(sc: org.apache.spark.SparkContext): Int = {
+    val conf = sc.getConf
+    val cores =
+      if (sc.isLocal) org.apache.spark.SparkContext.numDriverCores(sc.master, conf)
+      else conf.getInt("spark.executor.cores", 1)
+    math.max(1, cores / conf.getInt("spark.task.cpus", 1))
+  }
 }

@@ -2,6 +2,8 @@ package graft
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.TestListenerBus
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -9,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.gen.TranscriptGen
 import graft.gold.FeatureWindows
-import graft.meta.Checkpoint
+import graft.meta.{Checkpoint, FanOutParquet}
 import graft.schema.TranscriptSchema
 import graft.silver.SilverBuilder
 
@@ -316,6 +318,51 @@ class BackfillSpec extends AnyFunSuite {
       }
       assertSame(spark.read.parquet(s"$dir/gold"), singleShot)
     } finally spark.conf.set("spark.sql.shuffle.partitions", old)
+  }
+
+  test("a conversation above the fan-out row count: gold == single-shot from sibling files, " +
+      "lineage and lookups agree") {
+    import spark.implicits._
+    // the generator's mega starts at `start`: its ~9 hours of turns fill
+    // one sweep task of slice 0 past FanOutParquet.InlineRows
+    val megaBronze = TranscriptGen.transcripts(spark, nConvs = 20, avgTurns = 12,
+      megaConvs = 1, megaTurns = FanOutParquet.InlineRows + 8000).cache()
+    val dir = Files.createTempDirectory("bf_fanout").toString
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, String, Int)]()
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        stages.add((e.stageInfo.stageId, e.stageInfo.name, e.stageInfo.numTasks))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      Backfill.run(spark, megaBronze, dir, start, sliceSecs, nSlices)
+      TestListenerBus.drain(sc)
+    } finally sc.removeSparkListener(l)
+    assertSame(spark.read.parquet(s"$dir/gold"), FeatureWindows.gold(SilverBuilder.build(megaBronze)))
+    // slice 0's write: its sweep partitions, and more files than that
+    val id = Backfill.sliceId(start)
+    val sweepParts = stages.asScala.toSeq.sortBy(_._1)
+      .collectFirst { case (_, name, tasks) if name.startsWith("save at Backfill.scala") => tasks }.get
+    val files = fs.listStatus(new org.apache.hadoop.fs.Path(s"$dir/gold/slice_id=$id"))
+      .map(_.getPath.getName).filter(_.endsWith(".parquet"))
+    assert(files.length > sweepParts, s"${files.length} files for $sweepParts sweep partitions")
+    assert(files.exists(_.matches(""".*-f\d+\..*""")), files.mkString(", "))
+    // the observed lineage hash == the fallback aggregate over the files
+    val alt = Files.createTempDirectory("bf_fanout_alt").toString
+    Checkpoint.appendLineage(alt, spark.read.parquet(s"$dir/gold").filter(col("slice_id") === id), id, 1L)
+    def hashes(lin: DataFrame) =
+      lin.select("dt", "row_count", "content_hash").collect().map(_.toSeq).toSet
+    val obs = hashes(Checkpoint.readLineage(spark, dir).filter(col("slice_id") === id))
+    assert(obs.nonEmpty && obs == hashes(Checkpoint.readLineage(spark, alt)))
+    // the online store answers the mega's lookup as the gold scan does
+    val h = spark.read.parquet(s"$dir/gold").drop("slice_id")
+    val keys = "conv_000000000" +: h.select("conv_id").distinct().orderBy("conv_id")
+      .as[String].collect().take(6).toSeq
+    val got = graft.gold.AsOfJoin.latestForKeys(h, keys.distinct.toDF("conv_id")).collect()
+    val want = graft.gold.AsOfJoin.latestPerKey(h).filter(col("conv_id").isin(keys: _*)).collect()
+    assert(got.sortBy(_.getAs[String]("conv_id")).toSeq == want.sortBy(_.getAs[String]("conv_id")).toSeq)
+    megaBronze.unpersist()
   }
 
   test("lineage content_hash is comparable across the observe and file-based fallback paths") {
